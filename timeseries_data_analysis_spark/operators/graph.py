@@ -28,32 +28,16 @@ volume decays as components contract.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-# Label-propagation SUB-STEPS (unit: one propagate+jump label update;
-# the pre-r12 "round") the most recent connected-components call took
-# to converge — a probe observable (SCALE §1q measures round counts at
-# the 1000× corpus), not an API: read immediately after the call that
-# set it. ``connected_components_star`` counts star-contraction rounds.
+# Rounds the most recent connected-components call took to converge
+# (one propagate+jump label update per round for
+# ``connected_components``, one star-contraction round for
+# ``connected_components_star``) — a probe observable (SCALE §1q measures
+# round counts at the 1000× corpus), not an API: read immediately after
+# the call that set it.
 LAST_CC_ROUNDS: int = 0
-
-# Sub-steps fused per checkpoint/convergence round in
-# ``connected_components``. Fusing 2 halves the job-barrier count
-# (each eager localCheckpoint and each ``changed`` count is a barrier)
-# at the cost of one guaranteed-wasted sub-step past the fixpoint and
-# 2× per-round join work; labels are monotone non-increasing, so any
-# value yields the identical fixpoint labeling. Default 1: the round-13
-# interleaved quiet-host A/B (min-of-3, same session) measured the
-# round-12 value of 2 SLOWER on every CC consumer — dedup_clusters
-# 5.66 → 4.59 s, cluster_size_powerlaw 6.98 → 6.64 s,
-# emb_neardup_clusters 5.61 → 5.40 s, collapse_near_dups tie — because
-# near-dup graphs converge in 1-4 sub-steps (LAST_CC_ROUNDS measured 4,
-# 1, 6, 3), so the wasted sub-step and doubled join work outweigh the
-# 1-3 barriers saved. Kept as a knob: on a real cluster where each
-# barrier costs scheduler round-trips over thousands of tasks the
-# trade can invert — re-measure there before flipping.
-CC_SUBSTEPS_PER_ROUND: int = 1
 
 
 def _symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -87,12 +71,15 @@ def connected_components(edges: DataFrame, src: str = "id_l",
     ``storage_level`` overrides the per-round checkpoint storage (pass
     ``StorageLevel.MEMORY_AND_DISK`` — serialized + spillable — when the
     edge table is fact-sized; the §1n-b house rule).
-    Raises if ``max_iter`` convergence rounds (each fusing
-    ``CC_SUBSTEPS_PER_ROUND`` propagate+jump label updates — so up to
-    ``max_iter * CC_SUBSTEPS_PER_ROUND`` sub-steps) don't reach the
-    fixpoint — raise the cap or switch to star-contraction.
-    ``LAST_CC_ROUNDS`` reports SUB-STEPS, the pre-r12 unit, so
-    round-count probes stay comparable across rounds.
+    Raises if ``max_iter`` rounds don't reach the fixpoint — raise the
+    cap or switch to star-contraction.
+
+    One Spark job per round: the round's changed-label count is an
+    ``Observation`` on its ``localCheckpoint``, not a second action. Do
+    not probe convergence with a limit-then-count either: Spark names
+    each limit counter from a JVM-global sequence, so that plan
+    regenerates and recompiles its Java on every call and never hits
+    the generated-class cache.
     """
     global LAST_CC_ROUNDS
     sym = _symmetrize(edges, src, dst).localCheckpoint(
@@ -102,12 +89,12 @@ def connected_components(edges: DataFrame, src: str = "id_l",
     labels = (sym.groupBy(F.col("a").alias("v"))
               .agg(F.least(F.min("b"), F.min("a")).alias("label"))
               .localCheckpoint(storageLevel=storage_level))
-    def _half(lbl: DataFrame) -> DataFrame:
-        """One propagate+jump sub-step: label <- min(label, neighbor
+    def _round(lbl: DataFrame) -> DataFrame:
+        """One propagate+jump round: label <- min(label, neighbor
         labels), then the pointer-jumping shortcut label <-
         min(label, label[label]) (one V-row join next to the E-row
         neighbor join; halves the effective diameter, so chains
-        converge in ~log2(D) sub-steps instead of D — measured 5 -> 4
+        converge in ~log2(D) rounds instead of D — measured 5 -> 4
         rounds / 3.3 -> 3.0 s on the sf0.1 near-dup graph). The hop
         join targets lbl itself: every _mid value is a vertex id and
         lbl covers all vertices. Extra columns (_old) pass through."""
@@ -125,27 +112,15 @@ def connected_components(edges: DataFrame, src: str = "id_l",
                             F.least("_mid", F.coalesce("_hop", "_mid")))
                 .drop("_mid", "_hop"))
 
-    nsub = max(1, CC_SUBSTEPS_PER_ROUND)
     for it in range(max_iter):
-        # CC_SUBSTEPS_PER_ROUND sub-steps per checkpoint/convergence
-        # round (round-12 barrier fix, knob + sub-step accounting round
-        # 13): each eager localCheckpoint and each `changed` count is a
-        # full job barrier, and on the small-diameter near-dup graphs
-        # the loop cost is barrier-dominated, not byte-dominated
-        # (522-edge sf0.1 graph: 6 sub-steps = 6 ckpt + 6 count jobs at
-        # 1/round, 3 + 3 at 2/round). Labels are monotone non-increasing
-        # (min ops only), so composite-round equality proves sub-step-1
-        # equality — the detected fixpoint and the final labeling are
-        # identical to the single-step loop's.
-        step = labels.withColumn("_old", F.col("label"))
-        for _ in range(nsub):
-            step = _half(step)
-        step = step.localCheckpoint(storageLevel=storage_level)
-        changed = (step.filter(F.col("label") != F.col("_old"))
-                   .limit(1).count())
-        labels = step.select("v", "label")
-        if changed == 0:
-            LAST_CC_ROUNDS = nsub * (it + 1)
+        obs = Observation()
+        labels = (_round(labels.withColumn("_old", F.col("label")))
+                  .observe(obs, F.count_if(F.col("label") != F.col("_old"))
+                           .alias("changed"))
+                  .select("v", "label")
+                  .localCheckpoint(storageLevel=storage_level))
+        if obs.get["changed"] == 0:
+            LAST_CC_ROUNDS = it + 1
             return labels.select(F.col("v").alias("vertex"),
                                  F.col("label").alias("component"))
     raise RuntimeError(
@@ -216,12 +191,12 @@ def connected_components_star(edges: DataFrame, src: str = "id_l",
         e2 = _small_star(_large_star(e)).localCheckpoint(
             storageLevel=storage_level)
         # short-circuit: on non-final rounds the first direction already
-        # proves inequality — don't pay the second full co-group shuffle
-        changed = e2.exceptAll(e).limit(1).count()
-        if changed == 0:
-            changed = e.exceptAll(e2).limit(1).count()
+        # proves inequality — don't pay the second full co-group shuffle.
+        # isEmpty, not a limit-then-count: its plan hits the class cache
+        # (see connected_components).
+        same = e2.exceptAll(e).isEmpty() and e.exceptAll(e2).isEmpty()
         e = e2
-        if changed == 0:
+        if same:
             LAST_CC_ROUNDS = it + 1
             # fixpoint: every edge is (child, root); roots label themselves
             roots = e.select(F.col("b").alias("vertex"),

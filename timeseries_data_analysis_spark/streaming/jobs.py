@@ -640,6 +640,14 @@ def run_with_foreach_batch(stream_df: DataFrame,
     ``trigger_available_now=True`` drains all pending input then stops
     (used by tests and backfills); pass ``processing_time='60 seconds'``
     for the reference's cadence.
+
+    With neither, the query runs on Spark's default trigger, which starts
+    the next micro-batch as soon as the last ends and, when no input is
+    pending, polls the source every 10 ms. That polling is not free: on
+    an idle 10-file landing directory it measured 0.22-0.35 CPU-seconds
+    per second of wall time (JVM + driver, 4-vCPU VM, local[4]), against
+    0.01-0.02 with ``processing_time='1 second'``. Give a long-running
+    query a processing time unless it must see input within milliseconds.
     """
     writer = stream_df.writeStream.foreachBatch(fn).outputMode("update")
     if checkpoint:

@@ -1,7 +1,7 @@
-"""Dump .explain("formatted") for named queries to plans/r12/<q>_<tag>.txt.
+"""Dump .explain("formatted") for named queries to plans/<round>/<q>_<tag>.txt.
 
-Usage: python tools/capture_plans.py <tag> [sf_dir] q1 q2 ...
-       (tag = before|after; sf_dir defaults to /root/testdata/sf0.1)
+Usage: python tools/capture_plans.py <round>/<tag> [sf_dir] q1 q2 ...
+       (e.g. r14/before, r14/after; sf_dir defaults to the sf0.1 test corpus)
 
 Construction-eager queries (dedup_clusters chain) run their CC loop at
 plan-build time; the captured plan is the final consumer plan either way.
@@ -19,8 +19,11 @@ from timeseries_data_analysis_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    out_dir = os.environ.get("PLANS_DIR", "plans/r12")
+    round_, _, tag = sys.argv[1].rpartition("/")
+    if not round_ or not tag:
+        sys.exit(f"capture_plans: want <round>/<tag> (e.g. r14/after), "
+                 f"got {sys.argv[1]!r}")
+    out_dir = os.path.join("plans", round_)
     if len(sys.argv) > 2 and os.path.isdir(sys.argv[2]):
         sf_dir, names = sys.argv[2], sys.argv[3:]
     else:
