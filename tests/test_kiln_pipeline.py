@@ -231,3 +231,70 @@ def test_pipeline_is_single_pass(spark, tables):
     # repartitions (spine side + sensor side) and the shared window
     # exchange they feed — more would mean a consumer re-shuffled
     assert len(series_exchanges) <= 3, "window exchange not shared"
+
+
+# (kind, tag, long column): how each per-series window feature is named
+# in the matrix — "suffix" → {series}{tag}, "prefix" → {tag}{series}.
+MATRIX_FEATURES = [
+    ("suffix", "", "value"),
+    ("suffix", "_lag_1", "value_lag_1"), ("suffix", "_lag_6", "value_lag_6"),
+    ("suffix", "_lag_24", "value_lag_24"),
+    ("suffix", "_roll_24", "roll_mean_24"),
+    ("suffix", "_roll_std_24", "roll_std_24"),
+    ("suffix", "_roll_72", "roll_mean_72"),
+    ("suffix", "_cooling_flag", "cooling_flag"),
+    ("suffix", "_anomaly", "anomaly_flag"),
+    ("suffix", "_drop_magnitude", "drop_magnitude"),
+    ("suffix", "_zscore_24", "zscore_24"),
+    ("prefix", "diff_1_", "diff_1"),
+    ("prefix", "roc_3_", "pct_change_3"),
+]
+
+
+def _assert_matrix_matches_long(spark, tables, max_features):
+    """Every per-series feature column the matrix keeps equals a pandas
+    pivot of the long window-feature table, NaN for NaN. Returns the
+    matrix and the number of columns compared."""
+    feat = KP.window_features(KP.align_and_fill(
+        KP.build_long_sensor_table(tables)))
+    wide = (feat.toPandas().pivot(index="ts", columns="series")
+            .sort_index())
+    out, _ = KP.run_pipeline(spark, tables, max_features=max_features)
+    got = out.toPandas().set_index("ts").sort_index()
+    assert got.index.equals(wide.index)
+    compared = 0
+    for kind, tag, src in MATRIX_FEATURES:
+        for series in wide[src].columns:
+            name = series + tag if kind == "suffix" else tag + series
+            if name in got.columns:
+                pd.testing.assert_series_equal(
+                    got[name], wide[(src, series)], check_names=False,
+                    check_dtype=False, check_exact=True)
+                compared += 1
+    return out, compared
+
+
+def test_matrix_equals_pandas_pivot_of_long_features(spark):
+    """The wide matrix is a pure re-layout of the long window features,
+    and the plan pivots without Spark's ~900-field PivotFirst aggregate."""
+    tables = {n: spark.createDataFrame(pdf)
+              for n, pdf in FX.all_tables(n_days=14).items()}
+    out, compared = _assert_matrix_matches_long(spark, tables, 500)
+    assert compared >= 300, compared
+    plan = out._jdf.queryExecution().optimizedPlan().toString().lower()
+    assert "pivotfirst" not in plan
+
+
+def test_series_names_needing_sql_escapes(spark):
+    """A source key with a quote, a backslash and a backtick still names
+    its matrix columns and reads its own values."""
+    odd = "P'1\\`b"
+    pdfs = FX.all_tables(n_days=14)
+    shell = pdfs["shell_temperature"]
+    shell["POSITION"] = shell["POSITION"].replace(shell["POSITION"].iloc[0], odd)
+    tables = {n: spark.createDataFrame(pdf) for n, pdf in pdfs.items()}
+    out, compared = _assert_matrix_matches_long(spark, tables, 2000)
+    assert f"shell_{odd}" in out.columns
+    assert f"shell_{odd}_lag_1" in out.columns
+    assert compared == len(MATRIX_FEATURES) * len(
+        KP.source_series_names(tables))

@@ -6,9 +6,9 @@ Reference: ``SimpleKilnDataPreprocessor.process``
 materializing the full frame. Here the whole pipeline is a lazy DataFrame
 lineage: Catalyst fuses the per-stage projections, and the physical plan
 has ~3 structural shuffles total (source hourly aggs, the series-keyed
-spine join + window exchange, the ts-keyed pivot exchange) regardless of
-feature count — ratios and labels join by BROADCAST, and everything
-after the pivot is one fused projection (round 4).
+spine join + window exchange, the ts-keyed exchange of the final pivot)
+regardless of feature count — ratios and labels join by BROADCAST, and
+everything after the pivot is one fused projection.
 
 Architecture (SURVEY.md §1.4 / §4):
 - **Long layout through the window stages.** The reference pivots
@@ -17,7 +17,11 @@ Architecture (SURVEY.md §1.4 / §4):
   ``partitionBy(series).orderBy(ts)`` serves every series — the sort
   parallelizes per-series across the cluster, and adding features adds
   zero shuffles.
-- Wide pivot happens ONCE at the end (ML/serving boundary).
+- The wide pivot happens ONCE at the end (ML/serving boundary), as a
+  narrow per-ts aggregate into a ``series -> features`` map that the
+  final projection indexes. Spark's native ``pivot()`` would build
+  ~900-field aggregates that run outside whole-stage codegen and
+  regenerate their projection code in every task.
 - Event labeling is a broadcast range join (J3), not a per-event loop.
 
 Stages (reference stage numbers from SURVEY.md §3.1):
@@ -38,7 +42,7 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import timeseries as TS
@@ -176,54 +180,6 @@ def window_features(aligned: DataFrame) -> DataFrame:
     )
 
 
-def zone_differentials(feat: DataFrame) -> DataFrame:
-    """Stage 6 (cross-series): adjacent-zone temperature differentials.
-
-    Reference computes ``ZONE_{i+1} − ZONE_i`` on the wide frame
-    (``pre_processing.py:835-980``); long layout uses one lead() over a
-    per-ts window ordered by zone index — no self-join, one shuffle on ts.
-    Emits (ts, series='zone_diff_{i}_{i+1}', value).
-    """
-    zones = feat.filter(F.col("series").startswith("zone_ZONE_")) \
-        .withColumn("_zi", F.regexp_extract("series", r"ZONE_(\d+)", 1).cast("int"))
-    w = Window.partitionBy("ts").orderBy("_zi")
-    nxt_v = F.lead("value", 1).over(w)
-    nxt_i = F.lead("_zi", 1).over(w)
-    return (zones.select(
-        "ts", "_zi", "value",
-        F.when(nxt_i == F.col("_zi") + 1, nxt_v - F.col("value")).alias("dval"))
-        .filter(F.col("dval").isNotNull())
-        .select("ts",
-                F.concat(F.lit("zone_diff_"), F.col("_zi"), F.lit("_"),
-                         F.col("_zi") + 1).alias("series"),
-                F.col("dval").alias("value")))
-
-
-def risk_indicators(feat: DataFrame) -> DataFrame:
-    """Stage 9: per-hour composite indicators over all zone series (A5/P9).
-
-    Row-wise horizontal aggs in the reference (mean/max/count over 500
-    cols); long layout makes them a groupBy(ts) — map-side combined.
-    Column names follow the reference's ``accretion_risk_*`` indicator
-    family (``pre_processing.py:1302-1319``) so the P2 tier matchers
-    (reduce_dimension_priority) rank them as indicators, as the
-    reference's own policy does.
-    """
-    zones = feat.filter(F.col("series").startswith("zone_ZONE_"))
-    return (zones.groupBy("ts").agg(
-        F.sum(F.when(F.col("anomaly_flag") == -1, 1).otherwise(0))
-        .alias("zones_with_drops"),
-        F.sum(F.when(F.col("cooling_flag") == 1, 1).otherwise(0))
-        .alias("accretion_risk_cooling_trends"),
-        F.avg("drop_magnitude").alias("accretion_risk_drop_magnitude"),
-        F.max("drop_magnitude").alias("accretion_risk_drop_magnitude_max"),
-        F.avg("value").alias("accretion_risk_mean_zone_temp"),
-        F.min("value").alias("accretion_risk_min_zone_temp"),
-        (F.sum(F.when(F.col("cooling_flag") == 1, 1).otherwise(0)) >= 3)
-        .cast("int").alias("multi_zone_cooling_alert"),
-    ))
-
-
 def material_ratios(mis: DataFrame) -> DataFrame:
     """Stage 8: all-pairs safe-division ratios over consumption columns
     (reference simple_pre_processing.py:937-969) + derived efficiency."""
@@ -271,6 +227,17 @@ def source_series_names(tables: dict[str, DataFrame]) -> list[str]:
     names += [f"air_{r['k']}_{m}" for r in key_rows if r["src"] == "air"
               for m in ("DAMPER", "VELOCITY", "AIR_FLOW")]
     return sorted(names)
+
+
+def _sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_string(text: str) -> str:
+    """``text`` as a single-quoted SQL string literal (backslash is the
+    escape character in Spark SQL literals)."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def reduce_dimension_priority(columns: list[str],
@@ -452,35 +419,47 @@ def run_pipeline(spark: SparkSession, tables: dict[str, DataFrame],
         ("prefix", "diff_1_", "diff_1"),
         ("prefix", "roc_3_", "pct_change_3"),
     ]
-    # ONE native pivot with 13 aggregate measures: Spark's PivotFirst
-    # matches the series per row in O(1), and multi-agg pivot emits
-    # {series}_{alias} columns directly — no 13x melt blowup (measured
-    # 2x slower) and no 900 conditional aggregates (measured 4x slower).
-    # (ts, series) is unique after alignment, so first() is exact.
-    # The pivot aggregate is the pipeline's CPU peak (~900 PivotFirst
-    # slots per ts group) and its shuffle is only a few MB — AQE's
-    # size-based coalescing serialized it onto ONE task (measured 12.5 s
-    # of the 20 s run). An explicit repartition-by-num on ts pins the
-    # reducer width to the core budget; hashpartitioning(ts) satisfies
-    # both the (ts, series) inner agg and the ts pivot agg, so no
-    # further exchange follows, and the fused wide projection + sink
-    # pipeline in the same 32-way stage.
+    # The pivot is ONE narrow aggregate: each ts group collects its
+    # (series -> struct of the 13 features) entries into a map, and the
+    # fused projection below reads element_at(_m, '<series>').<feature>.
+    # Spark's native pivot() built aggregates and a rename projection
+    # ~900 fields wide; past spark.sql.codegen.maxFields (100) they run
+    # outside whole-stage codegen, and every task regenerated their
+    # projection code. That cost grew with the task count, not the data:
+    # the pivot stage of a 21-day matrix (504 rows) took 1.06 / 2.48 /
+    # 5.56 CPU-s at 1 / 4 / 8 tasks, and 0.57 / 0.68 / 0.94 as this map
+    # aggregate (warm runs, 4-vCPU VM).
+    # Keys are unique by construction: `feat` comes from the spine LEFT
+    # JOIN of per-(ts, series) aggregates, so each (ts, series) occurs
+    # once. A duplicate would make map_from_entries fail loudly (its
+    # default key-dedup policy is EXCEPTION) rather than silently pick
+    # one, as first() did. A (ts, series) with no row reads as null, as
+    # PivotFirst gave. A map lookup scans the keys linearly, so each
+    # read costs O(series count): 69 series here, ~900 reads per row.
+    # element_at, not the `_m['<series>']` subscript: the subscript is an
+    # ExtractValue, and ColumnPruning's nested-field aliasing compares
+    # every pair of the ~900 extractions rooted at `_m` — measured
+    # 350 ms of optimizer time per plan against 12 ms with element_at.
+    # The explicit repartition-by-num on ts keeps the tail's task count
+    # at the core budget whatever AQE and shuffle.partitions say (AQE's
+    # size-based coalescing once serialized the wide pivot onto ONE
+    # task); hashpartitioning(ts) satisfies the ts aggregate, so no
+    # further exchange follows.
     par = spark.sparkContext.defaultParallelism
-    piv = (feat.repartition(par, "ts")
-           .groupBy("ts").pivot("series", series_names)
-           .agg(*[F.first(src).alias(f"__{kind}__{tag}")
-                  for kind, tag, src in feat_cols]))
-    # EVERYTHING downstream of the pivot is pure per-row arithmetic, so
-    # it all lands in ONE fused projection (built below as an expression
-    # map): the ~960 feature renames, the adjacent-zone differentials
-    # (plain column subtraction on the pivoted frame — replacing the
-    # round-1 lead-window + second pivot + join, 3 exchanges), and the
-    # stage-9 composite risk indicators (row-wise HOF arithmetic, same
-    # names + null semantics as the long-form risk_indicators, which
-    # remains for pre-pivot consumers). Fusing matters twice: Catalyst
-    # ANALYSIS of a ~1000-column frame costs ~1 s per select() on the
-    # driver (four chained selects were ~4 s of pure plan time), and one
-    # projection needs no CollapseProject work at optimize time.
+    piv = (feat.repartition(par, "ts").groupBy("ts")
+           .agg(F.map_from_entries(F.collect_list(F.struct(
+               "series", F.struct(*[src for _, _, src in feat_cols]))))
+               .alias("_m")))
+    # EVERYTHING downstream of the map aggregate is pure per-row
+    # arithmetic, so it all lands in ONE fused projection (built below as
+    # an expression map): the ~960 feature reads, the adjacent-zone
+    # differentials (plain column subtraction on the wide row — replacing
+    # the round-1 lead-window + second pivot + join, 3 exchanges), and
+    # the stage-9 composite risk indicators (row-wise HOF arithmetic).
+    # Fusing matters twice: Catalyst ANALYSIS of a ~1000-column frame
+    # costs ~1 s per select() on the driver (four chained selects were
+    # ~4 s of pure plan time), and one projection needs no
+    # CollapseProject work at optimize time.
     # The fused projection is built as SQL EXPRESSION STRINGS, not
     # Column objects (optimization round 12, guide §5 "the driver
     # should do almost no data work"): ~850 renames + the risk/diff
@@ -493,9 +472,10 @@ def run_pipeline(spark: SparkSession, tables: dict[str, DataFrame],
     # accumulator DoubleType exactly like F.lit(0.0)).
     colmap: dict[str, str] = {}
     for s in series_names:
-        for kind, tag, _ in feat_cols:
+        key = _sql_string(s)
+        for kind, tag, src in feat_cols:
             name = s + tag if kind == "suffix" else tag + s
-            colmap[name] = f"`{s}___{kind}__{tag}`"
+            colmap[name] = f"element_at(_m, {key}).{_sql_ident(src)}"
 
     zone_ids = sorted(int(s.rsplit("_", 1)[1]) for s in series_names
                       if s.startswith("zone_ZONE_"))
@@ -557,10 +537,10 @@ def run_pipeline(spark: SparkSession, tables: dict[str, DataFrame],
               .join(F.broadcast(labels), "ts", "left"))
     for c in ratios.columns:
         if c != "day_ts":
-            colmap[c] = f"`{c}`"
+            colmap[c] = _sql_ident(c)
     for c in labels.columns:
         if c != "ts":
-            colmap[c] = f"`{c}`"
+            colmap[c] = _sql_ident(c)
 
     # P1/P2: the reference's tiered priority column cap
     # (pre_processing.py:1564-1739) — see reduce_dimension_priority.
@@ -569,7 +549,7 @@ def run_pipeline(spark: SparkSession, tables: dict[str, DataFrame],
     # single fused projection.
     keep = reduce_dimension_priority(list(colmap), max_features)
     out = joined.selectExpr(
-        "ts", *[f"{colmap[c]} AS `{c}`" for c in keep])
+        "ts", *[f"{colmap[c]} AS {_sql_ident(c)}" for c in keep])
     metrics["pivot_join"] = time.time() - t
     metrics["total_plan"] = time.time() - t0
     if tracker is not None:
