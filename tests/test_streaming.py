@@ -1295,7 +1295,7 @@ def test_als_sink_batch_stream_equivalence_and_replay(spark, sf_dir, tmp_path):
     # the sink's domain: fully-keyed interactions only
     ratings = (inter.groupBy("c", "s")
                .agg(F.count(F.lit(1)).alias("r")))
-    u_b, v_b = ALS.als_rank2_round(ratings, reg=0.1)
+    u_b, v_b = ALS.als_rankk_exact_fit(ratings, k=2, rounds=1, reg=0.1)
 
     def rows(df, key):
         return sorted((r[key], r["v1"] if "v1" in df.columns else r["u1"],

@@ -3,32 +3,34 @@
 The recommender seed SURVEY.md §2.11 maps from the reference's
 single-node model loop (reference: ``models.py`` fits per-target heads
 in-memory): ``q_als_rank1`` in the registry is the scalar power-
-iteration seed; this module is the rank-2 generalization a recommender
-actually runs. The key design point is that for small k the per-key
-normal equations are CLOSED-FORM column arithmetic, so a half-step is
-ONE groupBy over the ratings frame:
+iteration seed; this module is the rank-k generalization a recommender
+actually runs, ONE solve lane for every rank (``als_rank2`` fits k=2,
+``als_rankk_backtest`` k=4, the streaming ALS readout k=2). For small
+k a half-step is ONE groupBy over the ratings frame:
 
-    per user u:  A = Σ_s v_s v_sᵀ + λI   (k×k, 3 distinct entries at k=2)
+    per user u:  A = Σ_s v_s v_sᵀ + λI   (k×k, k(k+1)/2 distinct sums)
                  b = Σ_s r_us v_s
-                 u  = A⁻¹ b              (2×2 inverse, codegen-side)
+                 u  = A⁻¹ b              (Cramer's rule, codegen-side)
 
-— map-side combinable, shuffle payload 5 doubles per user, never an
-|ratings|-row driver structure. The item half-step is symmetric. No
-``applyInPandas``: at k=2 the Thomas-style bounded solve the cubic
-spline needs is unnecessary — the inverse is a literal expression.
+— map-side combinable, shuffle payload k(k+3)/2 doubles per user,
+never an |ratings|-row driver structure. The item half-step is
+symmetric. No Python stage: the solve is one generated SQL expression
+per component (:func:`cramer_solve_exprs`) that the DuckDB oracles
+consume verbatim; at k=2 it is the textbook 2×2 closed form.
 
 Cross-engine determinism (the ``ml/logit.QUANT`` contract): the
-symmetry-breaking second factor component is initialized from an
-md5 fraction quantized to 9 dp, and every half-step's solved factors
+symmetry-breaking factor components are initialized from md5
+fractions quantized to 9 dp, and every half-step's solved factors
 are rounded to 9 dp (+1e-12 nudge) before the next step consumes
-them, so a SQL oracle replays one full alternation CTE-for-CTE with
-only summation-order ulps in flight (absorbed by each rounding).
+them, so a SQL oracle replays a whole fit CTE-for-CTE with only
+summation-order ulps in flight (absorbed by each rounding).
 
 Scale shape: cost is dominated by building the ratings frame (a
 distinct-agg ≤ fact rows — the §1l-measured als_rank1 budget, 29 s at
 the 100× corpus); each half-step shuffles |users| or |items| rows of
-k(k+3)/2 doubles. Regularization λ keeps every 2×2 system invertible
-(det ≥ λ² > 0), which is what makes the closed form total.
+k(k+3)/2 doubles. Regularization λ > 0 keeps every k×k system
+positive definite (at k=2, det ≥ λ² > 0), which is what makes the
+expression solve total.
 """
 
 from __future__ import annotations
@@ -54,190 +56,22 @@ def md5_unit_fraction(col, salt: str):
     return h / F.lit(float(16 ** 15))
 
 
-def init_item_factors(ratings: DataFrame, item_col: str = "s",
-                      salt: str = "als2|") -> DataFrame:
-    """Deterministic rank-2 item-factor init: v1 = 1.0 (the mean
+def init_item_factors(ratings: DataFrame, k: int,
+                      item_col: str = "s") -> DataFrame:
+    """Deterministic rank-k item-factor init: v1 = 1.0 (the mean
     direction — rank-1's init, so the first component starts on the
-    dominant-singular-vector path), v2 = md5-fraction − 0.5 quantized
-    to 9 dp (the symmetry breaker; a constant second component would
-    make A singular up to λ and learn nothing)."""
-    return (ratings.select(item_col).distinct()
-            .select(item_col,
-                    F.lit(1.0).alias("v1"),
-                    _q(md5_unit_fraction(F.col(item_col), salt)
-                       - F.lit(0.5)).alias("v2")))
-
-
-def _solve_half_step(joined: DataFrame, key: str, r_col: str,
-                     f1: str, f2: str, reg: float,
-                     out1: str, out2: str) -> DataFrame:
-    """One ALS half-step: per `key`, accumulate the 2×2 normal
-    equations over the opposite side's factors (f1, f2) and solve in
-    closed form. Returns (key, out1, out2, n_obs) with 9-dp factors."""
-    g = (joined.groupBy(key)
-         .agg(F.sum(F.col(f1) * F.col(f1)).alias("_a11"),
-              F.sum(F.col(f1) * F.col(f2)).alias("_a12"),
-              F.sum(F.col(f2) * F.col(f2)).alias("_a22"),
-              F.sum(F.col(r_col) * F.col(f1)).alias("_b1"),
-              F.sum(F.col(r_col) * F.col(f2)).alias("_b2"),
-              F.count(F.lit(1)).alias("n_obs")))
-    a11 = F.col("_a11") + F.lit(reg)
-    a22 = F.col("_a22") + F.lit(reg)
-    a12 = F.col("_a12")
-    det = a11 * a22 - a12 * a12
-    return g.select(
-        key,
-        _q((a22 * F.col("_b1") - a12 * F.col("_b2")) / det).alias(out1),
-        _q((a11 * F.col("_b2") - a12 * F.col("_b1")) / det).alias(out2),
-        "n_obs")
-
-
-def als_rank2_round(ratings: DataFrame, user_col: str = "c",
-                    item_col: str = "s", rating_col: str = "r",
-                    reg: float = 0.1,
-                    init_v: DataFrame | None = None
-                    ) -> tuple[DataFrame, DataFrame]:
-    """ONE full rank-2 ALS alternation (user half-step from the item
-    init, then item half-step from the solved user factors). Returns
-    ``(user_factors, item_factors)`` — ``(c, u1, u2, n_obs)`` and
-    ``(s, v1, v2, n_obs)``, all factors 9-dp quantized. ``init_v``
-    defaults to the deterministic :func:`init_item_factors`; pass a
-    previous round's item factors (columns ``item_col, v1, v2``) to
-    continue the alternation — each round is two groupBys, and the
-    round count is a fixed unrollable budget like every iterative op
-    here."""
-    v0 = (init_item_factors(ratings, item_col) if init_v is None
-          else init_v.select(item_col, "v1", "v2"))
-    # Factor frames are DIM-sized (|users|/|items| rows × k+1 cols) —
-    # broadcast them (guide §3.1) so the fact-sized ratings side is
-    # never shuffled/sorted per half-step: a checkpointed factor frame
-    # reads as a stats-less LogicalRDD, so neither the static planner
-    # nor AQE (whose runtime rewrite needs a materialized SHUFFLE
-    # stage on the build side) ever picks the broadcast on its own.
-    # Measured round 13: rank-4 2-round fit 2.45 -> 2.0 s at sf0.1.
-    # Scale boundary: the hint holds while the factor frame fits the
-    # executors (~100M keys × (k+1)·8 B ≈ 4 GB at the broadcast cap);
-    # past that drop the hint (plain shuffle join) or bucket both
-    # sides on the key.
-    rv = ratings.join(F.broadcast(v0), item_col)
-    # localCheckpoint after each half-step (the HITS/pagerank lineage
-    # discipline): the factor frames are dim-sized (|users|/|items| ×
-    # 4 columns), and WITHOUT the cut every consumer of v — the next
-    # alternation, the residual diagnostics — re-executes the whole
-    # alternation's fact-sized joins (measured at the 100× corpus:
-    # the residual subtree re-ran the full chain)
-    u = _solve_half_step(rv, user_col, rating_col, "v1", "v2", reg,
-                         "u1", "u2").localCheckpoint()
-    ru = ratings.join(F.broadcast(u.select(user_col, "u1", "u2")),
-                      user_col)
-    v = _solve_half_step(ru, item_col, rating_col, "u1", "u2", reg,
-                         "v1", "v2").localCheckpoint()
-    return u, v
-
-
-def init_item_factors_k(ratings: DataFrame, k: int,
-                        item_col: str = "s") -> DataFrame:
-    """Deterministic rank-k item init generalizing
-    :func:`init_item_factors`: component 1 = 1.0 (the mean
-    direction), components j ≥ 2 = md5-fraction − 0.5 with a
-    per-component salt (independent symmetry breakers)."""
+    dominant-singular-vector path), v2..vk = md5-fraction − 0.5
+    quantized to 9 dp, one salt per component (independent symmetry
+    breakers; a constant component would make A singular up to λ and
+    learn nothing)."""
     cols = [F.lit(1.0).alias("v1")]
     for j in range(2, k + 1):
-        cols.append(_q(md5_unit_fraction(F.col(item_col), f"als{k}|{j}|")
+        # k=2 keeps the salt "als2|": the hand-written als_rank2 DuckDB
+        # oracle hashes md5('als2|' || s) for its v2
+        salt = "als2|" if k == 2 else f"als{k}|{j}|"
+        cols.append(_q(md5_unit_fraction(F.col(item_col), salt)
                        - F.lit(0.5)).alias(f"v{j}"))
     return ratings.select(item_col).distinct().select(item_col, *cols)
-
-
-def _solve_half_step_k(joined: DataFrame, key_col: str, rating_col: str,
-                       fcols: list[str], reg: float,
-                       out_prefix: str) -> DataFrame:
-    """Rank-k ALS half-step, generalizing the closed-form k=2 fast
-    lane (:func:`_solve_half_step`) the same way it scales: the
-    k(k+3)/2 normal-equation sums accumulate in ONE map-side-
-    combinable ``groupBy().agg`` — the shuffle carries k²+k doubles
-    per KEY, never the ratings — and the k×k solves then run as a
-    BATCHED ``np.linalg.solve`` over the dim-sized aggregate frame
-    via ``mapInPandas`` (one stacked (rows, k, k) solve per Arrow
-    batch; no per-key Python group, no fact rows through Python, and
-    a hub key costs the same k²+k doubles as any other — skew-proof
-    by construction). Factors are 9-dp quantized exactly like the
-    closed form, so at k=2 the two paths agree to the quantization
-    grid (test-pinned)."""
-    import numpy as np
-    import pandas as pd
-
-    k = len(fcols)
-    aggs = [F.sum(F.col(fcols[i]) * F.col(fcols[j]))
-            .alias(f"_a{i}_{j}")
-            for i in range(k) for j in range(i, k)]
-    aggs += [F.sum(F.col(rating_col) * F.col(fcols[i])).alias(f"_b{i}")
-             for i in range(k)]
-    aggs.append(F.count(F.lit(1)).alias("n_obs"))
-    g = joined.groupBy(key_col).agg(*aggs)
-
-    key_type = dict(joined.dtypes)[key_col]
-    out_cols = [f"{out_prefix}{i + 1}" for i in range(k)]
-    schema = (f"{key_col} {key_type}, "
-              + ", ".join(f"{c} double" for c in out_cols)
-              + ", n_obs long")
-
-    def solve_batches(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            a = np.zeros((n, k, k))
-            for i in range(k):
-                for j in range(i, k):
-                    col = pdf[f"_a{i}_{j}"].to_numpy(dtype=float)
-                    a[:, i, j] = col
-                    a[:, j, i] = col
-            a += reg * np.eye(k)
-            b = np.stack([pdf[f"_b{i}"].to_numpy(dtype=float)
-                          for i in range(k)], axis=1)
-            # HALF_UP (away-from-zero) decimal rounding — the numpy
-            # twin of `_q` (F.round's BigDecimal ROUND_HALF_UP), so the
-            # rank-k lane shares the rank-2 lane's exact rounding law
-            # instead of np.round's round-half-to-even.
-            x = np.linalg.solve(a, b) + EPS
-            scale = 10.0 ** QUANT
-            x = np.sign(x) * np.floor(np.abs(x) * scale + 0.5) / scale
-            out = pd.DataFrame({key_col: pdf[key_col]})
-            for i, c in enumerate(out_cols):
-                out[c] = x[:, i]
-            out["n_obs"] = pdf["n_obs"]
-            yield out
-
-    return g.mapInPandas(solve_batches, schema)
-
-
-def als_rankk_round(ratings: DataFrame, k: int = 4,
-                    user_col: str = "c", item_col: str = "s",
-                    rating_col: str = "r", reg: float = 0.1,
-                    init_v: DataFrame | None = None
-                    ) -> tuple[DataFrame, DataFrame]:
-    """ONE full rank-k ALS alternation — the general form of
-    :func:`als_rank2_round`: same deterministic init family, same
-    9-dp quantization contract, same map-side-combinable
-    normal-equation aggregation; only the SOLVE differs (batched
-    numpy over the dim-sized aggregate frame instead of closed-form
-    column math — see :func:`_solve_half_step_k`). Use the rank-2
-    fast lane when k=2 and the model fits it; this path is for the
-    recommender that needs more capacity. Returns
-    ``(user_factors, item_factors)`` with columns u1..uk / v1..vk."""
-    vcols = [f"v{j}" for j in range(1, k + 1)]
-    ucols = [f"u{j}" for j in range(1, k + 1)]
-    v0 = (init_item_factors_k(ratings, k, item_col) if init_v is None
-          else init_v.select(item_col, *vcols))
-    # broadcast the dim-sized factor side — the als_rank2_round
-    # rationale and scale boundary
-    rv = ratings.join(F.broadcast(v0), item_col)
-    u = _solve_half_step_k(rv, user_col, rating_col, vcols, reg,
-                           "u").localCheckpoint()
-    ru = ratings.join(F.broadcast(u.select(user_col, *ucols)), user_col)
-    v = _solve_half_step_k(ru, item_col, rating_col, ucols, reg,
-                           "v").localCheckpoint()
-    return u, v
 
 
 def _perm_sign(sigma: tuple[int, ...]) -> int:
@@ -255,17 +89,27 @@ def cramer_solve_exprs(k: int, reg: float) -> list[str]:
     BOTH the Spark side (``F.expr``) and the DuckDB oracle, so the two
     engines evaluate the identical expression tree and the 9-dp
     quantization has to absorb only the groupBy summation-order ulps
-    (the same budget the closed-form rank-2 lane carries). Terms are
-    emitted in deterministic ``itertools.permutations`` order.
+    (at k=2 the expression is the textbook 2×2 closed form that the
+    hand-written ``als_rank2`` oracle spells out). Terms are emitted in
+    deterministic ``itertools.permutations`` order.
 
-    The k! determinant growth caps this lane at small k (24 products
-    per determinant at k=4); :func:`als_rankk_round`'s batched-numpy
-    solve is the general-k path — this exact lane exists so a
-    multi-alternation fit can be replayed CTE-for-CTE by a SQL oracle
-    (the ``als_rankk_backtest`` registry row). λ = reg > 0 keeps A+λI
+    The k!·k determinant growth caps the lane at k ≤ 5 (24 products
+    per determinant at k=4, 120 at k=5); a larger k raises
+    ``ValueError`` before any Spark job runs. It exists so every fit
+    can be replayed CTE-for-CTE by a SQL oracle (the ``als_rank2`` and
+    ``als_rankk_backtest`` registry rows). λ = reg > 0 keeps A+λI
     positive definite, so the shared determinant is never zero and
     no pivoting question arises."""
     from itertools import permutations
+
+    if not 1 <= k <= 5:
+        raise ValueError(
+            f"cramer_solve_exprs: rank k={k} is outside 1..5. "
+            "The Leibniz expansion grows as k!·k: on a 40×24 matrix "
+            "(4-vCPU VM) one alternation took 2.6 s at k=4 (9 k chars "
+            "of SQL), 7.2 s at k=5 (64 k chars) and 92 s at k=6 "
+            "(514 k chars), and at k=7 Spark's SQL parser raised "
+            "ParseException on 4.6 M chars")
 
     def m(i: int, j: int) -> str:
         lo, hi = min(i, j), max(i, j)
@@ -295,10 +139,10 @@ def als_exact_half_step(joined: DataFrame, key_col: str,
                         out_prefix: str) -> DataFrame:
     """Rank-k half-step with the :func:`cramer_solve_exprs` exact
     solve: the k(k+3)/2 normal-equation sums accumulate in one
-    map-side-combinable groupBy (k²+k doubles of shuffle payload per
-    key — identical to :func:`_solve_half_step_k`), then the solve is
-    literal column arithmetic inside whole-stage codegen. No Python
-    anywhere; oracle-replayable by construction."""
+    map-side-combinable groupBy (k(k+3)/2 doubles of shuffle payload
+    per key), then the solve is literal column arithmetic inside
+    whole-stage codegen. No Python anywhere; oracle-replayable by
+    construction."""
     k = len(fcols)
     aggs = [F.sum(F.col(fcols[i]) * F.col(fcols[j])).alias(f"a{i}{j}")
             for i in range(k) for j in range(i, k)]
@@ -318,21 +162,38 @@ def als_rankk_exact_fit(ratings: DataFrame, k: int = 4,
                         item_col: str = "s", rating_col: str = "r",
                         reg: float = 0.1
                         ) -> tuple[DataFrame, DataFrame]:
-    """``rounds`` full rank-k alternations with the exact Cramer
-    half-step — the multi-round fit behind ``als_rankk_backtest``.
-    Same deterministic init family and 9-dp between-step quantization
-    as every other lane; each half-step localCheckpoints (the
-    measured als_rank2 lineage fix — without the cut every consumer
-    re-executes the fact-sized joins of all previous half-steps, and
-    a 2-round fit would re-run them 4×)."""
+    """``rounds`` full rank-k alternations (user half-step from the
+    item factors, then item half-step from the solved user factors),
+    starting from the deterministic :func:`init_item_factors`, with the
+    exact Cramer half-step — the one ALS fit (``als_rank2`` runs k=2,
+    rounds=1; ``als_rankk_backtest`` k=4, rounds=2). Returns
+    ``(user_factors, item_factors)``: ``(user_col, u1..uk, n_obs)`` and
+    ``(item_col, v1..vk, n_obs)``, all factors 9-dp quantized. The
+    round count is a fixed unrollable budget like every iterative op
+    here."""
     vcols = [f"v{j}" for j in range(1, k + 1)]
     ucols = [f"u{j}" for j in range(1, k + 1)]
-    v = init_item_factors_k(ratings, k, item_col)
+    v = init_item_factors(ratings, k, item_col)
     u = None
     stale: list[DataFrame] = []
     for _ in range(rounds):
-        # broadcast the dim-sized factor side — the als_rank2_round
-        # rationale and scale boundary
+        # Factor frames are DIM-sized (|users|/|items| rows × k+1 cols) —
+        # broadcast them (guide §3.1) so the fact-sized ratings side is
+        # never shuffled/sorted per half-step: a checkpointed factor frame
+        # reads as a stats-less LogicalRDD, so neither the static planner
+        # nor AQE (whose runtime rewrite needs a materialized SHUFFLE
+        # stage on the build side) ever picks the broadcast on its own.
+        # Measured round 13: rank-4 2-round fit 2.45 -> 2.0 s at sf0.1.
+        # Scale boundary: the hint holds while the factor frame fits the
+        # executors (~100M keys × (k+1)·8 B ≈ 4 GB at the broadcast cap);
+        # past that drop the hint (plain shuffle join) or bucket both
+        # sides on the key.
+        # localCheckpoint after each half-step (the HITS/pagerank lineage
+        # discipline): WITHOUT the cut every consumer of the factors —
+        # the next half-step, the residual diagnostics — re-executes all
+        # previous half-steps' fact-sized joins (measured at the 100×
+        # corpus: the residual subtree re-ran the full chain; a 2-round
+        # fit would re-run them 4×)
         rv = ratings.join(F.broadcast(v.select(item_col, *vcols)),
                           item_col)
         u_next = als_exact_half_step(rv, user_col, rating_col, vcols,

@@ -2017,11 +2017,11 @@ def als_sink(interaction_stream: DataFrame, state_path: str,
     sufficient statistic, so each micro-batch folds its pair counts
     into a persisted ratings table (the `nb_sink`/`pca_sink` pattern)
     and the factorization derives AT READOUT (`als_state_model` →
-    `ml/als.als_rank2_round`). DOMAIN CONTRACT: rows with a NULL user
-    or item key are dropped at ingest (they identify no matrix cell);
-    batch/stream equivalence is an identity over the keyed rows:
-    integer counts in, identical 9-dp-quantized factors out —
-    test-pinned including NULL-bearing batches. State is |observed
+    `ml/als.als_rankk_exact_fit` at k=2). DOMAIN CONTRACT: rows with a
+    NULL user or item key are dropped at ingest (they identify no
+    matrix cell); batch/stream equivalence is an identity over the
+    keyed rows: integer counts in, identical 9-dp-quantized factors
+    out — test-pinned including NULL-bearing batches. State is |observed
     pairs| rows regardless of how many interactions streamed.
 
     Replay safety is single-phase like :func:`hll_sink`: each batch
@@ -2063,9 +2063,10 @@ def als_state_model(spark: SparkSession, state_path: str,
                     user_col: str = "c", item_col: str = "s",
                     reg: float = 0.1):
     """Latest committed rank-2 factors from :func:`als_sink` state:
-    ``(user_factors, item_factors)`` via the same `als_rank2_round`
-    arithmetic the batch query runs — a batch fit over the union of
-    all streamed interactions and this read see identical factors."""
+    ``(user_factors, item_factors)`` via the same one-round k=2
+    `als_rankk_exact_fit` the batch `als_rank2` query runs — a batch
+    fit over the union of all streamed interactions and this read see
+    identical factors."""
     from ..ml import als as ALS
 
     store = spark.read.parquet(state_path)
@@ -2073,6 +2074,6 @@ def als_state_model(spark: SparkSession, state_path: str,
               .collect()[0]["b"])
     ratings = (store.where(F.col("state_batch") == latest)
                .select(user_col, item_col, F.col("n").alias("r")))
-    return ALS.als_rank2_round(ratings, user_col=user_col,
-                               item_col=item_col, rating_col="r",
-                               reg=reg)
+    return ALS.als_rankk_exact_fit(ratings, k=2, rounds=1,
+                                   user_col=user_col, item_col=item_col,
+                                   rating_col="r", reg=reg)
