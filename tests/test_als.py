@@ -151,6 +151,46 @@ def test_rank4_half_step_matches_numpy(spark):
     _assert_fit_matches_numpy(_ratings(spark), 4)
 
 
+def _numpy_grid_solve(ratings, other, side, k):
+    """Batched numpy solve of one half-step's regularized normal
+    equations, rounded onto the fit's 9-dp HALF_UP grid (`_q`: +EPS
+    nudge, then away-from-zero decimal rounding — not np.round's
+    round-half-to-even)."""
+    keys = sorted({pair[side] for pair in ratings})
+    a = np.zeros((len(keys), k, k))
+    b = np.zeros((len(keys), k))
+    for pair, val in ratings.items():
+        i = keys.index(pair[side])
+        ff = np.array(other[pair[1 - side]])
+        a[i] += np.outer(ff, ff)
+        b[i] += val * ff
+    a += REG * np.eye(k)
+    x = np.linalg.solve(a, b[..., None])[..., 0] + ALS.EPS
+    scale = 10.0 ** ALS.QUANT
+    x = np.sign(x) * np.floor(np.abs(x) * scale + 0.5) / scale
+    return dict(zip(keys, x.tolist()))
+
+
+def test_exact_cramer_lane_matches_numpy_lane_at_k4(spark):
+    """The Cramer-expression half-steps (`als_exact_half_step`, the
+    oracle-replayable lane behind every ALS fit) and a batched numpy
+    solve of the same regularized normal equations land on the same
+    9-dp grid at k=4 — one shared HALF_UP rounding law, so the two
+    differ by at most a grid step's worth of summation-order ulps."""
+    r = _ratings(spark).localCheckpoint()
+    ue, ve = ALS.als_rankk_exact_fit(r, k=4, rounds=1, reg=REG)
+    ratings = {(row["c"], row["s"]): row["r"] for row in r.collect()}
+    got_u = _factors(ue, "c", "u", 4)
+    got_v = _factors(ve, "s", "v", 4)
+    v0 = _factors(ALS.init_item_factors(r, 4), "s", "v", 4)
+    for got, other, side in ((got_u, v0, 0), (got_v, got_u, 1)):
+        exp = _numpy_grid_solve(ratings, other, side, 4)
+        assert got.keys() == exp.keys()
+        for kk in got:
+            for j in range(4):
+                assert abs(got[kk][j] - exp[kk][j]) <= 2e-9, (side, kk, j)
+
+
 def test_rank4_objective_monotone_across_rounds(spark):
     """Block coordinate descent at k=4: the regularized objective is
     non-increasing across alternations (same invariant as rank-2)."""
