@@ -3,6 +3,8 @@ portable-hash building blocks."""
 
 from __future__ import annotations
 
+import random
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -400,6 +402,133 @@ def test_simhash_wide_pairs_matches_brute_force(spark):
         DD.simhash_wide_pairs(df, half_bits=48, bands=3)  # uneven split
     with pytest.raises(ValueError):
         DD.simhash_wide_fingerprints(df, half_bits=61)  # int64 headroom
+
+
+def test_simhash_fingerprints_reject_bits_past_base_hash(spark):
+    """A fingerprint is at most 4 * hex_digits bits wide: with the
+    default 8 hex digits, bits 32..63 of a 64-bit fingerprint are 0 in
+    every document, so two of four bands would put the whole corpus in
+    one bucket and the band join would silently turn all-pairs."""
+    df = docs_df(spark, ["a b c"])
+    with pytest.raises(ValueError, match="4 \\* hex_digits"):
+        DD.simhash_fingerprints(df, bits=64)
+    with pytest.raises(ValueError, match="4 \\* hex_digits"):
+        DD.simhash_hamming_pairs(df, bits=64, bands=4, max_hamming=3)
+    with pytest.raises(ValueError, match="hex_digits <= 15"):
+        DD.simhash_fingerprints(df, bits=60, hex_digits=16)
+    with pytest.raises(ValueError):
+        DD.simhash_fingerprints(df, bits=0)
+    DD.simhash_fingerprints(df, bits=48, hex_digits=12)  # in contract
+
+
+def _random_fps(seed, n_base=40):
+    """Signed 64-bit fingerprints (negative ones included) with planted
+    near-duplicates at Hamming 0-4, flips spread over every band and the
+    sign bit."""
+    rng = random.Random(seed)
+
+    def signed(u):
+        return u - (1 << 64) if u >= 1 << 63 else u
+
+    fps = [rng.getrandbits(64) for _ in range(n_base)]
+    for i in range(0, n_base, 3):
+        for k in range(5):
+            if k and i % 2 == 0:       # flip the sign bit plus k-1 others
+                bits = rng.sample(range(63), k - 1) + [63]
+            else:
+                bits = rng.sample(range(64), k)
+            v = fps[i]
+            for b in bits:
+                v ^= 1 << b
+            fps.append(v)
+    return [signed(u) for u in fps]
+
+
+def _ham(a, b):
+    return bin((a ^ b) & ((1 << 64) - 1)).count("1")
+
+
+def test_hamming_pairs_matches_brute_force_on_signed_64bit(spark):
+    fps = _random_fps(7)
+    assert any(v < 0 for v in fps)
+    df = spark.createDataFrame(list(enumerate(fps)), "id long, fp long")
+    got = {(r["id_l"], r["id_r"]): r["hamming"] for r in
+           DD.hamming_pairs(df, "id", "fp", bits=64, bands=4,
+                            max_hamming=3).collect()}
+    expect = {(i, j): _ham(fps[i], fps[j])
+              for i in range(len(fps)) for j in range(i + 1, len(fps))
+              if _ham(fps[i], fps[j]) <= 3}
+    assert got == expect
+    assert {0, 1, 2, 3} <= set(expect.values())
+
+
+def test_simhash_cross_matches_matches_brute_force_on_signed_64bit(spark):
+    fps = _random_fps(11)
+    probe_ids = set(range(0, len(fps), 2))
+    schema = "_id long, _fp long"
+    probe = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(fps) if i in probe_ids], schema)
+    index = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(fps) if i not in probe_ids], schema)
+    got = {(r["probe_id"], r["index_id"]): r["hamming"] for r in
+           DD.simhash_cross_matches(probe, index, bits=64, bands=4,
+                                    max_hamming=3).collect()}
+    expect = {(i, j): _ham(fps[i], fps[j])
+              for i in probe_ids for j in range(len(fps))
+              if j not in probe_ids and _ham(fps[i], fps[j]) <= 3}
+    assert got == expect
+    assert expect
+    with pytest.raises(ValueError, match="banding finds all pairs"):
+        DD.simhash_cross_matches(probe, index, bits=64, bands=4,
+                                 max_hamming=4)
+
+
+def _regexp_filters(df):
+    """Conditions of optimized-plan Filters that contain regexp_replace:
+    the tokens chain pushed into an interpreted filter (SCALE §1t)."""
+    found = []
+
+    def walk(node):
+        if (node.nodeName() == "Filter"
+                and "regexp_replace" in node.condition().toString()):
+            found.append(node.condition().toString())
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().optimizedPlan())
+    return found
+
+
+SHINGLE_EXPLODERS = {
+    "exploded_shingle_hashes": lambda d, p: DD.exploded_shingle_hashes(d),
+    "ngram_jaccard_verify": lambda d, p: DD.ngram_jaccard_verify(p, d),
+    "ngram_jaccard_all_pairs": lambda d, p: DD.ngram_jaccard_all_pairs(d),
+    "containment_pairs": lambda d, p: DD.containment_pairs(d),
+    "containment_pairs_max_posting":
+        lambda d, p: DD.containment_pairs(d, max_posting=2),
+    "simhash_wide_fingerprints":
+        lambda d, p: DD.simhash_wide_fingerprints(d),
+    "duplicate_spans": lambda d, p: DD.duplicate_spans(d, n=3),
+}
+
+
+@pytest.fixture(scope="module")
+def parquet_docs(spark, tmp_path_factory):
+    # a file scan, not a local relation: the optimizer folds projections
+    # and filters over local data, which would hide the pushed filter
+    path = str(tmp_path_factory.mktemp("plan_guard") / "docs")
+    docs_df(spark, ["the quick brown fox jumps", "the quick brown cat",
+                    "", None]).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+@pytest.mark.parametrize("name", sorted(SHINGLE_EXPLODERS))
+def test_shingle_explode_plans_have_no_pushed_tokens_filter(
+        spark, parquet_docs, name):
+    pairs = spark.createDataFrame([(0, 1)], "id_l long, id_r long")
+    df = SHINGLE_EXPLODERS[name](parquet_docs, pairs)
+    assert _regexp_filters(df) == []
 
 
 def test_connected_components_known_graph(spark):
@@ -992,30 +1121,6 @@ def test_degrees_dedupes_banded_pairs(spark):
         "id_l long, id_r long")
     got = {r["vertex"]: r["degree"] for r in GR.degrees(edges).collect()}
     assert got == {1: 1, 2: 2, 3: 1}
-
-
-def test_simhash_dedup_clusters_matches_doc_level(spark):
-    """`simhash_dedup_clusters` (fingerprint-contraction path) must give
-    the same clusters as running `graph.dedup_clusters` over
-    `simhash_hamming_pairs` output — the docstring's equivalence claim.
-    Regression: the function previously referenced an undefined
-    `hex_digits` and raised NameError on ANY call."""
-    from timeseries_data_analysis_spark.operators import graph as GR
-
-    texts = (["alpha beta gamma delta epsilon zeta"] * 3          # exact dups
-             + ["alpha beta gamma delta epsilon eta"]             # near dup
-             + ["totally different words entirely here now",
-                "yet another unrelated document body text"])
-    df = docs_df(spark, texts)
-    got = {(r["cluster_id"], r["doc_id"], r["cluster_size"])
-           for r in DD.simhash_dedup_clusters(
-               df, bands=4, max_hamming=3, hex_digits=8).collect()}
-    pairs = DD.simhash_hamming_pairs(df, bands=4, max_hamming=3)
-    want = {(r["cluster_id"], r["doc_id"], r["cluster_size"])
-            for r in GR.dedup_clusters(pairs).collect()}
-    assert got == want
-    # the three exact dups + the near dup form one cluster rooted at 0
-    assert {(0, i, 4) for i in range(4)} <= got
 
 
 def test_pagerank_empty_graph_returns_empty(spark):

@@ -120,6 +120,11 @@ TEXT_QUERIES = [
     # frequency algebra; the empty/whitespace-only docs exercise the
     # zero-token-source vanishing contract, CJK/emoji the tokenizer
     "unseen_vocab",
+    # the remaining consumers of the dedup shingle front end and band
+    # join: containment (uncapped and df-capped), verified-pair
+    # transitivity, LSH recall / S-curve, cluster-size power law
+    "containment_dedup", "containment_capped", "dup_transitivity",
+    "lsh_recall", "lsh_s_curve", "cluster_size_powerlaw",
 ]
 
 

@@ -17,6 +17,14 @@ Scale design:
   all-pairs O(n²) into a groupBy on (band, band-hash) buckets followed by
   within-bucket pair generation; candidate pairs then verify with exact
   Jaccard. Skewed buckets (boilerplate docs) are capped.
+- Shingle rows: every operator that explodes shingles gets its rows from
+  ``_shingle_rows`` (outer explode, see there). ``ngram_jaccard`` and
+  ``minhash_signatures`` keep per-document arrays (no explode, so no
+  Generate filter; the signature array form measured ~2× faster), and
+  ``ngram_contamination`` keeps its distinct-over-hashes explode, which
+  its oracle mirrors.
+- Hamming pairs: ``hamming_pairs`` is the one pigeonhole band join, for
+  every SimHash width and any precomputed fingerprint.
 """
 
 from __future__ import annotations
@@ -171,40 +179,62 @@ def minhash_signature(col: Column | str, n: int = 3,
     return minhash_from_hashes(hashed_shingles(col, n), num_hashes)
 
 
-def exploded_shingle_hashes(docs: DataFrame, text_col: str = "text",
-                            id_col: str = "doc_id", n: int = 3,
-                            distinct: bool = False,
-                            hex_digits: int = 8) -> DataFrame:
-    """(_id, _h) rows: one portable 32-bit shingle hash per row.
-
-    The fast path for signature pipelines: md5 runs as a TOP-LEVEL column
-    expression over exploded rows — inside whole-stage codegen — instead
-    of inside a higher-order-function lambda, which Spark evaluates
-    interpreted per element (measured ~10× slower for signature-sized
-    shingle sets). Downstream signatures become plain groupBy aggregates,
-    so map-side combine shrinks the shuffle back to one row per document.
-
-    The explode is ``explode_outer`` and the repartition sits AFTER
-    the ``tokens`` projection (SCALE §1t): ``InferFiltersFromGenerate``
-    + predicate pushdown otherwise reconstruct the full
-    tokens+shingles chain in an INTERPRETED filter under a non-outer
-    explode, pushed past every projection and the exchange (~6 ms/doc
-    of regex spin at corpus scale, thread-dump-confirmed). The shingle
-    array is never empty by construction, so the outer form is
-    semantically identical — callers see no null ``_h`` rows on
-    non-null text.
-    """
+def _shingle_arrays(docs: DataFrame, text_col: str, id_col: str, n: int,
+                    distinct: bool = False) -> DataFrame:
+    """(_id, _nt, _sh): token count and shingle array per document, with
+    the ``tokens`` projection BEFORE the repartition (see
+    :func:`_shingle_rows`)."""
     par = docs.sparkSession.sparkContext.defaultParallelism
     sh = (docs.select(F.col(id_col).alias("_id"),
                       tokens(text_col).alias("_toks"))
           .repartition(par)
-          .select("_id", shingles_from_tokens(F.col("_toks"), n).alias("_sh")))
+          .select("_id", F.size("_toks").alias("_nt"),
+                  shingles_from_tokens(F.col("_toks"), n).alias("_sh")))
     if distinct:
-        sh = sh.select("_id", F.array_distinct("_sh").alias("_sh"))
-    return (sh.select("_id", F.explode_outer("_sh").alias("_g"))
-            .filter(F.col("_g").isNotNull())
-            .select("_id",
-                    _shingle_hash_w(F.col("_g"), hex_digits).alias("_h")))
+        sh = sh.select("_id", "_nt", F.array_distinct("_sh").alias("_sh"))
+    return sh
+
+
+def _shingle_rows(docs: DataFrame, text_col: str, id_col: str, n: int,
+                  distinct: bool = False,
+                  positions: bool = False) -> DataFrame:
+    """(_id, _nt, _n, [pos,] _g): one shingle per row, with the doc's
+    token count ``_nt`` and shingle count ``_n`` — the one docs →
+    shingle-rows front end of every exploding operator here.
+
+    The explode is ``explode_outer``/``posexplode_outer`` plus a null
+    filter, and the repartition sits AFTER the ``tokens`` projection
+    (SCALE §1t). Under a non-outer explode ``InferFiltersFromGenerate``
+    plants a ``size(shingles) > 0`` filter, and predicate pushdown
+    rebuilds the full tokens+shingles chain inside it, past every
+    projection and the exchange, evaluated INTERPRETED per doc (~6 ms
+    of regex spin per doc at corpus scale, thread-dump-confirmed; the
+    fix took the 5M-doc verify from 1698 to 635 s). The rule does not
+    fire on outer generates, and the shingle array is never empty by
+    construction (``shingles_from_tokens`` falls back to the whole-text
+    shingle), so the outer form emits the same rows. Hash or md5 the
+    ``_g`` column as a TOP-LEVEL projection over these rows: inside
+    whole-stage codegen, not in an interpreted ``transform`` lambda
+    (measured ~10× slower for signature-sized shingle sets).
+    """
+    sh = _shingle_arrays(docs, text_col, id_col, n, distinct)
+    gen = (F.posexplode_outer("_sh").alias("pos", "_g") if positions
+           else F.explode_outer("_sh").alias("_g"))
+    return (sh.select("_id", "_nt", F.size("_sh").alias("_n"), gen)
+            .filter(F.col("_g").isNotNull()))
+
+
+def exploded_shingle_hashes(docs: DataFrame, text_col: str = "text",
+                            id_col: str = "doc_id", n: int = 3,
+                            distinct: bool = False,
+                            hex_digits: int = 8) -> DataFrame:
+    """(_id, _h) rows: one portable 32-bit shingle hash per row — the
+    fast path for signature pipelines. Signatures become plain groupBy
+    aggregates over it, so map-side combine shrinks the shuffle back to
+    one row per document."""
+    return (_shingle_rows(docs, text_col, id_col, n, distinct)
+            .select("_id", _shingle_hash_w(F.col("_g"), hex_digits)
+                    .alias("_h")))
 
 
 def minhash_signatures(docs: DataFrame, text_col: str = "text",
@@ -344,32 +374,13 @@ def ngram_jaccard_verify(df_pairs: DataFrame, docs: DataFrame,
     silently dropped): their pairs emit jaccard 0.0, the same set
     semantics as :func:`ngram_jaccard`.
 
-    Plan note (measured at the 5M-doc corpus, SCALE §1t): the explode
-    is ``explode_outer``, NOT ``explode``. ``InferFiltersFromGenerate``
-    plants a ``size(shingles) > 0`` filter under a non-outer Generate,
-    and predicate pushdown reconstructs the FULL tokens+zip_with chain
-    inside that filter all the way down past every projection AND the
-    exchange — evaluated INTERPRETED per doc (~6 ms of regex spin —
-    a ~20× stage blowup, 950 s at 5M docs, confirmed by thread dump).
-    The rule does not fire on outer generates, and the shingle array
-    is NEVER empty by construction (``shingles_from_tokens`` falls
-    back to the whole-text shingle), so ``explode_outer`` is
-    semantically identical here and removes the filter. The
-    repartition also sits AFTER the ``tokens`` projection so the
-    Generate's input references a materialized column.
+    The sketch build is :func:`exploded_shingle_hashes` (distinct)
+    plus ``collect_set``; its plan note is on :func:`_shingle_rows`.
     """
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    sk = (docs.select(F.col(id_col).alias("_vid"),
-                      tokens(text_col).alias("_toks"))
-          .repartition(par)
-          .select("_vid", F.array_distinct(
-              shingles_from_tokens(F.col("_toks"), n)).alias("_sh"))
-          .select("_vid", F.explode_outer("_sh").alias("_g"))
-          .filter(F.col("_g").isNotNull())
-          .select("_vid", _shingle_hash(F.col("_g")).alias("_h"))
-          .groupBy("_vid").agg(F.collect_set("_h").alias("_hs")))
-    d_l = sk.select(F.col("_vid").alias("id_l"), F.col("_hs").alias("_hs_l"))
-    d_r = sk.select(F.col("_vid").alias("id_r"), F.col("_hs").alias("_hs_r"))
+    sk = (exploded_shingle_hashes(docs, text_col, id_col, n, distinct=True)
+          .groupBy("_id").agg(F.collect_set("_h").alias("_hs")))
+    d_l = sk.select(F.col("_id").alias("id_l"), F.col("_hs").alias("_hs_l"))
+    d_r = sk.select(F.col("_id").alias("id_r"), F.col("_hs").alias("_hs_r"))
     if broadcast_docs:
         d_l, d_r = F.broadcast(d_l), F.broadcast(d_r)
     # LEFT joins + empty-set coalesce: a null-text doc has no sketch row
@@ -402,6 +413,27 @@ def ngram_jaccard_verify(df_pairs: DataFrame, docs: DataFrame,
     return res
 
 
+def _postings(docs: DataFrame, text_col: str, id_col: str,
+              n: int) -> DataFrame:
+    """(_id, _n, _h): one row per DISTINCT shingle hash of each doc,
+    with the doc's distinct-shingle count ``_n``."""
+    return (_shingle_rows(docs, text_col, id_col, n, distinct=True)
+            .select("_id", "_n", _shingle_hash(F.col("_g")).alias("_h")))
+
+
+def _overlaps(post: DataFrame) -> DataFrame:
+    """(id_l, id_r, inter, _n_l, _n_r) for every pair sharing a posting:
+    the self-equi-join on the hash emits one row per shared shingle, so
+    ``count(*)`` per pair IS |A∩B|."""
+    a = post.select(F.col("_id").alias("id_l"), F.col("_n").alias("_n_l"), "_h")
+    b = post.select(F.col("_id").alias("id_r"), F.col("_n").alias("_n_r"), "_h")
+    return (a.join(b, "_h")
+            .filter(F.col("id_l") < F.col("id_r"))
+            .groupBy("id_l", "id_r")
+            .agg(F.count(F.lit(1)).alias("inter"),
+                 F.min("_n_l").alias("_n_l"), F.min("_n_r").alias("_n_r")))
+
+
 def ngram_jaccard_all_pairs(docs: DataFrame, text_col: str = "text",
                             id_col: str = "doc_id", n: int = 3,
                             threshold: float = 0.5) -> DataFrame:
@@ -420,26 +452,9 @@ def ngram_jaccard_all_pairs(docs: DataFrame, text_col: str = "text",
     this operator is the exact path for bounded inputs and the oracle
     anchor for the approximate ones.
     """
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    sh = (docs.select(F.col(id_col).alias("_id"), F.col(text_col))
-          .repartition(par)
-          .select("_id", tokens(text_col).alias("_toks"))
-          .select("_id", F.array_distinct(
-              shingles_from_tokens(F.col("_toks"), n)).alias("_sh")))
-    # explode BEFORE hashing: md5 as a top-level projection stays in
-    # whole-stage codegen; inside a transform() lambda it runs interpreted
-    post = (sh.select("_id", F.size("_sh").alias("_n"),
-                      F.explode("_sh").alias("_g"))
-            .select("_id", "_n", _shingle_hash(F.col("_g")).alias("_h")))
-    a = post.select(F.col("_id").alias("id_l"), F.col("_n").alias("_n_l"), "_h")
-    b = post.select(F.col("_id").alias("id_r"), F.col("_n").alias("_n_r"), "_h")
     inter = F.col("inter")
     union = F.col("_n_l") + F.col("_n_r") - inter
-    return (a.join(b, "_h")
-            .filter(F.col("id_l") < F.col("id_r"))
-            .groupBy("id_l", "id_r")
-            .agg(F.count(F.lit(1)).alias("inter"),
-                 F.min("_n_l").alias("_n_l"), F.min("_n_r").alias("_n_r"))
+    return (_overlaps(_postings(docs, text_col, id_col, n))
             .filter(inter.cast("double") / union >= threshold)
             .select("id_l", "id_r", "inter",
                     union.cast("bigint").alias("union_sz"),
@@ -477,15 +492,7 @@ def containment_pairs(docs: DataFrame, text_col: str = "text",
     doc-in-doc pairs have low Jaccard by construction, which is the
     point of the measure. ``None`` = exact uncapped join.
     """
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    sh = (docs.select(F.col(id_col).alias("_id"), F.col(text_col))
-          .repartition(par)
-          .select("_id", tokens(text_col).alias("_toks"))
-          .select("_id", F.array_distinct(
-              shingles_from_tokens(F.col("_toks"), n)).alias("_sh")))
-    post = (sh.select("_id", F.size("_sh").alias("_n"),
-                      F.explode("_sh").alias("_g"))
-            .select("_id", "_n", _shingle_hash(F.col("_g")).alias("_h")))
+    post = _postings(docs, text_col, id_col, n)
     if max_posting is not None:
         # stop-shingle list: at most total_postings/cap rows by
         # construction — tiny relative to postings; AQE broadcasts it
@@ -499,6 +506,7 @@ def containment_pairs(docs: DataFrame, text_col: str = "text",
                 .filter(F.col("id_l") < F.col("id_r"))
                 .select("id_l", "id_r")
                 .distinct())
+        sh = _shingle_arrays(docs, text_col, id_col, n, distinct=True)
         ver = (cand
                .join(sh.select(F.col("_id").alias("id_l"),
                                F.col("_sh").alias("_sh_l")), "id_l")
@@ -512,15 +520,9 @@ def containment_pairs(docs: DataFrame, text_col: str = "text",
                         smaller.cast("bigint").alias("min_sz"),
                         (inter.cast("double") / smaller)
                         .alias("containment")))
-    a = post.select(F.col("_id").alias("id_l"), F.col("_n").alias("_n_l"), "_h")
-    b = post.select(F.col("_id").alias("id_r"), F.col("_n").alias("_n_r"), "_h")
     inter = F.col("inter")
     smaller = F.least("_n_l", "_n_r")
-    return (a.join(b, "_h")
-            .filter(F.col("id_l") < F.col("id_r"))
-            .groupBy("id_l", "id_r")
-            .agg(F.count(F.lit(1)).alias("inter"),
-                 F.min("_n_l").alias("_n_l"), F.min("_n_r").alias("_n_r"))
+    return (_overlaps(post)
             .filter(inter.cast("double") / smaller >= threshold)
             .select("id_l", "id_r", "inter",
                     smaller.cast("bigint").alias("min_sz"),
@@ -615,7 +617,17 @@ def simhash_fingerprints(docs: DataFrame, text_col: str = "text",
     signs. Bit-identical to the one-SUM-per-bit form (votes are exact
     integers); ceil(bits/_SWAR_LANES) packed sums replace ``bits``
     sums — measured 1.2-1.4× across the simhash query family at
-    sf0.1 (r13 quiet-host A/B vs the per-bit form)."""
+    sf0.1 (r13 quiet-host A/B vs the per-bit form).
+
+    Raises ``ValueError`` unless ``1 <= bits <= 4 * hex_digits`` and
+    ``hex_digits <= 15``: the base hash carries ``4 * hex_digits`` bits,
+    so every fingerprint bit above that is 0 for every document (a band
+    cut from those bits puts the whole corpus in one bucket), and 16 hex
+    digits overflow the signed bigint."""
+    if not (1 <= bits <= 4 * hex_digits and hex_digits <= 15):
+        raise ValueError(
+            f"simhash needs 1 <= bits <= 4 * hex_digits and hex_digits "
+            f"<= 15; got bits={bits}, hex_digits={hex_digits}")
     ex = exploded_shingle_hashes(docs, text_col, id_col, n,
                                  hex_digits=hex_digits)
     return (ex.groupBy("_id")
@@ -625,29 +637,81 @@ def simhash_fingerprints(docs: DataFrame, text_col: str = "text",
                     .alias("_fp")))
 
 
-def simhash_hamming_pairs(docs: DataFrame, text_col: str = "text",
-                          id_col: str = "doc_id", n: int = 2,
-                          bits: int = 16, bands: int = 4,
-                          max_hamming: int = 3,
-                          hex_digits: int = 8,
-                          max_bucket: int | None = None) -> DataFrame:
-    """Near-duplicate pairs by SimHash Hamming distance ≤ ``max_hamming``.
+def _band_chunks(fps: DataFrame, id_col: str, fp_cols: list[str],
+                 bits: int, bands: int, max_hamming: int) -> DataFrame:
+    """(_id, _f0.._fk, band, chunk): one row per band of each fingerprint.
 
-    The ``bits``-bit fingerprint splits into ``bands`` equal chunks; by
-    pigeonhole, any pair within Hamming distance ``bands - 1`` shares at
-    least one identical chunk, so an equi-join on (band, chunk) finds all
-    such pairs without the O(n²) cross join (Manku et al., WWW'07 —
-    public near-dup-detection technique). Candidates then verify with
-    ``bit_count(fp_l XOR fp_r)``.
+    The ``bits``-bit fingerprint, held in ``fp_cols`` of ``bits/k`` bits
+    each, splits into ``bands`` chunks of ``bits // bands`` bits that
+    never straddle two columns. Shifts are unsigned, and with the mask a
+    negative 64-bit fingerprint (image dHash) chunks like any other. The
+    bands unroll in Python: the shift amount must be a literal int, not
+    a Column."""
+    if max_hamming > bands - 1:
+        raise ValueError(
+            f"banding finds all pairs only up to hamming {bands - 1}; "
+            f"got max_hamming={max_hamming}")
+    if bands % len(fp_cols) != 0:
+        raise ValueError("bands must split evenly across the fingerprint "
+                         f"columns; got bands={bands} over {len(fp_cols)}")
+    per_col = bands // len(fp_cols)
+    chunk_bits = bits // bands
+    mask = (1 << chunk_bits) - 1
+    fs = [f"_f{i}" for i in range(len(fp_cols))]
+    band_structs = [
+        F.struct(
+            F.lit(band).alias("band"),
+            F.shiftrightunsigned(F.col(fp_cols[band // per_col]),
+                                 (band % per_col) * chunk_bits)
+            .bitwiseAND(F.lit(mask)).alias("chunk"))
+        for band in range(bands)]
+    return (fps.select(F.col(id_col).alias("_id"),
+                       *[F.col(c).alias(f) for c, f in zip(fp_cols, fs)],
+                       F.explode(F.array(*band_structs)).alias("bc"))
+            .select("_id", *fs, "bc.band", "bc.chunk"))
 
-    Scale: the join shuffles (band, chunk-int, id) triples only; with
-    ``bands=4``/16-bit chunks of 4 bits the bucket count is small on tiny
-    corpora but grows with ``bits`` (64-bit fp / 4 bands → 2^16 buckets ×
-    band). All arithmetic is integer and md5-portable, so an external SQL
-    engine reproduces the exact pair set (full value oracle, not
-    rows-only).
 
-    Requires ``max_hamming <= bands - 1`` for exactness (pigeonhole).
+def _chunk_join(a: DataFrame, b: DataFrame, id_a: str, id_b: str,
+                max_hamming: int, ordered: bool) -> DataFrame:
+    """(id_a, id_b, hamming): equi-join two :func:`_band_chunks` tables
+    on (band, chunk) and verify with Σ ``bit_count(xor)`` over the
+    fingerprint columns. ``ordered`` keeps only ``id_a < id_b`` (the
+    self-join)."""
+    fs = [c for c in a.columns if c.startswith("_f")]
+    l = a.select(F.col("_id").alias(id_a),
+                 *[F.col(f).alias(f + "a") for f in fs], "band", "chunk")
+    r = b.select(F.col("_id").alias(id_b),
+                 *[F.col(f).alias(f + "b") for f in fs], "band", "chunk")
+    j = l.join(r, on=["band", "chunk"])
+    if ordered:
+        j = j.filter(F.col(id_a) < F.col(id_b))
+    xors = [F.bit_count(F.col(f + "a").bitwiseXOR(F.col(f + "b")))
+            for f in fs]
+    ham = sum(xors[1:], xors[0])
+    return (j.select(id_a, id_b, ham.alias("hamming"))
+            .filter(F.col("hamming") <= max_hamming)
+            .groupBy(id_a, id_b)
+            .agg(F.min("hamming").alias("hamming")))
+
+
+def hamming_pairs(fps: DataFrame, id_col: str, fp_col: str | list[str],
+                  bits: int = 64, bands: int = 4,
+                  max_hamming: int = 3,
+                  max_bucket: int | None = None) -> DataFrame:
+    """(id_l, id_r, hamming): every pair within Hamming distance
+    ``max_hamming`` of a ``bits``-bit fingerprint — the one banded
+    Hamming join, for SimHash (:func:`simhash_hamming_pairs`,
+    :func:`simhash_wide_pairs`) and any precomputed fingerprint column
+    (the image dHash in ``operators/multimodal.py``). ``fp_col`` is one
+    column, or a list of columns that together hold ``bits`` bits.
+
+    The fingerprint splits into ``bands`` chunks; by pigeonhole, any
+    pair within Hamming distance ``bands - 1`` shares at least one
+    identical chunk, so an equi-join on (band, chunk) finds all such
+    pairs without the O(n²) cross join (Manku et al., WWW'07). The join
+    shuffles (band, chunk, id, fingerprint) rows only. Candidates verify
+    with ``bit_count(fp_l XOR fp_r)``. Raises ``ValueError`` if
+    ``max_hamming > bands - 1``.
 
     ``max_bucket`` (optional) is the skew cap MinHash banding already
     carries: (band, chunk) buckets holding more than ``max_bucket``
@@ -661,41 +725,35 @@ def simhash_hamming_pairs(docs: DataFrame, text_col: str = "text",
     volume. ``None`` (default) preserves the exact pigeonhole guarantee
     — the oracle-checked queries use the uncapped form.
     """
-    if max_hamming > bands - 1:
-        raise ValueError(
-            f"banding finds all pairs only up to hamming {bands - 1}; "
-            f"got max_hamming={max_hamming}")
-    chunk_bits = bits // bands
-    mask = (1 << chunk_bits) - 1
-    fp = simhash_fingerprints(docs, text_col, id_col, n, bits,
-                              hex_digits=hex_digits)
-    # band structs unroll in Python (bands is a plan-time constant):
-    # shiftright needs a literal int shift amount, not a Column
-    band_structs = [
-        F.struct(
-            F.lit(band).alias("band"),
-            F.shiftright(F.col("_fp"), band * chunk_bits)
-            .bitwiseAND(F.lit(mask)).alias("chunk"))
-        for band in range(bands)]
-    chunks = fp.select(
-        "_id", "_fp", F.explode(F.array(*band_structs)).alias("bc"),
-    ).select("_id", "_fp", "bc.band", "bc.chunk")
+    cols = [fp_col] if isinstance(fp_col, str) else list(fp_col)
+    chunks = _band_chunks(fps, id_col, cols, bits, bands, max_hamming)
     if max_bucket is not None:
         chunks = chunks.withColumn(
             "_bn", F.count(F.lit(1)).over(
                 Window.partitionBy("band", "chunk"))
         ).filter(F.col("_bn") <= max_bucket).drop("_bn")
-    a = chunks.select(F.col("_id").alias("id_l"), F.col("_fp").alias("_fp_l"),
-                      "band", "chunk")
-    b = chunks.select(F.col("_id").alias("id_r"), F.col("_fp").alias("_fp_r"),
-                      "band", "chunk")
-    ham = F.bit_count(F.col("_fp_l").bitwiseXOR(F.col("_fp_r")))
-    return (a.join(b, on=["band", "chunk"])
-            .filter(F.col("id_l") < F.col("id_r"))
-            .select("id_l", "id_r", ham.alias("hamming"))
-            .filter(F.col("hamming") <= max_hamming)
-            .groupBy("id_l", "id_r")
-            .agg(F.min("hamming").alias("hamming")))
+    return _chunk_join(chunks, chunks, "id_l", "id_r", max_hamming,
+                       ordered=True)
+
+
+def simhash_hamming_pairs(docs: DataFrame, text_col: str = "text",
+                          id_col: str = "doc_id", n: int = 2,
+                          bits: int = 16, bands: int = 4,
+                          max_hamming: int = 3,
+                          hex_digits: int = 8,
+                          max_bucket: int | None = None) -> DataFrame:
+    """Near-duplicate pairs by SimHash Hamming distance ≤ ``max_hamming``:
+    :func:`simhash_fingerprints` banded by :func:`hamming_pairs` (same
+    pigeonhole contract and ``max_bucket`` cap). All arithmetic is
+    integer and md5-portable, so an external SQL engine reproduces the
+    exact pair set (full value oracle, not rows-only). Wider
+    fingerprints need a matching ``hex_digits`` (``bits=48,
+    hex_digits=12``); past 60 bits use :func:`simhash_wide_pairs`.
+    """
+    fp = simhash_fingerprints(docs, text_col, id_col, n, bits,
+                              hex_digits=hex_digits)
+    return hamming_pairs(fp, "_id", "_fp", bits, bands, max_hamming,
+                         max_bucket)
 
 
 def simhash_wide_fingerprints(docs: DataFrame, text_col: str = "text",
@@ -712,26 +770,19 @@ def simhash_wide_fingerprints(docs: DataFrame, text_col: str = "text",
     ``_fp_lo`` is bit-identical to ``simhash_fingerprints(bits=half_bits,
     hex_digits=half_bits//4)`` (same md5-prefix base hash), so the wide
     form strictly extends the narrow one. The md5 materializes ONCE per
-    exploded shingle row; both segment hashes are top-level projections
-    of it (whole-stage codegen — the HOF-lambda trap documented on
-    ``exploded_shingle_hashes`` does not apply).
+    exploded shingle row, in its own projection; both segment hashes
+    are top-level projections of it.
     """
     if not 1 <= half_bits <= 60:
         raise ValueError("half_bits must be in [1, 60] (int64 headroom)")
     hexd = (half_bits + 3) // 4
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    sh = (docs.select(F.col(id_col).alias("_id"), F.col(text_col))
-          .repartition(par)
-          .select("_id", tokens(text_col).alias("_toks"))
-          .select("_id", shingles_from_tokens(F.col("_toks"), n).alias("_sh"))
-          .select("_id", F.explode("_sh").alias("_g"))
-          .select("_id", F.md5("_g").alias("_m")))
-    ex = sh.select(
-        "_id",
-        F.conv(F.substring("_m", 1, hexd), 16, 10).cast("bigint")
-        .alias("_hlo"),
-        F.conv(F.substring("_m", 17, hexd), 16, 10).cast("bigint")
-        .alias("_hhi"))
+    ex = (_shingle_rows(docs, text_col, id_col, n)
+          .select("_id", F.md5("_g").alias("_m"))
+          .select("_id",
+                  F.conv(F.substring("_m", 1, hexd), 16, 10).cast("bigint")
+                  .alias("_hlo"),
+                  F.conv(F.substring("_m", 17, hexd), 16, 10).cast("bigint")
+                  .alias("_hhi")))
 
     # SWAR-packed votes per half (see _swar_vote_aggs):
     # 2·ceil(48/_SWAR_LANES) packed sums replace 96 per-bit sums,
@@ -753,59 +804,19 @@ def simhash_wide_pairs(docs: DataFrame, text_col: str = "text",
                        max_hamming: int = 3,
                        max_bucket: int | None = None) -> DataFrame:
     """Near-duplicate pairs over the 2×``half_bits``-bit wide SimHash:
-    the fingerprint splits into ``bands`` chunks of ``2*half_bits/bands``
-    bits (24-bit chunks at the default — past the ≥18 bits/chunk the
-    §1o width rule derives for 5M-doc corpora, where the 60-bit form's
-    15-bit chunks are exhausted), so random chunk collisions stay ~0 as
-    N grows and the UNCAPPED banding has a documented path instead of a
-    documented cliff. Pigeonhole guarantee: all pairs within Hamming
-    distance ``bands - 1`` across the full 2×``half_bits`` bits are
-    found (chunks never straddle halves — ``bands`` must split evenly
-    into per-half chunk counts). Hamming verifies as
-    ``bit_count(lo⊕lo') + bit_count(hi⊕hi')``. Same skew-cap contract
-    as :func:`simhash_hamming_pairs`.
+    :func:`hamming_pairs` over both halves, so the fingerprint splits
+    into ``bands`` chunks of ``2*half_bits/bands`` bits (24-bit chunks
+    at the default — past the ≥18 bits/chunk the §1o width rule derives
+    for 5M-doc corpora, where the 60-bit form's 15-bit chunks are
+    exhausted), and random chunk collisions stay ~0 as N grows. All
+    pairs within Hamming distance ``bands - 1`` across the full
+    2×``half_bits`` bits are found (``bands`` must be even: chunks never
+    straddle halves). Hamming verifies as
+    ``bit_count(lo⊕lo') + bit_count(hi⊕hi')``.
     """
-    if max_hamming > bands - 1:
-        raise ValueError(
-            f"banding finds all pairs only up to hamming {bands - 1}; "
-            f"got max_hamming={max_hamming}")
-    if bands % 2 != 0 or (2 * half_bits) % bands != 0 \
-            or half_bits % (bands // 2) != 0:
-        raise ValueError("bands must split evenly across the two halves")
-    chunk_bits = 2 * half_bits // bands
-    mask = (1 << chunk_bits) - 1
-    per_half = bands // 2
     fp = simhash_wide_fingerprints(docs, text_col, id_col, n, half_bits)
-    band_structs = [
-        F.struct(
-            F.lit(band).alias("band"),
-            F.shiftright(
-                F.col("_fp_lo" if band < per_half else "_fp_hi"),
-                (band % per_half) * chunk_bits)
-            .bitwiseAND(F.lit(mask)).alias("chunk"))
-        for band in range(bands)]
-    chunks = fp.select(
-        "_id", "_fp_lo", "_fp_hi",
-        F.explode(F.array(*band_structs)).alias("bc"),
-    ).select("_id", "_fp_lo", "_fp_hi", "bc.band", "bc.chunk")
-    if max_bucket is not None:
-        chunks = chunks.withColumn(
-            "_bn", F.count(F.lit(1)).over(
-                Window.partitionBy("band", "chunk"))
-        ).filter(F.col("_bn") <= max_bucket).drop("_bn")
-    a = chunks.select(F.col("_id").alias("id_l"),
-                      F.col("_fp_lo").alias("_lo_l"),
-                      F.col("_fp_hi").alias("_hi_l"), "band", "chunk")
-    b = chunks.select(F.col("_id").alias("id_r"),
-                      F.col("_fp_lo").alias("_lo_r"),
-                      F.col("_fp_hi").alias("_hi_r"), "band", "chunk")
-    ham = (F.bit_count(F.col("_lo_l").bitwiseXOR(F.col("_lo_r")))
-           + F.bit_count(F.col("_hi_l").bitwiseXOR(F.col("_hi_r"))))
-    return (a.join(b, on=["band", "chunk"])
-            .filter(F.col("id_l") < F.col("id_r"))
-            .select("id_l", "id_r", ham.alias("hamming"))
-            .filter(F.col("hamming") <= max_hamming)
-            .distinct())
+    return hamming_pairs(fp, "_id", ["_fp_lo", "_fp_hi"], 2 * half_bits,
+                         bands, max_hamming, max_bucket)
 
 
 def simhash_cross_matches(probe: DataFrame, index: DataFrame,
@@ -816,104 +827,16 @@ def simhash_cross_matches(probe: DataFrame, index: DataFrame,
     ``max_hamming`` of an index fingerprint — the incremental-dedup
     primitive (probe = new micro-batch, index = corpus kept so far).
 
-    Same pigeonhole banding as :func:`simhash_hamming_pairs`, but the
+    The chunking and verify of :func:`hamming_pairs`, but the
     band-chunk equi-join runs probe × index instead of self — per batch
     the shuffle is O(probe chunks + matching index chunks), never the
     full index (chunks are hash-partitioned; a 100 TB index is touched
     only where a probe chunk collides).
     """
-    if max_hamming > bands - 1:
-        raise ValueError(
-            f"banding finds all pairs only up to hamming {bands - 1}; "
-            f"got max_hamming={max_hamming}")
-    chunk_bits = bits // bands
-    mask = (1 << chunk_bits) - 1
-
-    def chunks(fp: DataFrame, id_out: str, fp_out: str) -> DataFrame:
-        structs = [
-            F.struct(
-                F.lit(band).alias("band"),
-                F.shiftright(F.col("_fp"), band * chunk_bits)
-                .bitwiseAND(F.lit(mask)).alias("chunk"))
-            for band in range(bands)]
-        return (fp.select(F.col("_id").alias(id_out),
-                          F.col("_fp").alias(fp_out),
-                          F.explode(F.array(*structs)).alias("bc"))
-                .select(id_out, fp_out, "bc.band", "bc.chunk"))
-
-    a = chunks(probe, "probe_id", "_fp_p")
-    b = chunks(index, "index_id", "_fp_i")
-    ham = F.bit_count(F.col("_fp_p").bitwiseXOR(F.col("_fp_i")))
-    return (a.join(b, on=["band", "chunk"])
-            .select("probe_id", "index_id", ham.alias("hamming"))
-            .filter(F.col("hamming") <= max_hamming)
-            .groupBy("probe_id", "index_id")
-            .agg(F.min("hamming").alias("hamming")))
-
-
-def simhash_dedup_clusters(docs: DataFrame, text_col: str = "text",
-                           id_col: str = "doc_id", n: int = 2,
-                           bits: int = 16, bands: int = 4,
-                           max_hamming: int = 3,
-                           max_iter: int = 25,
-                           hex_digits: int = 8) -> DataFrame:
-    """SimHash near-dup clusters with FINGERPRINT CONTRACTION: the
-    connected-components loop runs on DISTINCT fingerprints, not
-    documents.
-
-    Docs sharing a fingerprint are near-dups by definition (hamming 0),
-    so they contract into one vertex before the iterative part — the
-    vertex set is bounded by 2^bits regardless of corpus size, which
-    turns the O(rounds) join loop into fixed small work at 100 TB on
-    exact-dup-heavy corpora (web crawls). NOTE the measured tradeoff on
-    the driver's synthetic corpus (sf0.1: 4609 distinct fps over 5000
-    docs — near-zero sharing): contraction adds its groupBy/expansion
-    overhead without shrinking the graph, and plain doc-level
-    ``graph.dedup_clusters`` is ~1.7× faster. Pick by dup profile.
-    Expansion back to documents is one broadcast-sized join.
-
-    Returns (cluster_id = min doc id, doc_id, cluster_size) for every
-    document in a cluster of ≥ 2 docs — identical to running
-    ``graph.dedup_clusters`` over ``simhash_hamming_pairs`` output.
-    """
-    from timeseries_data_analysis_spark.operators.graph import connected_components
-
-    if max_hamming > bands - 1:
-        raise ValueError(
-            f"banding finds all pairs only up to hamming {bands - 1}; "
-            f"got max_hamming={max_hamming}")
-    chunk_bits = bits // bands
-    mask = (1 << chunk_bits) - 1
-    fp = simhash_fingerprints(docs, text_col, id_col, n, bits,
-                              hex_digits=hex_digits)
-    fps = fp.groupBy("_fp").agg(F.count(F.lit(1)).alias("_n_docs"))
-    band_structs = [
-        F.struct(
-            F.lit(band).alias("band"),
-            F.shiftright(F.col("_fp"), band * chunk_bits)
-            .bitwiseAND(F.lit(mask)).alias("chunk"))
-        for band in range(bands)]
-    chunks = fps.select(
-        "_fp", F.explode(F.array(*band_structs)).alias("bc"),
-    ).select("_fp", "bc.band", "bc.chunk")
-    a = chunks.select(F.col("_fp").alias("fp_l"), "band", "chunk")
-    b = chunks.select(F.col("_fp").alias("fp_r"), "band", "chunk")
-    ham = F.bit_count(F.col("fp_l").bitwiseXOR(F.col("fp_r")))
-    fp_edges = (a.join(b, on=["band", "chunk"])
-                .filter(F.col("fp_l") < F.col("fp_r"))
-                .filter(ham <= max_hamming)
-                .select("fp_l", "fp_r").distinct())
-    cc = connected_components(fp_edges, "fp_l", "fp_r", max_iter)
-    # fps in no fp-edge still form a cluster if ≥2 docs share them
-    comp = (fps.join(cc, fps["_fp"] == cc["vertex"], "left")
-            .filter(F.col("component").isNotNull() | (F.col("_n_docs") >= 2))
-            .select("_fp", F.coalesce("component", "_fp").alias("_comp")))
-    members = fp.join(comp, on="_fp").select("_id", "_comp")
-    stats = (members.groupBy("_comp")
-             .agg(F.min("_id").alias("cluster_id"),
-                  F.count(F.lit(1)).alias("cluster_size")))
-    return (members.join(stats, on="_comp")
-            .select("cluster_id", F.col("_id").alias("doc_id"), "cluster_size"))
+    a = _band_chunks(probe, "_id", ["_fp"], bits, bands, max_hamming)
+    b = _band_chunks(index, "_id", ["_fp"], bits, bands, max_hamming)
+    return _chunk_join(a, b, "probe_id", "index_id", max_hamming,
+                       ordered=False)
 
 
 def simhash(col: Column | str, n: int = 2, bits: int = 16) -> Column:
@@ -994,15 +917,8 @@ def duplicate_spans(docs: DataFrame, text_col: str = "text",
     document. Docs shorter than ``n`` tokens fall back to one whole-doc
     shingle (same convention as ``shingles_from_tokens``).
     """
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    pos = (docs.select(F.col(id_col).alias("_id"), F.col(text_col))
-           .repartition(par)
-           .select("_id", tokens(text_col).alias("_toks"))
-           .select("_id", F.size("_toks").alias("n_tokens"),
-                   shingles_from_tokens(F.col("_toks"), n).alias("_sh"))
-           .select("_id", "n_tokens",
-                   F.posexplode("_sh").alias("pos", "_g"))
-           .select("_id", "n_tokens", "pos",
+    pos = (_shingle_rows(docs, text_col, id_col, n, positions=True)
+           .select("_id", F.col("_nt").alias("n_tokens"), "pos",
                    _shingle_hash_w(F.col("_g"), hex_digits).alias("_h")))
     dup = (pos.groupBy("_h")
            .agg(F.countDistinct("_id").alias("_nd"))
@@ -1122,49 +1038,3 @@ def repetition_profile(docs: DataFrame, text_col: str = "text",
                 F.coalesce("top_bigram", F.lit("")).alias("top_bigram"),
                 F.coalesce(F.col("_top_chars") / F.col("_wchars"), zero)
                 .alias("top_bigram_share")))
-
-
-def hamming_pairs(fps: DataFrame, id_col: str, fp_col: str,
-                  bits: int = 64, bands: int = 4,
-                  max_hamming: int = 3,
-                  max_bucket: int | None = None) -> DataFrame:
-    """Banded Hamming-distance pair join over a PRECOMPUTED fingerprint
-    column — the generic form of :func:`simhash_hamming_pairs`'s band
-    join, for fingerprints that do not come from text shingles (e.g.
-    the image dHash in ``operators/multimodal.py``). Same pigeonhole
-    contract (finds all pairs within ``bands − 1``), same chunk
-    equi-join shape (never all-pairs), same optional ``max_bucket``
-    skew cap.
-    """
-    if max_hamming > bands - 1:
-        raise ValueError(
-            f"banding finds all pairs only up to hamming {bands - 1}; "
-            f"got max_hamming={max_hamming}")
-    chunk_bits = bits // bands
-    mask = (1 << chunk_bits) - 1
-    band_structs = [
-        F.struct(
-            F.lit(band).alias("band"),
-            F.shiftrightunsigned(F.col(fp_col), band * chunk_bits)
-            .bitwiseAND(F.lit(mask)).alias("chunk"))
-        for band in range(bands)]
-    chunks = fps.select(
-        F.col(id_col).alias("_id"), F.col(fp_col).alias("_fp"),
-        F.explode(F.array(*band_structs)).alias("bc"),
-    ).select("_id", "_fp", "bc.band", "bc.chunk")
-    if max_bucket is not None:
-        chunks = chunks.withColumn(
-            "_bn", F.count(F.lit(1)).over(
-                Window.partitionBy("band", "chunk"))
-        ).filter(F.col("_bn") <= max_bucket).drop("_bn")
-    a = chunks.select(F.col("_id").alias("id_l"),
-                      F.col("_fp").alias("_fp_l"), "band", "chunk")
-    b = chunks.select(F.col("_id").alias("id_r"),
-                      F.col("_fp").alias("_fp_r"), "band", "chunk")
-    ham = F.bit_count(F.col("_fp_l").bitwiseXOR(F.col("_fp_r")))
-    return (a.join(b, on=["band", "chunk"])
-            .filter(F.col("id_l") < F.col("id_r"))
-            .select("id_l", "id_r", ham.alias("hamming"))
-            .filter(F.col("hamming") <= max_hamming)
-            .groupBy("id_l", "id_r")
-            .agg(F.min("hamming").alias("hamming")))
