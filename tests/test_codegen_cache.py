@@ -104,3 +104,25 @@ def test_cc_rerun_compiles_no_per_round_class(spark, cc):
         low[root] = min(low.get(root, v), v)
     want = {(v, low[root]) for v, root in roots.items()}
     assert all(labels == want for labels in got)
+
+
+def test_committed_dedup_replay_compiles_no_class(spark, tmp_path):
+    """Replaying an already-committed dedup_commit_batch, the marker
+    check every exact and near-dup micro-batch runs first, compiles no
+    class (a limit-then-count marker probe compiled 2 on every call)."""
+    from timeseries_data_analysis_spark.streaming import jobs as SJ
+
+    idx, out = str(tmp_path / "index"), str(tmp_path / "out")
+    schema = "doc_id long, text string"
+    b0 = spark.createDataFrame([(1, "alpha beta"), (2, "gamma delta")],
+                               schema)
+    b1 = spark.createDataFrame([(3, "gamma delta"), (4, "epsilon zeta")],
+                               schema)
+    SJ.dedup_commit_batch(b0, 0, idx, out)
+    SJ.dedup_commit_batch(b1, 1, idx, out)
+    replays = [_compiled_by(spark,
+                            lambda: SJ.dedup_commit_batch(b1, 1, idx, out))
+               for _ in range(WARM_TRIES)]
+    assert min(replays) == 0, replays
+    assert sorted(r["doc_id"] for r in
+                  spark.read.parquet(out).collect()) == [1, 2, 4]

@@ -3,6 +3,7 @@ community detection (operators/graph) tests."""
 
 from __future__ import annotations
 
+import functools
 import math
 
 from pyspark.sql import functions as F
@@ -158,10 +159,10 @@ def test_logit_sink_via_stream(spark, tmp_path):
               .schema("x1 double, x2 double, y int")
               .option("maxFilesPerTrigger", 1)
               .parquet(str(src)))
-    q = (SJ.logit_sink(stream, state, xcols=["x1", "x2"], ycol="y",
-                       lr=1.0)
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
+    q = SJ.run_with_foreach_batch(
+        stream, functools.partial(SJ.logit_commit_batch, state_path=state,
+                                  xcols=["x1", "x2"], ycol="y", lr=1.0),
+        checkpoint=str(tmp_path / "ckpt"))
     q.awaitTermination(120)
 
     ref = LG.gd_step(_separable(spark, n=100), ["x1", "x2"], "y",

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pytest
 
@@ -130,10 +132,11 @@ def test_pca_sink_via_stream(spark, tmp_path):
     stream = (spark.readStream
               .schema("id long, embedding array<double>")
               .parquet(str(src)))
-    q = (SJ.pca_sink(stream, str(tmp_path / "st"), vec_col="embedding",
-                     dim=8)
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
+    q = SJ.run_with_foreach_batch(
+        stream, functools.partial(SJ.pca_commit_batch,
+                                  state_path=str(tmp_path / "st"),
+                                  vec_col="embedding", dim=8),
+        checkpoint=str(tmp_path / "ckpt"))
     q.awaitTermination(120)
     fit = SJ.pca_state_fit(spark, str(tmp_path / "st"), k=2)
     ref = PCA.fit_pca(df, "embedding", 8, k=2)

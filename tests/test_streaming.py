@@ -8,6 +8,7 @@ maxFilesPerTrigger=1), drained with Trigger.AvailableNow.
 
 from __future__ import annotations
 
+import functools
 import shutil
 import tempfile
 
@@ -353,9 +354,10 @@ def test_incremental_dedup_across_batches(spark, tmp_path):
     def drain():
         stream = SJ.stream_source(spark, f"{src}/*", doc_schema,
                                   max_files_per_trigger=1)
-        q = (SJ.incremental_dedup_sink(stream, idx, out)
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
+        q = SJ.run_with_foreach_batch(
+            stream, functools.partial(SJ.dedup_commit_batch,
+                                      index_path=idx, out_path=out),
+            checkpoint=ckpt)
         q.awaitTermination(120)
 
     drain()
@@ -490,9 +492,11 @@ def test_governance_ingest_sink(spark, tmp_path):
 
     stream = SJ.stream_source(spark, f"{src}/*", doc_schema,
                               max_files_per_trigger=1)
-    q = (SJ.governance_ingest_sink(stream, idx, out, min_quality=0.35)
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start())
+    q = SJ.run_with_foreach_batch(
+        stream, functools.partial(SJ.governance_commit_batch,
+                                  index_path=idx, out_path=out,
+                                  min_quality=0.35),
+        checkpoint=ckpt)
     q.awaitTermination(120)
 
     got = spark.read.parquet(out).toPandas().sort_values("doc_id")
@@ -536,9 +540,10 @@ def test_ivf_ingest_sink_matches_batch_assignment(spark, tmp_path):
     out = str(tmp_path / "ivf_store")
     stream = SJ.stream_source(spark, f"{src}/*", vec_schema,
                               max_files_per_trigger=1)
-    q = (SJ.ivf_ingest_sink(stream, cent, out)
-         .option("checkpointLocation", str(tmp_path / "ckpt"))
-         .trigger(availableNow=True).start())
+    q = SJ.run_with_foreach_batch(
+        stream, functools.partial(SJ.ivf_commit_batch, centroids=cent,
+                                  out_path=out),
+        checkpoint=str(tmp_path / "ckpt"))
     assert q.awaitTermination(120), "stream did not finish in 120s"
 
     got = spark.read.parquet(out).toPandas()
@@ -818,6 +823,26 @@ def test_heavy_hitters_sink_bounds_and_crash_replay(spark, tmp_path):
     assert st2 == st
 
 
+def test_heavy_hitters_total_survives_full_compression(spark, tmp_path):
+    """The stream length outlives a compression that drops every item
+    (k=2, five tied singletons) and an empty batch: the next batch adds
+    to it instead of restarting at 0, so the thresholded reader reports
+    no false positive."""
+    state = str(tmp_path / "hh_total")
+    SJ.hh_commit_batch(spark.createDataFrame(
+        [(f"s{i}",) for i in range(5)], "item string"), 0, state, k=2)
+    SJ.hh_commit_batch(spark.createDataFrame(
+        [("a",)] * 3, "item string"), 1, state, k=2)
+    got = [tuple(r) for r in SJ.heavy_hitters_state(spark, state).collect()]
+    assert got == [("a", 3, 8)]
+    # 'a' is 3/8 of the stream, below the 1/2 support
+    assert SJ.heavy_hitters_state(spark, state, threshold_inv=2).count() == 0
+    SJ.hh_commit_batch(spark.createDataFrame([], "item string"), 2, state,
+                       k=2)
+    got = [tuple(r) for r in SJ.heavy_hitters_state(spark, state).collect()]
+    assert got == [("a", 3, 8)]
+
+
 def test_psi_scores_match_batch_audit_and_replay(spark, sf_dir, tmp_path):
     import __spark_entry__ as entry_mod
     from pyspark.sql import functions as F
@@ -992,6 +1017,113 @@ def test_prune_state_dirs_keeps_replay_window(spark, tmp_path):
     with _pytest.raises(ValueError):
         SJ.prune_state_dirs(spark, state, keep_last=1)
     assert SJ.prune_state_dirs(spark, str(tmp_path / "nope")) == []
+
+
+def _day(i, hour=0):
+    return (pd.Timestamp("2024-06-01")
+            + pd.Timedelta(days=i, hours=hour)).to_pydatetime()
+
+
+_T0 = pd.Timestamp("2024-06-01").timestamp()
+
+# name -> (rows of batch i, schema, commit(df, bid, state, out),
+#          read(spark, state, out)) for each single-phase state sink
+PRUNE_REPLAY_CASES = {
+    "hh": (lambda i: [(f"t{j % (i + 2)}",) for j in range(12)],
+           "item string",
+           lambda df, b, st, out: SJ.hh_commit_batch(df, b, st, k=3),
+           lambda spark, st, out: SJ.heavy_hitters_state(spark, st)),
+    "kll": (lambda i: [("a", float(v + i)) for v in range(20)],
+            "event_type string, value double",
+            lambda df, b, st, out: SJ.kll_commit_batch(df, b, st, k=8),
+            lambda spark, st, out: SJ.quantile_sketch_state_read(
+                spark, st, probs=(0.5, 0.9))),
+    "hll": (lambda i: [("a", i * 10 + j) for j in range(15)],
+            "event_type string, item long",
+            lambda df, b, st, out: SJ.hll_commit_batch(df, b, st),
+            lambda spark, st, out: SJ.hll_state_estimate(spark, st)),
+    "dau_panel": (lambda i: [(_day(i, j), j + i) for j in range(5)],
+                  "ts timestamp, user_id long",
+                  lambda df, b, st, out: SJ.dau_panel_commit_batch(
+                      df, b, st),
+                  lambda spark, st, out: SJ.dau_panel_estimate(spark, st)),
+    "vocab": (lambda i: [(i, f"alpha w{i} beta beta", "src0"),
+                         (10 + i, "gamma w0", "src1")],
+              "doc_id long, text string, source string",
+              lambda df, b, st, out: SJ.vocab_commit_batch(df, b, st),
+              lambda spark, st, out: SJ.vocab_state_estimate(spark, st)),
+    "logit": (lambda i: [(float(j - i), float(i - 2 * j), j % 2)
+                         for j in range(8)],
+              "x1 double, x2 double, y int",
+              lambda df, b, st, out: SJ.logit_commit_batch(
+                  df, b, st, xcols=["x1", "x2"], ycol="y"),
+              lambda spark, st, out: SJ.logit_state_beta(spark, st)),
+    "pca": (lambda i: [(j, [float(j + i), float(j * j % 7), float(i)])
+                       for j in range(6)],
+            "id long, embedding array<double>",
+            lambda df, b, st, out: SJ.pca_commit_batch(df, b, st, dim=3),
+            lambda spark, st, out: SJ.pca_state_fit(spark, st, k=2)),
+    "msprt": (lambda i: [(_day(i, j), float(j * (i + 1)), j)
+                         for j in range(6)],
+              "ts timestamp, value double, user_id long",
+              lambda df, b, st, out: SJ.msprt_commit_batch(df, b, st, out),
+              lambda spark, st, out: spark.read.parquet(
+                  f"{out}/monitor_batch=3")),
+    "periodogram": (lambda i: [(_day(0, 6 * i + j), k, float(j + i))
+                               for j in range(6) for k in ("a", "b")],
+                    "ts timestamp, event_type string, value double",
+                    lambda df, b, st, out: SJ.periodogram_commit_batch(
+                        df, b, st, out, _T0),
+                    lambda spark, st, out: spark.read.parquet(
+                        f"{out}/spectrum_batch=3")),
+    "nb": (lambda i: [(3 * i + j, "aa" if j % 2 else "bb",
+                       f"tok{j} common w{i}") for j in range(3)],
+           "doc_id long, lang string, text string",
+           lambda df, b, st, out: SJ.nb_commit_batch(df, b, st),
+           lambda spark, st, out: SJ.nb_state_model(spark, st,
+                                                    min_count=1)),
+    "als": (lambda i: [(j % 3, (j + i) % 4) for j in range(8)],
+            "c long, s long",
+            lambda df, b, st, out: SJ.als_commit_batch(df, b, st),
+            lambda spark, st, out: SJ.als_state_model(spark, st)),
+}
+
+
+def _plain(x):
+    """Readouts (DataFrames, tuples of them, dicts of arrays) as
+    comparable Python values."""
+    import numpy as np
+    from pyspark.sql import DataFrame
+
+    if isinstance(x, DataFrame):
+        return sorted(map(tuple, x.collect()), key=repr)
+    if isinstance(x, dict):
+        return {k: _plain(v) for k, v in x.items()}
+    if isinstance(x, (tuple, list)):
+        return [_plain(v) for v in x]
+    if isinstance(x, np.ndarray):
+        return x.tolist()
+    return x
+
+
+@pytest.mark.parametrize("sink", sorted(PRUNE_REPLAY_CASES))
+def test_prune_then_replay_keeps_state_and_readout(spark, tmp_path, sink):
+    """Every single-phase state sink: after 4 batches and
+    prune_state_dirs(keep_last=2), replaying the newest batch (which
+    reads its predecessor) rewrites identical state, and the reader
+    returns what it returned before the prune."""
+    rows, schema, commit, read = PRUNE_REPLAY_CASES[sink]
+    state, out = str(tmp_path / "state"), str(tmp_path / "out")
+    batches = [spark.createDataFrame(rows(i), schema) for i in range(4)]
+    for bid, df in enumerate(batches):
+        commit(df, bid, state, out)
+    newest = f"{state}/state_batch=3"
+    state_rows = _plain(spark.read.parquet(newest))
+    readout = _plain(read(spark, state, out))
+    assert SJ.prune_state_dirs(spark, state, keep_last=2) == [0, 1]
+    commit(batches[3], 3, state, out)
+    assert _plain(spark.read.parquet(newest)) == state_rows
+    assert _plain(read(spark, state, out)) == readout
 
 
 def test_hll_sink_batch_stream_equivalence_and_replay(spark, tmp_path):

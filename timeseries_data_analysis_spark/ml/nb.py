@@ -51,11 +51,11 @@ def nb_fit_from_counts(pair_counts: DataFrame, label_counts: DataFrame,
                        ) -> tuple[DataFrame, DataFrame]:
     """Fit multinomial NB from the ADDITIVE sufficient statistics —
     per-(token, label) occurrence counts and per-label document
-    counts. This is the fold target of ``streaming.jobs.nb_sink``:
+    counts. This is the fold target of ``streaming.jobs.nb_commit_batch``:
     the counts merge across any split of the data by summation, so a
     model derived from stream-folded counts is IDENTICAL to one fit
     on the union in batch (integer counts → identical smoothed
-    logliks, the `periodogram_sink`/Gramian additive-state pattern).
+    logliks, the `periodogram_commit_batch`/Gramian additive-state pattern).
 
     ``pair_counts``: one row per observed (token, label) with
     ``_n_lt`` (occurrences).  ``label_counts``: one row per label with
@@ -109,7 +109,7 @@ def nb_fit(train_tokens: DataFrame, train_docs: DataFrame,
 
     Delegates to :func:`nb_fit_from_counts` over the aggregated
     sufficient statistics, so the batch fit and the streaming fold
-    (`streaming.jobs.nb_sink`) share one arithmetic path by
+    (`streaming.jobs.nb_commit_batch`) share one arithmetic path by
     construction.
     """
     pair_counts = (train_tokens.groupBy(label_col, "token")

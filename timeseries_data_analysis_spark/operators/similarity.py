@@ -345,7 +345,7 @@ def ivf_store_topk(spark, store_path: str, queries: DataFrame,
                    id_col: str = "vec_id", vec_col: str = "embedding",
                    query_id_col: str = "query_id") -> DataFrame:
     """Probed top-k over a CELL-partitioned IVF store (as written by
-    ``streaming.jobs.ivf_ingest_sink``): each query's ``n_probe``
+    ``streaming.jobs.ivf_commit_batch``): each query's ``n_probe``
     nearest cells become an IN-filter on the store's ``cell`` partition
     column, so the parquet scan reads ONLY those cells' directories —
     Spark's partition pruning IS the inverted-index lookup; no bespoke

@@ -7,7 +7,7 @@ frequencies ω_k, with C_k = Σ v·cos(ω_k·t) and S_k = Σ v·sin(ω_k·t).
 The partial sums (n, C_k, S_k) are ADDITIVE sufficient statistics
 (the `ml/pca.py` Gramian argument), so a streaming fold over
 micro-batches produces bit-equal-up-to-summation-order state to a
-one-shot batch pass — `streaming/jobs.periodogram_sink` reuses these
+one-shot batch pass — `streaming/jobs.periodogram_commit_batch` reuses these
 builders. Amplitudes are invariant to the time origin t₀ (a phase
 shift rotates (C, S) but preserves C² + S²), so a streaming twin with
 any FIXED origin reads out the same amplitudes as the batch query's

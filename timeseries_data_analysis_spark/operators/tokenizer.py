@@ -52,7 +52,7 @@ def source_token_counts(docs: DataFrame, text_col: str = "text",
     The one fact-sized stage of the unseen-vocabulary family — a
     map-side-combinable groupBy whose output is vocabulary-bounded
     (Heaps-sublinear in corpus size), shared verbatim by the batch
-    ``unseen_vocab`` query and the streaming ``vocab_sink`` state."""
+    ``unseen_vocab`` query and the streaming ``vocab_commit_batch`` state."""
     return (docs.select(
                 F.col(group_col),
                 F.explode(F.filter(
@@ -67,7 +67,7 @@ def unseen_vocab_panel(cnt: DataFrame,
     """Chao1 + Good-Turing unseen-species panel from a (group, token,
     n) count table — the estimator arithmetic shared bit-for-bit by
     the batch ``unseen_vocab`` registry row and the streaming
-    ``vocab_sink`` estimate read (the ``hll_day_panel`` sharing
+    ``vocab_state_estimate`` read (the ``hll_day_panel`` sharing
     pattern): chao1 = V + f₁(f₁−1)/(2(f₂+1)) (bias-corrected, defined
     at f₂ = 0), gt_coverage = 1 − f₁/N, unseen_frac = 1 − V/chao1.
     Exact-integer frequency-of-frequencies; single divisions; 4/6-dp

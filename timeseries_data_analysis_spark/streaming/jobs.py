@@ -19,8 +19,40 @@ Here the same semantics are real Structured Streaming jobs:
 
 Scale design: the streaming plans are the SAME DataFrame expressions as
 the batch layer (one definition, two execution modes) — batch/stream
-equivalence is a test invariant, not an aspiration. State stores stay
-bounded via watermarks; alerting state is per-key and tiny.
+equivalence is a test invariant, not an aspiration. Watermarks bound the
+state of the windowed, deduplicating and joining operators; alerting
+state is per-key and tiny.
+
+Replay-safe sinks. Each ``foreachBatch`` sink is one module-level
+``<name>_commit_batch(batch_df, batch_id, ...)`` function, started with
+:func:`run_with_foreach_batch` and ``functools.partial`` for its options
+(``benchmark_guard_sink`` is the one exception: it collects its benchmark
+matrix once, not per batch). Every commit overwrites a batch-id-keyed
+directory ``<root>/<kind>=<batch_id>`` (:func:`_overwrite_batch_dir`), so
+a batch that Structured Streaming replays after a crash before its
+checkpoint commit rewrites the same files instead of appending a second
+copy — the idempotent, batch-id-keyed sink of Armbrust et al. (SIGMOD
+2018). Two protocols build on it:
+
+* Single-phase state (hh, kll, hll, dau_panel, vocab, logit, pca, msprt,
+  periodogram, nb, als): batch N writes its complete post-merge state to
+  the ``STATE_DIR=N`` partition of its state path, computed from the
+  newest committed state with id < N (:func:`_latest_state`). The state
+  is self-contained, so a replay of N reads the same predecessor and
+  rewrites identical state. Readers take the newest id; older
+  directories are a time-travel audit and the replay predecessor
+  (:func:`prune_state_dirs` keeps at least two).
+* Two-phase ingest (exact and near-dup dedup, governance): the kept rows
+  land in ``ingest_batch=N`` first, then their index rows append stamped
+  ``_batch_id=N``, the commit marker. A replay that finds its marker is
+  a no-op (:func:`_committed`); one that does not recomputes the
+  identical rows from the unchanged index and overwrites the same
+  directory, so a crash between the two writes never doubles a document.
+
+Stateless sinks (IVF assignment, PSI metrics, the benchmark guard) only
+overwrite their batch directory. The digest and fingerprint indexes and
+the vocab/NB/ALS count tables grow with distinct documents, vocabulary
+or pairs, not with a watermark horizon.
 """
 
 from __future__ import annotations
@@ -637,6 +669,11 @@ def run_with_foreach_batch(stream_df: DataFrame,
                            checkpoint: str | None = None):
     """T3/T4 sink runner: apply ``fn(batch_df, batch_id)`` per micro-batch.
 
+    Every replay-safe sink below is started here with its commit
+    function, e.g. ``run_with_foreach_batch(stream,
+    functools.partial(hh_commit_batch, state_path=path, k=k),
+    checkpoint=ckpt)``.
+
     ``trigger_available_now=True`` drains all pending input then stops
     (used by tests and backfills); pass ``processing_time='60 seconds'``
     for the reference's cadence.
@@ -659,238 +696,26 @@ def run_with_foreach_batch(stream_df: DataFrame,
     return writer.start()
 
 
-def incremental_dedup_sink(docs_stream: DataFrame, index_path: str,
-                           out_path: str, text_col: str = "text",
-                           id_col: str = "doc_id"):
-    """Continuous-ingestion exact dedup: each micro-batch of documents is
-    checked against a PERSISTED digest index; only first-seen documents
-    land in ``out_path``, and their digests append to the index.
-
-    The 100 TB continuous-corpus shape: the index holds one 8-byte digest
-    row per distinct document ever seen (partition-prunable parquet), the
-    per-batch work is one broadcast-able anti-join of batch digests
-    against the index, and within-batch duplicates collapse before the
-    index is consulted.
-
-    Exactly-once is a two-phase commit per micro-batch, robust to a
-    crash at ANY point between the two writes (the naive
-    append-data-then-append-index pair duplicates documents if the
-    process dies between them and the checkpoint replays the batch):
-
-    1. data lands under a batch-keyed partition directory
-       ``out_path/ingest_batch=<batch_id>`` with ``overwrite`` mode —
-       a replayed batch rewrites the same directory, so a partial or
-       complete data write left by a crash is replaced, never doubled;
-    2. digests append to the index LAST, stamped with ``_batch_id`` —
-       this is the commit marker. ``process()`` first checks the index
-       for the replayed ``batch_id`` and skips fully committed batches.
-
-    Crash windows: before (1) → replay recomputes from unchanged index;
-    between (1) and (2) → replay recomputes the identical ``fresh`` set
-    (index unchanged) and overwrites the same directory; after (2) →
-    replay hits the marker and no-ops. Readers see one extra
-    ``ingest_batch`` partition column on ``out_path`` (drop it, or use
-    it to incrementally consume the cleaned corpus).
-    """
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        dedup_commit_batch(batch_df, batch_id, index_path, out_path,
-                           text_col=text_col, id_col=id_col)
-
-    return (docs_stream.writeStream.foreachBatch(process)
-            .outputMode("update"))
+# <state_path>/STATE_DIR=<batch_id> holds a single-phase sink's state.
+STATE_DIR = "state_batch"
 
 
-def ivf_ingest_sink(vec_stream: DataFrame, centroids, out_path: str,
-                    id_col: str = "vec_id", vec_col: str = "embedding"):
-    """Streaming ANN index maintenance: each micro-batch of new vectors
-    is assigned to its nearest IVF cell (broadcast centroids, the same
-    `_assign_cells` the batch query uses with ``n_probe=1``) and appended
-    to a CELL-PARTITIONED parquet store — the continuously-ingested
-    inverted file. A search then reads only its probed cells' partitions
-    (partition pruning does the inverted-index lookup), which is how an
-    ANN index absorbs a firehose at 100 TB: no global rebuild, just
-    cell-local appends; re-fitting centroids is an offline concern.
-
-    ``centroids`` is the (centroid_id, centroid) frame from
-    ``ivf_fit_centroids`` — frozen at sink creation (assignment must be
-    stable across batches for the store to stay consistent).
-
-    Replay-safe like the other ingest sinks: each batch OVERWRITES its
-    own ``ingest_batch=<batch_id>`` directory (cell-partitioned inside),
-    so a micro-batch replayed after a crash between the data write and
-    the checkpoint commit rewrites the same files instead of appending
-    duplicates. Readers see (ingest_batch, cell) partition columns; a
-    probed search still prunes on ``cell`` across every batch directory.
-    """
-    cent = centroids
-    if not isinstance(cent, DataFrame):
-        raise TypeError("centroids must be a DataFrame "
-                        "(use ivf_fit_centroids)")
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        ivf_commit_batch(batch_df, batch_id, cent, out_path,
-                         id_col=id_col, vec_col=vec_col)
-
-    return (vec_stream.writeStream.foreachBatch(process)
-            .outputMode("update"))
-
-
-def ivf_commit_batch(batch_df: DataFrame, batch_id: int,
-                     centroids: DataFrame, out_path: str,
-                     id_col: str = "vec_id",
-                     vec_col: str = "embedding") -> None:
-    """One micro-batch of :func:`ivf_ingest_sink`, module-level so tests
-    can replay it against the crash window: idempotent overwrite of the
-    batch-keyed directory."""
-    from ..operators.similarity import _assign_cells
-
-    assigned = _assign_cells(batch_df, centroids, n_probe=1,
-                             id_col=id_col, vec_col=vec_col)
-    # _assign_cells emits the vector as double-cast `_v`; store that
-    # (the cosine math downstream runs in double anyway)
-    (assigned.select(id_col, F.col("_v").alias(vec_col),
-                     F.col("centroid_id").alias("cell"))
-     # cell-keyed repartition before the dynamic-partition write: the
-     # assignment window collapses to one AQE partition and a single
-     # task would write every cell's file serially (guide §6); hashing
-     # on cell keeps exactly one file per cell per batch directory
-     .repartition(batch_df.sparkSession.sparkContext.defaultParallelism,
-                  "cell")
-     .write.mode("overwrite").partitionBy("cell")
-     .parquet(f"{out_path}/ingest_batch={batch_id}"))
-
-
-def governance_transform(docs: DataFrame, text_col: str = "text",
-                         min_quality: float = 0.3) -> DataFrame:
-    """The batch form of the corpus-governance gate: drop documents below
-    ``min_quality`` (the composite quality score), redact PII in the
-    surviving text, and annotate the detected language. Pure projection +
-    filter (JVM regex, no shuffle) — identical semantics in batch and in
-    every micro-batch, which is what makes the streaming sink's
-    batch/stream equivalence testable."""
-    from ..functions import text as TX
-
-    q = TX.quality_score(text_col)
-    return (docs.filter(q >= F.lit(min_quality))
-            .withColumn(text_col, TX.pii_scrub(text_col))
-            .withColumn("_lang", TX.lang_id(text_col)))
-
-
-def governance_ingest_sink(docs_stream: DataFrame, index_path: str,
-                           out_path: str, text_col: str = "text",
-                           id_col: str = "doc_id",
-                           min_quality: float = 0.3):
-    """Continuous corpus ingestion with the FULL governance gate: each
-    micro-batch is quality-filtered, PII-scrubbed, language-annotated,
-    and exact-deduplicated against the persisted digest index — the
-    composed end-to-end shape of a production training-data intake.
-
-    Ordering matters and is deliberate: the digest is computed on the
-    SCRUBBED text, so two documents that differ only in redacted PII
-    (mirror pages with different contact footers) collapse as exact
-    duplicates. Reuses :func:`dedup_commit_batch`'s two-phase commit, so
-    the crash-window guarantees are identical to the plain dedup sink.
-    """
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        gated = governance_transform(batch_df, text_col=text_col,
-                                     min_quality=min_quality)
-        dedup_commit_batch(gated, batch_id, index_path, out_path,
-                           text_col=text_col, id_col=id_col)
-
-    return (docs_stream.writeStream.foreachBatch(process)
-            .outputMode("update"))
-
-
-def incremental_neardup_sink(docs_stream: DataFrame, index_path: str,
-                             out_path: str, text_col: str = "text",
-                             id_col: str = "doc_id", n: int = 2,
-                             bits: int = 48, bands: int = 4,
-                             max_hamming: int = 3, hex_digits: int = 12):
-    """Continuous-ingestion NEAR-dup suppression: the SimHash complement
-    to :func:`incremental_dedup_sink`. Each micro-batch is fingerprinted
-    (48-bit production width), collapsed within-batch (banding pairs →
-    connected components, min-id representative survives), then checked
-    against a PERSISTED fingerprint index by cross-frame banding — any
-    document within ``max_hamming`` of an already-kept document is
-    dropped; survivors land batch-keyed and their fingerprints append as
-    the commit marker (same crash-safe two-phase commit as the exact
-    sink: see :func:`incremental_dedup_sink`'s protocol notes).
-
-    100 TB shape: the index holds one (id, 8-byte fingerprint) row per
-    kept document; per batch the banding equi-join touches only index
-    chunks a probe chunk collides with, never the full index.
-    """
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        neardup_commit_batch(batch_df, batch_id, index_path, out_path,
-                             text_col=text_col, id_col=id_col, n=n,
-                             bits=bits, bands=bands,
-                             max_hamming=max_hamming,
-                             hex_digits=hex_digits)
-
-    return (docs_stream.writeStream.foreachBatch(process)
-            .outputMode("update"))
-
-
-def neardup_commit_batch(batch_df: DataFrame, batch_id: int,
-                         index_path: str, out_path: str,
-                         text_col: str = "text", id_col: str = "doc_id",
-                         n: int = 2, bits: int = 48, bands: int = 4,
-                         max_hamming: int = 3,
-                         hex_digits: int = 12) -> None:
-    """One micro-batch of :func:`incremental_neardup_sink` (module-level
-    so tests can replay explicit crash windows)."""
-    from ..operators.dedup import (simhash_fingerprints,
-                                   simhash_hamming_pairs,
-                                   simhash_cross_matches)
-    from ..operators.graph import dedup_clusters
-
-    spark = batch_df.sparkSession
-    index_fp = None
-    index = _read_state_or_none(spark, index_path)
-    if index is not None:
-        if ("_batch_id" in index.columns
-                and index.where(F.col("_batch_id") == batch_id)
-                .limit(1).count() > 0):
-            return                      # commit marker present: replayed
-        index_fp = index.select("_id", "_fp")
-    # within-batch collapse: near-dup pairs → components → min-id keeps
-    pairs = simhash_hamming_pairs(batch_df, text_col, id_col, n=n,
-                                  bits=bits, bands=bands,
-                                  max_hamming=max_hamming,
-                                  hex_digits=hex_digits)
-    drop = (dedup_clusters(pairs)
-            .filter(F.col("cluster_id") != F.col("doc_id"))
-            .select(F.col("doc_id").alias(id_col)))
-    kept = batch_df.join(drop, on=id_col, how="left_anti")
-    kept_fp = simhash_fingerprints(kept, text_col, id_col, n=n,
-                                   bits=bits, hex_digits=hex_digits)
-    if index_fp is not None:
-        hits = (simhash_cross_matches(kept_fp, index_fp, bits=bits,
-                                      bands=bands, max_hamming=max_hamming)
-                .select(F.col("probe_id").alias(id_col)).distinct())
-        kept = kept.join(hits, on=id_col, how="left_anti")
-        kept_fp = kept_fp.join(
-            hits.select(F.col(id_col).alias("_id")), on="_id",
-            how="left_anti")
-    kept = kept.localCheckpoint()
-    if kept.isEmpty():
-        return
-    kept_fp = kept_fp.localCheckpoint()
-    # phase 1: idempotent data write (batch-keyed dir, overwrite)
-    (kept.write.mode("overwrite")
-     .parquet(f"{out_path}/ingest_batch={batch_id}"))
-    # phase 2: commit marker — fingerprints stamped with the batch id
-    (kept_fp.withColumn("_batch_id", F.lit(batch_id))
-     .write.mode("append").parquet(index_path))
+def _overwrite_batch_dir(df: DataFrame, root: str, kind: str,
+                         batch_id: int, *partition_cols: str) -> None:
+    """The one write of every sink: ``df`` replaces
+    ``<root>/<kind>=<batch_id>``, so a replayed batch rewrites its own
+    directory instead of appending a second copy."""
+    (df.write.mode("overwrite").partitionBy(*partition_cols)
+     .parquet(f"{root}/{kind}={batch_id}"))
 
 
 def _read_state_or_none(spark, path: str):
     """Read a parquet state store, returning ``None`` ONLY when the path
     does not exist yet (the first-batch probe). Any other read failure
     (IO/permission/corrupt state) propagates — silently treating it as
-    "first batch" would reset a dedup index without signal and let
-    duplicates through, breaking the crash-replay safety story (same
-    contract as :func:`hh_commit_batch`'s narrow except)."""
+    "first batch" would reset a dedup index or a sketch without signal,
+    breaking the crash-replay safety story. This is the one place that
+    knows Spark's missing-path message."""
     from pyspark.errors import AnalysisException
 
     try:
@@ -902,47 +727,65 @@ def _read_state_or_none(spark, path: str):
         return None
 
 
-def _latest_state_before(spark, state_path: str, batch_id: int):
-    """Newest committed ``state_batch=<id>`` partition with
-    id < batch_id, or ``None`` on the first batch — the shared read
-    side of EVERY single-phase state sink (a crash-replay of batch N
-    reads N's predecessor and recommits deterministically). The
-    only-path-not-found-means-first-batch contract lives in ONE place
-    (:func:`_read_state_or_none`), so a Spark-version change to the
-    missing-path message is a one-line fix, not a per-sink hunt."""
+def _latest_state(spark, state_path: str, before: int | None = None):
+    """Rows of the newest committed ``STATE_DIR`` partition under
+    ``state_path`` (the newest with id < ``before`` when given), without
+    the partition column. Commit functions pass ``before=batch_id`` and
+    get ``None`` on their first batch; readers pass nothing and raise
+    ``FileNotFoundError`` when nothing is committed yet."""
     store = _read_state_or_none(spark, state_path)
-    if store is None:
-        return None
-    ids = [r["state_batch"] for r in
-           store.select("state_batch").distinct().collect()
-           if r["state_batch"] < batch_id]
-    if not ids:
-        return None
-    return store.where(F.col("state_batch") == max(ids))
+    if store is not None:
+        ids = store.select(STATE_DIR)
+        if before is not None:
+            ids = ids.where(F.col(STATE_DIR) < before)
+        newest = ids.agg(F.max(STATE_DIR)).collect()[0][0]
+        if newest is not None:
+            return store.where(F.col(STATE_DIR) == newest).drop(STATE_DIR)
+    if before is None:
+        raise FileNotFoundError(f"no committed state under {state_path}")
+    return None
+
+
+def _committed(index: DataFrame, batch_id: int) -> bool:
+    """Two-phase replay check: is batch ``batch_id``'s commit marker in
+    the index? ``isEmpty()``, not ``limit(1).count()``: Spark names limit
+    counters from a JVM-global sequence, so the latter compiles new
+    classes on every micro-batch."""
+    return ("_batch_id" in index.columns
+            and not index.where(F.col("_batch_id") == batch_id).isEmpty())
+
+
+def _commit_two_phase(data: DataFrame, index_rows: DataFrame,
+                      out_path: str, index_path: str, batch_id: int) -> None:
+    """Phase 1 overwrites ``ingest_batch=<batch_id>``; phase 2 appends
+    the index rows stamped ``_batch_id``, the commit marker."""
+    _overwrite_batch_dir(data, out_path, "ingest_batch", batch_id)
+    (index_rows.withColumn("_batch_id", F.lit(batch_id))
+     .write.mode("append").parquet(index_path))
 
 
 def dedup_commit_batch(batch_df: DataFrame, batch_id: int,
                        index_path: str, out_path: str,
                        text_col: str = "text",
                        id_col: str = "doc_id") -> None:
-    """One micro-batch of :func:`incremental_dedup_sink`'s two-phase
-    commit, module-level so tests can replay it against explicit crash
-    windows. See the sink docstring for the protocol.
+    """Continuous-ingestion exact dedup (two-phase): only documents whose
+    digest is not in the PERSISTED digest index land in ``out_path``,
+    and their digests append to the index.
+
+    The 100 TB continuous-corpus shape: the index holds one 8-byte digest
+    row per distinct document ever seen, the per-batch work is one
+    broadcast-able anti-join of batch digests against the index, and
+    within-batch duplicates collapse (min id kept) before the index is
+    consulted. Readers see one extra ``ingest_batch`` partition column
+    on ``out_path`` (drop it, or use it to consume the cleaned corpus
+    incrementally).
     """
     from ..operators.dedup import text_digest
 
     spark = batch_df.sparkSession
-    index_d = None
     index = _read_state_or_none(spark, index_path)
-    if index is not None:
-        # replay fast-path: the index append is the commit marker, so a
-        # batch_id already present means this batch fully committed
-        # before a restart.
-        if ("_batch_id" in index.columns
-                and index.where(F.col("_batch_id") == batch_id)
-                .limit(1).count() > 0):
-            return
-        index_d = index.select("_digest")
+    if index is not None and _committed(index, batch_id):
+        return
     batch = (batch_df
              .withColumn("_digest", text_digest(text_col)))
     # collapse within-batch dups first (keep min id, like exact_dedup)
@@ -952,65 +795,167 @@ def dedup_commit_batch(batch_df: DataFrame, batch_id: int,
                         (batch["_digest"] == w_first["_digest"])
                         & (batch[id_col] == w_first["_keep"]))
              .select(batch["*"]))
-    if index_d is not None:
-        fresh = batch.join(index_d, on="_digest", how="left_anti")
+    if index is not None:
+        fresh = batch.join(index.select("_digest"), on="_digest",
+                           how="left_anti")
     else:
         fresh = batch
     fresh = fresh.localCheckpoint()  # index append must not re-read out
     if fresh.isEmpty():
         return
-    # phase 1: idempotent data write (batch-keyed dir, overwrite)
-    (fresh.drop("_digest").write.mode("overwrite")
-     .parquet(f"{out_path}/ingest_batch={batch_id}"))
-    # phase 2: commit marker — digest rows stamped with the batch id
-    (fresh.select("_digest").withColumn("_batch_id", F.lit(batch_id))
-     .write.mode("append").parquet(index_path))
+    _commit_two_phase(fresh.drop("_digest"), fresh.select("_digest"),
+                      out_path, index_path, batch_id)
 
 
-def heavy_hitters_sink(item_stream: DataFrame, state_path: str,
-                       item_col: str = "item", k: int = 2000):
-    """Streaming frequent-items maintenance: a persisted Misra-Gries
-    summary of size ``k`` merged with every micro-batch's exact counts
-    — the continuous form of ``operators.sketch.heavy_hitters``. State
-    is ≤ k (item, weight) rows plus the running stream length, so the
-    store stays sketch-sized forever while the stream is unbounded; the
-    mergeable-summaries bound (Agarwal et al., PODS'12) holds across
-    batches: any item's true count is in ``[weight, weight + N/(k+1)]``
-    and every item with true count > N/(k+1) is present.
+def ivf_commit_batch(batch_df: DataFrame, batch_id: int,
+                     centroids: DataFrame, out_path: str,
+                     id_col: str = "vec_id",
+                     vec_col: str = "embedding") -> None:
+    """Streaming ANN index maintenance: each micro-batch of new vectors
+    is assigned to its nearest IVF cell (broadcast centroids, the same
+    `_assign_cells` the batch query uses with ``n_probe=1``) and written
+    to a CELL-PARTITIONED parquet store — the continuously-ingested
+    inverted file. A search reads only its probed cells' partitions
+    (partition pruning does the inverted-index lookup): no global
+    rebuild, just cell-local writes; re-fitting centroids is an offline
+    concern.
 
-    Replay safety is SINGLE-phase here because the state is
-    self-contained (unlike the dedup index, nothing else must stay in
-    step with it): each batch writes its complete post-merge summary to
-    ``state_path/state_batch=<batch_id>`` with overwrite, always
-    computed from the latest committed state with id < batch_id. A
-    crash between the state write and the checkpoint commit replays the
-    batch, which recomputes the identical summary from the same
-    predecessor and rewrites the same directory. Read the live summary
-    with :func:`heavy_hitters_state`.
-
-    Old state dirs are retained (each is ≤ k rows; they double as a
-    time-travel audit of the sketch) — a retention job can drop all but
-    the max id.
+    ``centroids`` is the (centroid_id, centroid) frame from
+    ``ivf_fit_centroids``, frozen for the life of the stream (assignment
+    must be stable across batches for the store to stay consistent).
+    Readers see (ingest_batch, cell) partition columns; a probed search
+    still prunes on ``cell`` across every batch directory.
     """
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        hh_commit_batch(batch_df, batch_id, state_path,
-                        item_col=item_col, k=k)
+    from ..operators.similarity import _assign_cells
 
-    return (item_stream.writeStream.foreachBatch(process)
-            .outputMode("update"))
+    if not isinstance(centroids, DataFrame):
+        raise TypeError("centroids must be a DataFrame "
+                        "(use ivf_fit_centroids)")
+    assigned = _assign_cells(batch_df, centroids, n_probe=1,
+                             id_col=id_col, vec_col=vec_col)
+    # _assign_cells emits the vector as double-cast `_v`; store that
+    # (the cosine math downstream runs in double anyway)
+    cells = (assigned.select(id_col, F.col("_v").alias(vec_col),
+                             F.col("centroid_id").alias("cell"))
+             # cell-keyed repartition before the dynamic-partition
+             # write: the assignment window collapses to one AQE
+             # partition and a single task would write every cell's
+             # file serially (guide §6); hashing on cell keeps exactly
+             # one file per cell per batch directory
+             .repartition(batch_df.sparkSession.sparkContext
+                          .defaultParallelism, "cell"))
+    _overwrite_batch_dir(cells, out_path, "ingest_batch", batch_id, "cell")
+
+
+def governance_transform(docs: DataFrame, text_col: str = "text",
+                         min_quality: float = 0.3) -> DataFrame:
+    """The batch form of the corpus-governance gate: drop documents below
+    ``min_quality`` (the composite quality score), redact PII in the
+    surviving text, and annotate the detected language. Pure projection +
+    filter (JVM regex, no shuffle) — identical semantics in batch and in
+    every micro-batch, which is what makes the streaming intake's
+    batch/stream equivalence testable."""
+    from ..functions import text as TX
+
+    q = TX.quality_score(text_col)
+    return (docs.filter(q >= F.lit(min_quality))
+            .withColumn(text_col, TX.pii_scrub(text_col))
+            .withColumn("_lang", TX.lang_id(text_col)))
+
+
+def governance_commit_batch(batch_df: DataFrame, batch_id: int,
+                            index_path: str, out_path: str,
+                            text_col: str = "text", id_col: str = "doc_id",
+                            min_quality: float = 0.3) -> None:
+    """Continuous corpus ingestion with the FULL governance gate: each
+    micro-batch is quality-filtered, PII-scrubbed, language-annotated
+    (:func:`governance_transform`), then exact-deduplicated against the
+    persisted digest index by :func:`dedup_commit_batch`'s two-phase
+    commit. The digest is computed on the SCRUBBED text, so two
+    documents that differ only in redacted PII (mirror pages with
+    different contact footers) collapse as exact duplicates."""
+    dedup_commit_batch(governance_transform(batch_df, text_col=text_col,
+                                            min_quality=min_quality),
+                       batch_id, index_path, out_path,
+                       text_col=text_col, id_col=id_col)
+
+
+def neardup_commit_batch(batch_df: DataFrame, batch_id: int,
+                         index_path: str, out_path: str,
+                         text_col: str = "text", id_col: str = "doc_id",
+                         n: int = 2, bits: int = 48, bands: int = 4,
+                         max_hamming: int = 3,
+                         hex_digits: int = 12) -> None:
+    """Continuous-ingestion NEAR-dup suppression (two-phase), the SimHash
+    complement to :func:`dedup_commit_batch`. Each micro-batch is
+    fingerprinted (48-bit production width), collapsed within-batch
+    (banding pairs → connected components, min-id representative
+    survives), then checked against a PERSISTED fingerprint index by
+    cross-frame banding: any document within ``max_hamming`` of an
+    already-kept document is dropped. Survivors land batch-keyed and
+    their fingerprints append as the commit marker.
+
+    100 TB shape: the index holds one (id, 8-byte fingerprint) row per
+    kept document; per batch the banding equi-join touches only index
+    chunks a probe chunk collides with, never the full index.
+    """
+    from ..operators.dedup import (simhash_fingerprints,
+                                   simhash_hamming_pairs,
+                                   simhash_cross_matches)
+    from ..operators.graph import dedup_clusters
+
+    spark = batch_df.sparkSession
+    index = _read_state_or_none(spark, index_path)
+    if index is not None and _committed(index, batch_id):
+        return
+    # within-batch collapse: near-dup pairs → components → min-id keeps
+    pairs = simhash_hamming_pairs(batch_df, text_col, id_col, n=n,
+                                  bits=bits, bands=bands,
+                                  max_hamming=max_hamming,
+                                  hex_digits=hex_digits)
+    drop = (dedup_clusters(pairs)
+            .filter(F.col("cluster_id") != F.col("doc_id"))
+            .select(F.col("doc_id").alias(id_col)))
+    kept = batch_df.join(drop, on=id_col, how="left_anti")
+    kept_fp = simhash_fingerprints(kept, text_col, id_col, n=n,
+                                   bits=bits, hex_digits=hex_digits)
+    if index is not None:
+        hits = (simhash_cross_matches(kept_fp, index.select("_id", "_fp"),
+                                      bits=bits, bands=bands,
+                                      max_hamming=max_hamming)
+                .select(F.col("probe_id").alias(id_col)).distinct())
+        kept = kept.join(hits, on=id_col, how="left_anti")
+        kept_fp = kept_fp.join(
+            hits.select(F.col(id_col).alias("_id")), on="_id",
+            how="left_anti")
+    kept = kept.localCheckpoint()
+    if kept.isEmpty():
+        return
+    _commit_two_phase(kept, kept_fp.localCheckpoint(),
+                      out_path, index_path, batch_id)
 
 
 def hh_commit_batch(batch_df: DataFrame, batch_id: int, state_path: str,
                     item_col: str = "item", k: int = 2000) -> None:
-    """One micro-batch of :func:`heavy_hitters_sink`, module-level so
-    tests can replay it against the crash window."""
+    """Streaming frequent-items maintenance: a persisted Misra-Gries
+    summary of size ``k`` merged with every micro-batch's exact counts
+    — the continuous form of ``operators.sketch.heavy_hitters``. The
+    mergeable-summaries bound (Agarwal et al., PODS'12) holds across
+    batches: any item's true count is in ``[weight, weight + N/(k+1)]``
+    and every item with true count > N/(k+1) is present.
 
+    State is ≤ k (item, weight) rows plus one NULL-item row, all
+    carrying the running stream length ``_total``. Compression can drop
+    every item row (the k+1 largest weights tie), and an empty batch
+    has none, so the NULL-item row is what keeps ``_total``; input NULL
+    items are dropped, so it never collides with an item. Read the live
+    summary with :func:`heavy_hitters_state`."""
     spark = batch_df.sparkSession
     prev = None
     prev_total = 0
-    st = _latest_state_before(spark, state_path, batch_id)
+    st = _latest_state(spark, state_path, before=batch_id)
     if st is not None:
-        prev = st.select("item", "weight")
+        prev = st.where(F.col("item").isNotNull()).select("item", "weight")
         prev_total = (st.select(F.max("_total")).collect()[0][0]) or 0
 
     items = (batch_df.select(F.col(item_col).alias("item"))
@@ -1029,22 +974,24 @@ def hh_commit_batch(batch_df: DataFrame, batch_id: int, state_path: str,
         merged = (merged.filter(F.col("weight") > cut)
                   .select("item", (F.col("weight") - F.lit(cut))
                           .alias("weight")))
-    (merged.withColumn("_total", F.lit(prev_total + batch_n))
-     .write.mode("overwrite")
-     .parquet(f"{state_path}/state_batch={batch_id}"))
+    total_row = spark.range(1).select(
+        F.lit(None).cast(items.schema["item"].dataType).alias("item"),
+        F.lit(0).cast("long").alias("weight"))
+    _overwrite_batch_dir(
+        merged.unionByName(total_row)
+        .withColumn("_total", F.lit(prev_total + batch_n)),
+        state_path, STATE_DIR, batch_id)
 
 
 def heavy_hitters_state(spark: SparkSession, state_path: str,
                         threshold_inv: int | None = None) -> DataFrame:
-    """Latest committed summary from :func:`heavy_hitters_sink`:
+    """Latest committed summary from :func:`hh_commit_batch`:
     ``(item, weight, _total)``, optionally filtered to items whose
     LOWER-bound count already clears support 1/``threshold_inv`` (no
     false positives under the MG undercount)."""
-    store = spark.read.parquet(state_path)
-    latest = (store.agg(F.max("state_batch").alias("b"))
-              .collect()[0]["b"])
-    out = store.where(F.col("state_batch") == latest) \
-        .select("item", "weight", "_total")
+    out = (_latest_state(spark, state_path)
+           .where(F.col("item").isNotNull())
+           .select("item", "weight", "_total"))
     if threshold_inv is not None:
         out = out.filter(
             F.col("weight") * F.lit(threshold_inv) > F.col("_total"))
@@ -1056,8 +1003,8 @@ def psi_reference(df: DataFrame, key_col: str = "event_type",
     """Frozen PSI reference: per key the decile edges AND the reference
     bin counts, one row per key with two arrays — the fit/monitor split
     (same posture as `cusum_stream`'s frozen baseline). Compute this on
-    the training window ONCE; the sink scores every micro-batch against
-    it without ever rescanning history."""
+    the training window ONCE; :func:`psi_commit_batch` scores every
+    micro-batch against it without ever rescanning history."""
     edges = (df.filter(F.col(value_col).isNotNull())
              .groupBy(key_col)
              .agg(F.percentile(value_col,
@@ -1111,64 +1058,19 @@ def psi_scores(batch_df: DataFrame, reference: DataFrame,
             .select(key_col, "n_cur", "psi"))
 
 
-def psi_drift_sink(value_stream: DataFrame, reference: DataFrame,
-                   out_path: str, key_col: str = "event_type",
-                   value_col: str = "value"):
-    """Streaming distribution-drift monitor: every micro-batch is PSI-
-    scored against the frozen reference and the per-key scores land in
-    ``out_path/metrics_batch=<batch_id>`` (overwrite — the single-phase
-    replay-safe layout: a replayed batch recomputes the identical
-    scores from the same frozen reference and rewrites its own
-    directory). The metrics store is what pages the on-call: read it,
-    filter psi ≥ 0.2, alert."""
-    ref = reference
-    if not isinstance(ref, DataFrame):
-        raise TypeError("reference must be a psi_reference() DataFrame")
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        psi_commit_batch(batch_df, batch_id, ref, out_path,
-                         key_col=key_col, value_col=value_col)
-
-    return (value_stream.writeStream.foreachBatch(process)
-            .outputMode("update"))
-
-
 def psi_commit_batch(batch_df: DataFrame, batch_id: int,
                      reference: DataFrame, out_path: str,
                      key_col: str = "event_type",
                      value_col: str = "value") -> None:
-    """One micro-batch of :func:`psi_drift_sink`, module-level so tests
-    can replay it against the crash window."""
-    scores = psi_scores(batch_df, reference, key_col, value_col)
-    (scores.write.mode("overwrite")
-     .parquet(f"{out_path}/metrics_batch={batch_id}"))
-
-
-def quantile_sketch_sink(value_stream: DataFrame, state_path: str,
-                         key_col: str = "event_type",
-                         value_col: str = "value", k: int = 256):
-    """Streaming QUANTILE maintenance: a persisted deterministic
-    Munro-Paterson sketch (``operators/sketch.py``) merged with every
-    micro-batch — the continuous form of ``kll_day_partials`` and the
-    quantile leg of the streaming sketch family (dedup index, MG heavy
-    hitters, PSI). State is ≤ ``k`` weighted (value, level) rows per
-    key forever, while the stream is unbounded; the rank-error budget
-    grows only with the number of COMPACTIONS (each adds ≤ 2^h), never
-    with stream length directly.
-
-    Replay safety is the single-phase `heavy_hitters_sink` contract:
-    each batch writes its complete post-merge state to
-    ``state_path/state_batch=<batch_id>`` computed from the latest
-    committed state with id < batch_id — a crash-replayed batch
-    recomputes the identical state from the same predecessor. Read
-    quantile estimates with :func:`quantile_sketch_state_read`.
-    """
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        kll_commit_batch(batch_df, batch_id, state_path,
-                         key_col=key_col, value_col=value_col, k=k)
-
-    return (value_stream.writeStream.foreachBatch(process)
-            .outputMode("update"))
+    """Streaming distribution-drift monitor: every micro-batch is PSI-
+    scored (:func:`psi_scores`) against the frozen reference and the
+    per-key scores land in ``out_path/metrics_batch=<batch_id>``. The
+    metrics store is what pages the on-call: read it, filter
+    psi ≥ 0.2, alert."""
+    if not isinstance(reference, DataFrame):
+        raise TypeError("reference must be a psi_reference() DataFrame")
+    _overwrite_batch_dir(psi_scores(batch_df, reference, key_col, value_col),
+                         out_path, "metrics_batch", batch_id)
 
 
 def _kll_compact(items: list, k: int) -> list:
@@ -1205,15 +1107,20 @@ def _kll_compact(items: list, k: int) -> list:
 def kll_commit_batch(batch_df: DataFrame, batch_id: int, state_path: str,
                      key_col: str = "event_type",
                      value_col: str = "value", k: int = 256) -> None:
-    """One micro-batch of :func:`quantile_sketch_sink`, module-level so
-    tests can replay it against the crash window."""
+    """Streaming QUANTILE maintenance: a persisted deterministic
+    Munro-Paterson sketch (``operators/sketch.py``) merged with every
+    micro-batch — the continuous form of ``kll_day_partials``. State is
+    ≤ ``k`` weighted (value, level) rows per key forever, while the
+    stream is unbounded; the rank-error budget grows only with the
+    number of COMPACTIONS (each adds ≤ 2^h), never with stream length
+    directly. Read estimates with :func:`quantile_sketch_state_read`."""
     import pandas as pd
 
     from timeseries_data_analysis_spark.operators.sketch import (
         quantile_sketch_state)
 
     spark = batch_df.sparkSession
-    st = _latest_state_before(spark, state_path, batch_id)
+    st = _latest_state(spark, state_path, before=batch_id)
     prev = None if st is None else st.select("key", "h", "value")
 
     batch_state = (quantile_sketch_state(
@@ -1233,8 +1140,7 @@ def kll_commit_batch(batch_df: DataFrame, batch_id: int, state_path: str,
     out = (merged.groupBy("key")
            .applyInPandas(compact, "key string, value double, h int")
            .localCheckpoint())
-    (out.write.mode("overwrite")
-     .parquet(f"{state_path}/state_batch={batch_id}"))
+    _overwrite_batch_dir(out, state_path, STATE_DIR, batch_id)
 
 
 def quantile_sketch_state_read(spark: SparkSession, state_path: str,
@@ -1246,10 +1152,8 @@ def quantile_sketch_state_read(spark: SparkSession, state_path: str,
     (≈ rows seen, minus boundary truncation)."""
     from timeseries_data_analysis_spark.operators.sketch import (
         merged_quantile_estimates)
-    store = spark.read.parquet(state_path)
-    latest = store.agg(F.max("state_batch").alias("b")).collect()[0]["b"]
-    state = store.where(F.col("state_batch") == latest)
-    return merged_quantile_estimates(state, ["key"], probs)
+    return merged_quantile_estimates(_latest_state(spark, state_path),
+                                     ["key"], probs)
 
 
 def stream_stream_interval_join(clicks: DataFrame, purchases: DataFrame,
@@ -1285,16 +1189,15 @@ def stream_stream_interval_join(clicks: DataFrame, purchases: DataFrame,
 
 def prune_state_dirs(spark: SparkSession, state_path: str,
                      keep_last: int = 3) -> list[int]:
-    """Retention for EVERY single-phase ``state_batch=<id>`` sink —
-    `heavy_hitters_sink`, `quantile_sketch_sink`, `hll_sink`,
-    `pca_sink`, `msprt_sink`, `periodogram_sink` all share the layout
-    and the contract: drop all but the newest ``keep_last``
+    """Retention for EVERY single-phase state sink (the ``STATE_DIR``
+    layout of hh, kll, hll, dau_panel, vocab, logit, pca, msprt,
+    periodogram, nb and als): drop all but the newest ``keep_last``
     directories. The newest dir is all a reader ever needs; older dirs
     exist only as a time-travel audit and as the crash-replay
     predecessor, so ``keep_last`` must be ≥ 2 (the replay of batch N
-    reads the newest id < N — prune-then-replay is test-pinned for the
-    sketch and spectral sinks). Uses the Hadoop FileSystem API, so it
-    works on any storage scheme the session can reach.
+    reads the newest id < N — prune-then-replay is test-pinned for all
+    eleven). Uses the Hadoop FileSystem API, so it works on any storage
+    scheme the session can reach.
 
     Returns the batch ids it deleted (sorted).
     """
@@ -1310,7 +1213,7 @@ def prune_state_dirs(spark: SparkSession, state_path: str,
     ids = []
     for st in fs.listStatus(path):
         name = st.getPath().getName()
-        if name.startswith("state_batch="):
+        if name.startswith(f"{STATE_DIR}="):
             try:
                 ids.append(int(name.split("=", 1)[1]))
             except ValueError:
@@ -1318,46 +1221,25 @@ def prune_state_dirs(spark: SparkSession, state_path: str,
     doomed = sorted(ids)[:-keep_last] if len(ids) > keep_last else []
     for bid in doomed:
         fs.delete(jvm.org.apache.hadoop.fs.Path(
-            state_path, f"state_batch={bid}"), True)
+            state_path, f"{STATE_DIR}={bid}"), True)
     return doomed
 
 
-def hll_sink(item_stream: DataFrame, state_path: str,
-             group_col: str = "event_type", item_col: str = "item",
-             p: int = 9):
+def hll_commit_batch(batch_df: DataFrame, batch_id: int, state_path: str,
+                     group_col: str = "event_type",
+                     item_col: str = "item", p: int = 9) -> None:
     """Streaming distinct-count maintenance: a persisted HyperLogLog
     register table merged with every micro-batch — the continuous form
     of ``operators.sketch.hll_registers``. State is ≤ 2^p (group,
     bucket, ρ) rows per group FOREVER while the stream is unbounded,
     and the merge is the sketch's own MAX law, so batch boundaries are
     invisible: the post-merge state equals the state of one batch over
-    the union (register-exact, property-tested).
-
-    Replay safety is single-phase like :func:`heavy_hitters_sink` —
-    each batch writes its complete post-merge registers to
-    ``state_path/state_batch=<batch_id>`` computed from the newest
-    committed state with id < batch_id; a crash-replay recomputes the
-    identical registers (MAX is idempotent) and rewrites the same dir.
-    Read the live estimate with :func:`hll_state_estimate`.
-    """
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        hll_commit_batch(batch_df, batch_id, state_path,
-                         group_col=group_col, item_col=item_col, p=p)
-
-    return (item_stream.writeStream.foreachBatch(process)
-            .outputMode("update"))
-
-
-def hll_commit_batch(batch_df: DataFrame, batch_id: int, state_path: str,
-                     group_col: str = "event_type",
-                     item_col: str = "item", p: int = 9) -> None:
-    """One micro-batch of :func:`hll_sink`, module-level so tests can
-    replay it against the crash window."""
-
+    the union (register-exact, property-tested). Read the live estimate
+    with :func:`hll_state_estimate`."""
     from ..operators import sketch as SK
 
     spark = batch_df.sparkSession
-    st = _latest_state_before(spark, state_path, batch_id)
+    st = _latest_state(spark, state_path, before=batch_id)
     prev = None if st is None else st.select(group_col, "_b", "_m")
 
     regs = SK.hll_registers(
@@ -1366,60 +1248,35 @@ def hll_commit_batch(batch_df: DataFrame, batch_id: int, state_path: str,
     merged = regs if prev is None else (
         regs.unionByName(prev).groupBy(group_col, "_b")
         .agg(F.max("_m").alias("_m")))
-    (merged.write.mode("overwrite")
-     .parquet(f"{state_path}/state_batch={batch_id}"))
+    _overwrite_batch_dir(merged, state_path, STATE_DIR, batch_id)
 
 
 def hll_state_estimate(spark: SparkSession, state_path: str,
                        group_col: str = "event_type",
                        p: int = 9) -> DataFrame:
-    """Latest committed estimate from :func:`hll_sink`:
+    """Latest committed estimate from :func:`hll_commit_batch`:
     ``(group, hll_estimate)`` via the same harmonic-mean arithmetic the
     batch operator uses — a batch job over the union of all data and
     this read see identical numbers."""
     from ..operators import sketch as SK
 
-    store = spark.read.parquet(state_path)
-    latest = (store.agg(F.max("state_batch").alias("b"))
-              .collect()[0]["b"])
-    regs = (store.where(F.col("state_batch") == latest)
-            .select(group_col, "_b", "_m"))
+    regs = _latest_state(spark, state_path).select(group_col, "_b", "_m")
     return SK.hll_estimates(regs, group_col, p=p)
-
-
-def dau_panel_sink(event_stream: DataFrame, state_path: str,
-                   ts_col: str = "ts", user_col: str = "user_id",
-                   p: int = 9):
-    """Streaming DAU/WAU/MAU maintenance — the serving twin of the
-    batch `dau_wau_mau_hll` panel (ref anchor: reference
-    ``dashboard.py:723`` nunique serving reads on a 60 s trigger):
-    per-DAY HyperLogLog registers persist as sketch state (≤ 2^p rows
-    per day FOREVER), each micro-batch MAX-merges its day partials
-    into them (day keys are just the group column of
-    :func:`hll_sink`'s machinery — one commit path, no new merge
-    law), and the 1/7/30-day estimates read sketch state only via
-    :func:`dau_panel_estimate` — raw history is never rescanned.
-    Replay safety is single-phase like :func:`hll_sink`: MAX is
-    idempotent, so a crash-replay rewrites the identical registers.
-    Batch/stream equality is structural: the estimate calls the SAME
-    ``operators.sketch.hll_day_panel`` the batch row uses, over
-    registers that equal one batch sketch of the union by the merge
-    law (test-pinned bit-for-bit at every micro-batch prefix)."""
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        dau_panel_commit_batch(batch_df, batch_id, state_path,
-                               ts_col=ts_col, user_col=user_col, p=p)
-
-    return (event_stream.writeStream.foreachBatch(process)
-            .outputMode("update"))
 
 
 def dau_panel_commit_batch(batch_df: DataFrame, batch_id: int,
                            state_path: str, ts_col: str = "ts",
                            user_col: str = "user_id",
                            p: int = 9) -> None:
-    """One micro-batch of :func:`dau_panel_sink`, module-level so
-    tests can replay it against the crash window: derive the day key,
-    then commit through the shared day-keyed HLL state machinery."""
+    """Streaming DAU/WAU/MAU maintenance — the serving twin of the
+    batch `dau_wau_mau_hll` panel (ref anchor: reference
+    ``dashboard.py:723`` nunique serving reads on a 60 s trigger):
+    per-DAY HyperLogLog registers persist as sketch state (≤ 2^p rows
+    per day FOREVER). Each micro-batch derives the day key and
+    MAX-merges its day partials through :func:`hll_commit_batch` (day
+    keys are just its group column — one commit path, no new merge
+    law); :func:`dau_panel_estimate` reads sketch state only, so raw
+    history is never rescanned."""
     ev = (batch_df.filter(F.col(user_col).isNotNull())
           .select(F.to_date(ts_col).alias("_d"),
                   F.col(user_col).alias("_u")))
@@ -1430,88 +1287,54 @@ def dau_panel_commit_batch(batch_df: DataFrame, batch_id: int,
 def dau_panel_estimate(spark: SparkSession, state_path: str,
                        p: int = 9) -> DataFrame:
     """Latest committed (day, dau_hll, wau_hll, mau_hll) panel from
-    :func:`dau_panel_sink` state — sketch reads only, via the SAME
-    ``operators.sketch.hll_day_panel`` arithmetic as the batch row,
-    so a batch job over the union of all ingested data and this read
-    see identical numbers at 4 dp (bit-equal registers in, shared
-    plan out)."""
+    :func:`dau_panel_commit_batch` state — sketch reads only, via the
+    SAME ``operators.sketch.hll_day_panel`` arithmetic as the batch
+    row, so a batch job over the union of all ingested data and this
+    read see identical numbers at 4 dp (bit-equal registers in, shared
+    plan out; test-pinned at every micro-batch prefix)."""
     from ..operators import sketch as SK
 
-    store = spark.read.parquet(state_path)
-    latest = (store.agg(F.max("state_batch").alias("b"))
-              .collect()[0]["b"])
-    regs = (store.where(F.col("state_batch") == latest)
-            .select("_d", "_b", "_m"))
+    regs = _latest_state(spark, state_path).select("_d", "_b", "_m")
     return SK.hll_day_panel(regs, p=p)
-
-
-def vocab_sink(doc_stream: DataFrame, state_path: str,
-               text_col: str = "text", group_col: str = "source"):
-    """Streaming unseen-vocabulary maintenance — the serving twin of
-    the batch ``unseen_vocab`` registry row: per-(source, token)
-    EXACT counts persist as state, each micro-batch SUM-merges its
-    own token counts into them, and the Chao1/Good-Turing panel reads
-    count state only via :func:`vocab_state_estimate` — raw document
-    history is never rescanned. Exactness matters here: Good-Turing
-    needs the singleton/doubleton counts f₁/f₂, which no mergeable
-    sketch can provide (a CMS over-counts exactly the low-frequency
-    cells f₁ lives in), so the state is the exact count table —
-    VOCABULARY-bounded (Heaps-sublinear in stream length), not
-    stream-bounded, which is the honest cost of an exact-f₁ monitor.
-
-    Replay safety is single-phase like :func:`hll_sink`: each batch
-    writes its complete post-merge counts to
-    ``state_path/state_batch=<batch_id>`` computed from the newest
-    committed state with id < batch_id, so a crash-replay recomputes
-    identical counts (the merge is a deterministic SUM of predecessor
-    state + this batch's data) and rewrites the same dir.
-
-    Batch/stream equality is structural: counts SUM-merge exactly, so
-    post-merge state equals one batch count of the union, and the
-    estimate calls the SAME ``operators.tokenizer.unseen_vocab_panel``
-    the batch row uses (test-pinned bit-for-bit at every micro-batch
-    prefix)."""
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        vocab_commit_batch(batch_df, batch_id, state_path,
-                           text_col=text_col, group_col=group_col)
-
-    return (doc_stream.writeStream.foreachBatch(process)
-            .outputMode("update"))
 
 
 def vocab_commit_batch(batch_df: DataFrame, batch_id: int,
                        state_path: str, text_col: str = "text",
                        group_col: str = "source") -> None:
-    """One micro-batch of :func:`vocab_sink`, module-level so tests
-    can replay it against the crash window."""
+    """Streaming unseen-vocabulary maintenance — the serving twin of
+    the batch ``unseen_vocab`` registry row: per-(source, token) EXACT
+    counts persist as state and each micro-batch SUM-merges its own
+    token counts into them; :func:`vocab_state_estimate` reads count
+    state only, so raw document history is never rescanned. Exactness
+    matters here: Good-Turing needs the singleton/doubleton counts
+    f₁/f₂, which no mergeable sketch can provide (a CMS over-counts
+    exactly the low-frequency cells f₁ lives in), so the state is the
+    exact count table — VOCABULARY-bounded (Heaps-sublinear in stream
+    length), not stream-bounded, which is the honest cost of an
+    exact-f₁ monitor."""
     from ..operators import tokenizer as TOKZ
 
     spark = batch_df.sparkSession
-    st = _latest_state_before(spark, state_path, batch_id)
+    st = _latest_state(spark, state_path, before=batch_id)
     cnt = TOKZ.source_token_counts(batch_df, text_col=text_col,
                                    group_col=group_col)
     merged = cnt if st is None else (
         cnt.unionByName(st.select(group_col, "w", "n"))
         .groupBy(group_col, "w").agg(F.sum("n").alias("n")))
-    (merged.write.mode("overwrite")
-     .parquet(f"{state_path}/state_batch={batch_id}"))
+    _overwrite_batch_dir(merged, state_path, STATE_DIR, batch_id)
 
 
 def vocab_state_estimate(spark: SparkSession, state_path: str,
                          group_col: str = "source") -> DataFrame:
     """Latest committed Chao1/Good-Turing panel from
-    :func:`vocab_sink` state — count reads only, via the SAME
+    :func:`vocab_commit_batch` state — count reads only, via the SAME
     ``operators.tokenizer.unseen_vocab_panel`` arithmetic as the
     batch row, so a batch job over the union of all ingested
     documents and this read see identical numbers (exact counts in,
-    shared plan out)."""
+    shared plan out; test-pinned at every micro-batch prefix)."""
     from ..operators import tokenizer as TOKZ
 
-    store = spark.read.parquet(state_path)
-    latest = (store.agg(F.max("state_batch").alias("b"))
-              .collect()[0]["b"])
-    cnt = (store.where(F.col("state_batch") == latest)
-           .select(group_col, "w", "n"))
+    cnt = _latest_state(spark, state_path).select(group_col, "w", "n")
     return TOKZ.unseen_vocab_panel(cnt, group_col=group_col)
 
 
@@ -1519,47 +1342,26 @@ def vocab_state_estimate(spark: SparkSession, state_path: str,
 # Streaming quality-classifier training (incremental logistic GD)
 # ---------------------------------------------------------------------------
 
-def logit_sink(feature_stream: DataFrame, state_path: str,
-               xcols: list[str], ycol: str,
-               lr: float = 0.5, steps_per_batch: int = 1):
+def logit_commit_batch(batch_df: DataFrame, batch_id: int,
+                       state_path: str, xcols: list[str], ycol: str,
+                       lr: float = 0.5,
+                       steps_per_batch: int = 1) -> None:
     """Streaming logistic-regression maintenance: the persisted beta
     vector advances by ``steps_per_batch`` full-batch GD steps over
     each micro-batch — the continuous form of ``ml.logit.fit``, i.e.
     mini-batch gradient descent where the mini-batch IS the
     micro-batch. State is ``len(xcols)+1`` doubles forever; each step
     is one combinable aggregation of the batch (`ml/logit.py`'s
-    scaling contract), so the sink's cost per batch is the batch scan.
-
-    Replay safety is single-phase like :func:`hll_sink`: each batch
-    writes its post-step beta to ``state_path/state_batch=<id>``
-    computed from the newest committed beta with id < batch_id; GD
-    from a fixed start over fixed data is deterministic (9-dp
-    quantized steps), so a crash-replay rewrites the identical beta.
-    Read the live model with :func:`logit_state_beta`; score with
-    ``ml.logit.predict``.
-    """
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        logit_commit_batch(batch_df, batch_id, state_path,
-                           xcols=xcols, ycol=ycol, lr=lr,
-                           steps_per_batch=steps_per_batch)
-
-    return (feature_stream.writeStream.foreachBatch(process)
-            .outputMode("update"))
-
-
-def logit_commit_batch(batch_df: DataFrame, batch_id: int,
-                       state_path: str, xcols: list[str], ycol: str,
-                       lr: float = 0.5,
-                       steps_per_batch: int = 1) -> None:
-    """One micro-batch of :func:`logit_sink`, module-level so tests
-    can replay it against the crash window."""
-
+    scaling contract), so the cost per batch is the batch scan. GD from
+    a fixed start over fixed data is deterministic (9-dp quantized
+    steps). Read the live model with :func:`logit_state_beta`; score
+    with ``ml.logit.predict``."""
     from ..ml import logit as LG
 
     spark = batch_df.sparkSession
     beta = [0.0] * (len(xcols) + 1)
     n_seen = 0
-    st = _latest_state_before(spark, state_path, batch_id)
+    st = _latest_state(spark, state_path, before=batch_id)
     if st is not None:
         row = st.select("beta", "n_seen").collect()[0]
         beta, n_seen = list(row["beta"]), int(row["n_seen"])
@@ -1571,19 +1373,15 @@ def logit_commit_batch(batch_df: DataFrame, batch_id: int,
             beta = LG.gd_step(clean, xcols, ycol, beta, lr)
     out = spark.createDataFrame(
         [(beta, n_seen + n_batch)], "beta array<double>, n_seen long")
-    (out.write.mode("overwrite")
-     .parquet(f"{state_path}/state_batch={batch_id}"))
+    _overwrite_batch_dir(out, state_path, STATE_DIR, batch_id)
 
 
 def logit_state_beta(spark: SparkSession, state_path: str) -> list[float]:
-    """Latest committed beta from :func:`logit_sink` (driver-side,
-    ``len(xcols)+1`` floats — the bounded-state contract)."""
-    store = spark.read.parquet(state_path)
-    latest = (store.agg(F.max("state_batch").alias("b"))
-              .collect()[0]["b"])
-    row = (store.where(F.col("state_batch") == latest)
-           .select("beta").collect()[0])
-    return list(row["beta"])
+    """Latest committed beta from :func:`logit_commit_batch`
+    (driver-side, ``len(xcols)+1`` floats — the bounded-state
+    contract)."""
+    return list(_latest_state(spark, state_path)
+                .select("beta").collect()[0]["beta"])
 
 
 # ---------------------------------------------------------------------------
@@ -1604,10 +1402,11 @@ def benchmark_guard_sink(vec_stream: DataFrame, bench: DataFrame,
     (`q_semantic_decontaminate`) and this sink share one scorer, so
     batch/stream equivalence is testable row-for-row.
 
-    State story: there is NO incremental state — the benchmark matrix
-    is a fixed closure (collected once, ≤ ``max_bench`` rows by
-    contract), so replaying a crashed batch rewrites the same two
-    batch-keyed partitions; idempotent by construction, no commit
+    The one sink that is not a commit function: the benchmark matrix
+    is collected ONCE here (≤ ``max_bench`` rows by contract) and closed
+    over, and that bounded collect must not run per batch. There is NO
+    incremental state, so replaying a crashed batch rewrites the same
+    two batch-keyed partitions; idempotent by construction, no commit
     marker needed. Scale shape: per batch one scan, per row one BLAS
     row-matmul, zero shuffle.
     """
@@ -1629,10 +1428,9 @@ def benchmark_guard_sink(vec_stream: DataFrame, bench: DataFrame,
                                 | F.col("_bench_cos").isNull())
         clean = (scored.filter(F.col("_bench_cos") <= threshold)
                  .drop("_bench_cos"))
-        (flagged.write.mode("overwrite")
-         .parquet(f"{quarantine_path}/ingest_batch={batch_id}"))
-        (clean.write.mode("overwrite")
-         .parquet(f"{clean_path}/ingest_batch={batch_id}"))
+        _overwrite_batch_dir(flagged, quarantine_path, "ingest_batch",
+                             batch_id)
+        _overwrite_batch_dir(clean, clean_path, "ingest_batch", batch_id)
 
     return (vec_stream.writeStream.foreachBatch(process)
             .outputMode("update"))
@@ -1642,43 +1440,25 @@ def benchmark_guard_sink(vec_stream: DataFrame, bench: DataFrame,
 # Streaming PCA maintenance (mergeable Gramian state)
 # ---------------------------------------------------------------------------
 
-def pca_sink(vec_stream: DataFrame, state_path: str,
-             vec_col: str = "embedding", dim: int = 64):
+def pca_commit_batch(batch_df: DataFrame, batch_id: int,
+                     state_path: str, vec_col: str = "embedding",
+                     dim: int = 64) -> None:
     """Streaming PCA maintenance: the raw Gramian (n, Σx, XᵀX) is the
     MERGEABLE form of the covariance — partial sums add across any
     split of the data — so each micro-batch folds its partial into a
     persisted d²+d+1-double state and the top-k components are one
     driver-side ``eigh`` away at ANY point in the stream
-    (`ml/pca.fit_from_gramian`). Batch boundaries are invisible: the
-    post-merge state equals one batch over the union, bit-for-bit up
-    to float addition order (property-tested).
-
-    Replay safety is single-phase like :func:`hll_sink`: each batch
-    writes post-merge sums to ``state_path/state_batch=<id>`` built
-    from the newest committed state with id < batch_id; addition is
-    deterministic for a replayed batch, so a crash-replay rewrites the
-    identical state. Read the live model with :func:`pca_state_fit`.
-    """
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        pca_commit_batch(batch_df, batch_id, state_path,
-                         vec_col=vec_col, dim=dim)
-
-    return (vec_stream.writeStream.foreachBatch(process)
-            .outputMode("update"))
-
-
-def pca_commit_batch(batch_df: DataFrame, batch_id: int,
-                     state_path: str, vec_col: str = "embedding",
-                     dim: int = 64) -> None:
-    """One micro-batch of :func:`pca_sink`, module-level for tests."""
+    (`ml/pca.fit_from_gramian`, read with :func:`pca_state_fit`). Batch
+    boundaries are invisible: the post-merge state equals one batch
+    over the union, bit-for-bit up to float addition order
+    (property-tested)."""
     import numpy as np
-
 
     from ..ml import pca as PCA
 
     spark = batch_df.sparkSession
     n0, s0, g0 = 0, np.zeros(dim), np.zeros(dim * dim)
-    st = _latest_state_before(spark, state_path, batch_id)
+    st = _latest_state(spark, state_path, before=batch_id)
     if st is not None:
         row = st.select("n", "s", "g").collect()[0]
         n0 = int(row["n"])
@@ -1690,8 +1470,7 @@ def pca_commit_batch(batch_df: DataFrame, batch_id: int,
     out = spark.createDataFrame(
         [(n0 + nb, (s0 + sb).tolist(), (g0 + gb.ravel()).tolist())],
         "n long, s array<double>, g array<double>")
-    (out.write.mode("overwrite")
-     .parquet(f"{state_path}/state_batch={batch_id}"))
+    _overwrite_batch_dir(out, state_path, STATE_DIR, batch_id)
 
 
 def pca_state_fit(spark: SparkSession, state_path: str, k: int) -> dict:
@@ -1700,11 +1479,7 @@ def pca_state_fit(spark: SparkSession, state_path: str, k: int) -> dict:
 
     from ..ml import pca as PCA
 
-    store = spark.read.parquet(state_path)
-    latest = (store.agg(F.max("state_batch").alias("b"))
-              .collect()[0]["b"])
-    row = (store.where(F.col("state_batch") == latest)
-           .select("n", "s", "g").collect()[0])
+    row = _latest_state(spark, state_path).select("n", "s", "g").collect()[0]
     s = np.asarray(row["s"])
     g = np.asarray(row["g"]).reshape(len(s), len(s))
     return PCA.fit_from_gramian(int(row["n"]), s, g, k)
@@ -1719,8 +1494,8 @@ def msprt_day_stats(df: DataFrame, ts_col: str = "ts",
     the data (micro-batches, partitions, replays) merge by summation.
     Arm assignment is the deterministic ``pmod(user_id, 2)`` split the
     batch monitor (`q_msprt_monitor`) uses. Shared by the batch query
-    and :func:`msprt_sink` so batch/stream equivalence is a tested
-    identity, not a hope (the `psi_scores` posture)."""
+    and :func:`msprt_commit_batch` so batch/stream equivalence is a
+    tested identity, not a hope (the `psi_scores` posture)."""
     ev = (df.filter(F.col(value_col).isNotNull()
                     & ~F.isnan(F.col(value_col))
                     & F.col(user_col).isNotNull())
@@ -1776,50 +1551,25 @@ def msprt_readout(day: DataFrame, tau2: float = 1.0) -> DataFrame:
             .orderBy("day"))
 
 
-def msprt_sink(event_stream: DataFrame, state_path: str, out_path: str,
-               ts_col: str = "ts", value_col: str = "value",
-               user_col: str = "user_id", tau2: float = 1.0):
-    """Streaming always-valid A/B monitor — the `foreachBatch` twin of
-    the batch `msprt_monitor` query, closing the last batch/stream
-    asymmetry (CUSUM, PSI, heavy-hitters, HLL, PCA, quantiles all had
-    streaming twins; sequential testing did not).
-
-    Per micro-batch: collapse the batch to per-day per-arm power sums
-    (:func:`msprt_day_stats` — map-side combined, six doubles per day),
-    FOLD them into the persisted day-state by summation (sufficient
-    statistics are additive, the `pca_sink` Gramian argument), write
-    the post-merge state to ``state_path/state_batch=<id>``, then emit
-    the full always-valid readout (:func:`msprt_readout`) to
-    ``out_path/monitor_batch=<id>``. The readout after batch k over
-    days seen so far equals the batch monitor over the union of those
-    batches — the peek-anytime guarantee is exactly that the p-value
-    trajectory is valid at EVERY prefix.
-
-    Replay safety is single-phase like :func:`pca_sink`: state k is
-    built from the newest committed state with id < k plus a
-    deterministic re-aggregation of batch k, so a crash-replay rewrites
-    the identical directory. State size is O(days) rows of 6 doubles —
-    calendar-bounded, never event-bounded."""
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        msprt_commit_batch(batch_df, batch_id, state_path, out_path,
-                           ts_col=ts_col, value_col=value_col,
-                           user_col=user_col, tau2=tau2)
-
-    return (event_stream.writeStream.foreachBatch(process)
-            .outputMode("update"))
-
-
 def msprt_commit_batch(batch_df: DataFrame, batch_id: int,
                        state_path: str, out_path: str,
                        ts_col: str = "ts", value_col: str = "value",
                        user_col: str = "user_id",
                        tau2: float = 1.0) -> None:
-    """One micro-batch of :func:`msprt_sink`, module-level so tests can
-    replay crash windows against it."""
-
+    """Streaming always-valid A/B monitor — the `foreachBatch` twin of
+    the batch `msprt_monitor` query. Per micro-batch: collapse the
+    batch to per-day per-arm power sums (:func:`msprt_day_stats` —
+    map-side combined, six doubles per day), FOLD them into the
+    persisted day-state by summation (sufficient statistics are
+    additive), commit the post-merge state, then write the full
+    always-valid readout (:func:`msprt_readout`) to
+    ``out_path/monitor_batch=<id>``. The readout after batch k equals
+    the batch monitor over the union of batches 0..k — the peek-anytime
+    guarantee is exactly that the p-value trajectory is valid at EVERY
+    prefix. State is O(days) rows of 6 doubles — calendar-bounded,
+    never event-bounded."""
     spark = batch_df.sparkSession
-    st = _latest_state_before(spark, state_path, batch_id)
-    prev = None if st is None else st.drop("state_batch")
+    prev = _latest_state(spark, state_path, before=batch_id)
 
     batch_day = msprt_day_stats(batch_df, ts_col, value_col, user_col)
     merged = (batch_day if prev is None
@@ -1828,44 +1578,9 @@ def msprt_commit_batch(batch_df: DataFrame, batch_id: int,
              .agg(*[F.sum(c).alias(c) for c in
                     ("_n0", "_s0", "_q0", "_n1", "_s1", "_q1")])
              .localCheckpoint())  # state readers must not re-trigger the agg
-    (state.write.mode("overwrite")
-     .parquet(f"{state_path}/state_batch={batch_id}"))
-    (msprt_readout(state, tau2=tau2).write.mode("overwrite")
-     .parquet(f"{out_path}/monitor_batch={batch_id}"))
-
-
-def periodogram_sink(event_stream: DataFrame, state_path: str,
-                     out_path: str, t0: float,
-                     omegas: dict[int, float] | None = None,
-                     ts_col: str = "ts", value_col: str = "value",
-                     key_col: str = "event_type"):
-    """Streaming spectral monitor — the `foreachBatch` twin of the
-    batch `periodogram` query (`operators/spectral.py`): per-series
-    daily-harmonic amplitudes maintained incrementally.
-
-    The DFT partial sums (n, C_k, S_k) are ADDITIVE sufficient
-    statistics (the `pca_sink` Gramian argument), so each micro-batch
-    is one `dft_partials` aggregation folded into the persisted
-    per-key state by summation; the readout after batch k equals the
-    batch periodogram over the union of batches 1..k up to
-    summation-order ulps. ``t0`` is the FIXED phase origin (streams
-    can't take a data-dependent global min) — amplitudes are
-    phase-invariant, so any origin near the data keeps the readout
-    equal to the batch query's min-origin one (test-asserted).
-
-    Replay safety is single-phase like :func:`pca_sink` /
-    :func:`msprt_sink`: state k = newest committed state with id < k
-    + a deterministic re-aggregation of batch k, so a crash-replay
-    rewrites the identical directory. State is O(|keys|) rows of
-    2·|harmonics|+1 doubles — key-bounded, never event-bounded."""
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        periodogram_commit_batch(batch_df, batch_id, state_path,
-                                 out_path, t0, omegas=omegas,
-                                 ts_col=ts_col, value_col=value_col,
-                                 key_col=key_col)
-
-    return (event_stream.writeStream.foreachBatch(process)
-            .outputMode("update"))
+    _overwrite_batch_dir(state, state_path, STATE_DIR, batch_id)
+    _overwrite_batch_dir(msprt_readout(state, tau2=tau2), out_path,
+                         "monitor_batch", batch_id)
 
 
 def periodogram_commit_batch(batch_df: DataFrame, batch_id: int,
@@ -1874,16 +1589,27 @@ def periodogram_commit_batch(batch_df: DataFrame, batch_id: int,
                              ts_col: str = "ts",
                              value_col: str = "value",
                              key_col: str = "event_type") -> None:
-    """One micro-batch of :func:`periodogram_sink`, module-level so
-    tests can replay crash windows against it."""
+    """Streaming spectral monitor — the `foreachBatch` twin of the
+    batch `periodogram` query (`operators/spectral.py`): per-series
+    daily-harmonic amplitudes maintained incrementally and written to
+    ``out_path/spectrum_batch=<id>``.
 
+    The DFT partial sums (n, C_k, S_k) are ADDITIVE sufficient
+    statistics, so each micro-batch is one `dft_partials` aggregation
+    folded into the persisted per-key state by summation; the readout
+    after batch k equals the batch periodogram over the union of
+    batches 0..k up to summation-order ulps. ``t0`` is the FIXED phase
+    origin (streams can't take a data-dependent global min) —
+    amplitudes are phase-invariant, so any origin near the data keeps
+    the readout equal to the batch query's min-origin one
+    (test-asserted). State is O(|keys|) rows of 2·|harmonics|+1
+    doubles — key-bounded, never event-bounded."""
     from ..operators import spectral as SPEC
 
     if omegas is None:
         omegas = SPEC.OMEGAS_DAILY
     spark = batch_df.sparkSession
-    st = _latest_state_before(spark, state_path, batch_id)
-    prev = None if st is None else st.drop("state_batch")
+    prev = _latest_state(spark, state_path, before=batch_id)
 
     base = (batch_df.filter(F.col(value_col).isNotNull())
             .select(F.col(key_col),
@@ -1897,52 +1623,14 @@ def periodogram_commit_batch(batch_df: DataFrame, batch_id: int,
     state = (merged.groupBy(key_col)
              .agg(*[F.sum(c).alias(c) for c in sum_cols])
              .localCheckpoint())  # state readers must not re-trigger
-    (state.write.mode("overwrite")
-     .parquet(f"{state_path}/state_batch={batch_id}"))
-    (SPEC.dft_amplitudes(state, omegas, key_col=key_col)
-     .write.mode("overwrite")
-     .parquet(f"{out_path}/spectrum_batch={batch_id}"))
+    _overwrite_batch_dir(state, state_path, STATE_DIR, batch_id)
+    _overwrite_batch_dir(SPEC.dft_amplitudes(state, omegas, key_col=key_col),
+                         out_path, "spectrum_batch", batch_id)
 
 
 # ---------------------------------------------------------------------------
 # Streaming naive-Bayes maintenance (additive token/doc counts)
 # ---------------------------------------------------------------------------
-
-def nb_sink(doc_stream: DataFrame, state_path: str,
-            label_col: str = "lang", text_col: str = "text"):
-    """Streaming trained-classifier maintenance for multinomial NB:
-    the model's ONLY inputs are per-(token, label) occurrence counts
-    and per-label document counts — both ADDITIVE sufficient
-    statistics, so each micro-batch folds its partial counts into a
-    persisted count table exactly like `periodogram_sink`'s DFT
-    partials and `pca_sink`'s Gramian. Vocabulary (global min_count),
-    Laplace smoothing and priors are DERIVED AT READOUT
-    (`nb_state_model` → `ml/nb.nb_fit_from_counts`), never folded —
-    min_count is a global property and must not be applied per batch.
-    DOMAIN CONTRACT: rows with NULL label or NULL text are dropped at
-    ingest (an unlabeled document cannot feed a supervised fit) — so
-    batch/stream equivalence is an identity over the LABELED rows:
-    the model from stream-folded counts equals `nb_fit` on the
-    identically-filtered union bit-for-bit (integer counts in,
-    identical quantized logliks out) — test-pinned in test_streaming
-    including NULL-bearing batches.
-
-    Replay safety is single-phase like :func:`hll_sink`: each batch
-    writes its complete post-merge counts to
-    ``state_path/state_batch=<id>`` built from the newest committed
-    state with id < batch_id; counting a replayed batch is
-    deterministic, so a crash-replay rewrites the identical state.
-    State rows: ``(kind, token, label, n)`` with kind='tok' for pair
-    counts and kind='doc' (token='') for doc counts — one schema, one
-    merge law (groupBy sum).
-    """
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        nb_commit_batch(batch_df, batch_id, state_path,
-                        label_col=label_col, text_col=text_col)
-
-    return (doc_stream.writeStream.foreachBatch(process)
-            .outputMode("update"))
-
 
 def nb_counts_partial(batch_df: DataFrame, label_col: str = "lang",
                       text_col: str = "text") -> DataFrame:
@@ -1968,11 +1656,25 @@ def nb_counts_partial(batch_df: DataFrame, label_col: str = "lang",
 def nb_commit_batch(batch_df: DataFrame, batch_id: int, state_path: str,
                     label_col: str = "lang",
                     text_col: str = "text") -> None:
-    """One micro-batch of :func:`nb_sink`, module-level so tests can
-    replay crash windows against it."""
-
+    """Streaming trained-classifier maintenance for multinomial NB:
+    the model's ONLY inputs are per-(token, label) occurrence counts
+    and per-label document counts — both ADDITIVE sufficient
+    statistics, so each micro-batch folds its partial counts
+    (:func:`nb_counts_partial`) into a persisted count table.
+    Vocabulary (global min_count), Laplace smoothing and priors are
+    DERIVED AT READOUT (`nb_state_model` → `ml/nb.nb_fit_from_counts`),
+    never folded — min_count is a global property and must not be
+    applied per batch. DOMAIN CONTRACT: rows with NULL label or NULL
+    text are dropped at ingest (an unlabeled document cannot feed a
+    supervised fit) — so batch/stream equivalence is an identity over
+    the LABELED rows: the model from stream-folded counts equals
+    `nb_fit` on the identically-filtered union bit-for-bit (integer
+    counts in, identical quantized logliks out), test-pinned including
+    NULL-bearing batches. State rows: ``(kind, token, label, n)`` with
+    kind='tok' for pair counts and kind='doc' (token='') for doc counts
+    — one schema, one merge law (groupBy sum)."""
     spark = batch_df.sparkSession
-    st = _latest_state_before(spark, state_path, batch_id)
+    st = _latest_state(spark, state_path, before=batch_id)
     prev = None if st is None else st.select("kind", "token", "label", "n")
 
     part = nb_counts_partial(batch_df, label_col=label_col,
@@ -1980,22 +1682,18 @@ def nb_commit_batch(batch_df: DataFrame, batch_id: int, state_path: str,
     merged = part if prev is None else (
         part.unionByName(prev).groupBy("kind", "token", "label")
         .agg(F.sum("n").alias("n")))
-    (merged.write.mode("overwrite")
-     .parquet(f"{state_path}/state_batch={batch_id}"))
+    _overwrite_batch_dir(merged, state_path, STATE_DIR, batch_id)
 
 
 def nb_state_model(spark: SparkSession, state_path: str,
                    label_col: str = "lang", min_count: int = 5):
-    """Latest committed NB model from :func:`nb_sink` state:
+    """Latest committed NB model from :func:`nb_commit_batch` state:
     ``(loglik, prior)`` via the same `nb_fit_from_counts` arithmetic
     the batch fit delegates to — a batch `nb_fit` over the union of
     all streamed documents and this read see identical models."""
     from ..ml import nb as NB
 
-    store = spark.read.parquet(state_path)
-    latest = (store.agg(F.max("state_batch").alias("b"))
-              .collect()[0]["b"])
-    state = store.where(F.col("state_batch") == latest)
+    state = _latest_state(spark, state_path)
     pair = (state.where(F.col("kind") == "tok")
             .select("token", F.col("label").alias(label_col),
                     F.col("n").alias("_n_lt")))
@@ -2010,41 +1708,21 @@ def nb_state_model(spark: SparkSession, state_path: str,
 # Streaming recommender maintenance (additive interaction counts -> ALS)
 # ---------------------------------------------------------------------------
 
-def als_sink(interaction_stream: DataFrame, state_path: str,
-             user_col: str = "c", item_col: str = "s"):
+def als_commit_batch(batch_df: DataFrame, batch_id: int, state_path: str,
+                     user_col: str = "c", item_col: str = "s") -> None:
     """Streaming recommender maintenance: the rank-2 ALS model's only
     input is the (user, item) interaction-count matrix — an ADDITIVE
     sufficient statistic, so each micro-batch folds its pair counts
-    into a persisted ratings table (the `nb_sink`/`pca_sink` pattern)
-    and the factorization derives AT READOUT (`als_state_model` →
-    `ml/als.als_rankk_exact_fit` at k=2). DOMAIN CONTRACT: rows with a
-    NULL user or item key are dropped at ingest (they identify no
-    matrix cell); batch/stream equivalence is an identity over the
-    keyed rows: integer counts in, identical 9-dp-quantized factors
-    out — test-pinned including NULL-bearing batches. State is |observed
-    pairs| rows regardless of how many interactions streamed.
-
-    Replay safety is single-phase like :func:`hll_sink`: each batch
-    writes complete post-merge counts to
-    ``state_path/state_batch=<id>`` built from the newest committed
-    state with id < batch_id; counting a replayed batch is
-    deterministic, so a crash-replay rewrites the identical state.
-    """
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        als_commit_batch(batch_df, batch_id, state_path,
-                         user_col=user_col, item_col=item_col)
-
-    return (interaction_stream.writeStream.foreachBatch(process)
-            .outputMode("update"))
-
-
-def als_commit_batch(batch_df: DataFrame, batch_id: int, state_path: str,
-                     user_col: str = "c", item_col: str = "s") -> None:
-    """One micro-batch of :func:`als_sink`, module-level so tests can
-    replay crash windows against it."""
-
+    into a persisted ratings table and the factorization derives AT
+    READOUT (`als_state_model` → `ml/als.als_rankk_exact_fit` at k=2).
+    DOMAIN CONTRACT: rows with a NULL user or item key are dropped at
+    ingest (they identify no matrix cell); batch/stream equivalence is
+    an identity over the keyed rows: integer counts in, identical
+    9-dp-quantized factors out — test-pinned including NULL-bearing
+    batches. State is |observed pairs| rows regardless of how many
+    interactions streamed."""
     spark = batch_df.sparkSession
-    st = _latest_state_before(spark, state_path, batch_id)
+    st = _latest_state(spark, state_path, before=batch_id)
     prev = None if st is None else st.select(user_col, item_col, "n")
 
     part = (batch_df
@@ -2055,24 +1733,20 @@ def als_commit_batch(batch_df: DataFrame, batch_id: int, state_path: str,
     merged = part if prev is None else (
         part.unionByName(prev).groupBy(user_col, item_col)
         .agg(F.sum("n").alias("n")))
-    (merged.write.mode("overwrite")
-     .parquet(f"{state_path}/state_batch={batch_id}"))
+    _overwrite_batch_dir(merged, state_path, STATE_DIR, batch_id)
 
 
 def als_state_model(spark: SparkSession, state_path: str,
                     user_col: str = "c", item_col: str = "s",
                     reg: float = 0.1):
-    """Latest committed rank-2 factors from :func:`als_sink` state:
-    ``(user_factors, item_factors)`` via the same one-round k=2
+    """Latest committed rank-2 factors from :func:`als_commit_batch`
+    state: ``(user_factors, item_factors)`` via the same one-round k=2
     `als_rankk_exact_fit` the batch `als_rank2` query runs — a batch
     fit over the union of all streamed interactions and this read see
     identical factors."""
     from ..ml import als as ALS
 
-    store = spark.read.parquet(state_path)
-    latest = (store.agg(F.max("state_batch").alias("b"))
-              .collect()[0]["b"])
-    ratings = (store.where(F.col("state_batch") == latest)
+    ratings = (_latest_state(spark, state_path)
                .select(user_col, item_col, F.col("n").alias("r")))
     return ALS.als_rankk_exact_fit(ratings, k=2, rounds=1,
                                    user_col=user_col, item_col=item_col,
