@@ -47,6 +47,124 @@ HEADLINE = [
     "time_rolling",
 ]
 
+# Every timed query, one (section, names) row per tranche, in run order.
+# Each tranche is reported SEPARATELY (``<section>_trials``,
+# ``<section>_queries``, ``summary.<section>_total``) so the earlier
+# sections' totals stay comparable across rounds. "query" is the
+# headline set: its minima are ``queries`` and ``headline_total``.
+SECTIONS: list[tuple[str, list[str]]] = [
+    ("query", HEADLINE),
+    # round-3 corpus-governance pillar; round 4: best-doc near-dup
+    # collapse + vocab coverage, embedding near-dup clusters,
+    # governance/tokenizer ops
+    ("corpus", ["hash_split", "stratified_sample", "decontaminate",
+                "doc_repetition", "source_mix", "pack_documents",
+                "pq_topk", "ivf_pq_topk", "seasonal_baseline",
+                "collapse_near_dups", "oov_rate", "emb_neardup_clusters",
+                "pii_scrub", "unigram_logppl", "bpe_pair_counts",
+                "quality_weighted_sample", "chunk_documents",
+                "dedup_method_agreement", "per_source_cap",
+                "temperature_mix", "bigram_logppl"]),
+    # round-5 third batch (graph/CDC/sketch/elastic-similarity/forecast)
+    ("analytics", ["pagerank_neardup", "trend_slopes", "acf_lags",
+                   "xcorr_leadlag", "snapshot_cdc", "scd2_history",
+                   "heavy_hitters", "dtw_profiles", "rrf_fusion",
+                   "pit_join", "holt_forecast"]),
+    # round 6: sketches, robust stats, drift, graph census
+    ("r6", ["ewma_exact", "kll_quantiles", "kll_rollup",
+            "triangle_stats_prod", "robust_regression",
+            "anomaly_ensemble", "theta_union_distinct",
+            "ks_drift", "chi2_keywords", "holt_winters"]),
+    # round-6 late batch: eval stats, state-space, IR, graph traversal
+    ("r6b", ["roc_auc", "pacf_yw", "js_divergence", "hll_distinct",
+             "degree_distribution", "bfs_hops", "bootstrap_ci",
+             "kalman_level", "bm25_topk", "basket_lift"]),
+    # round-6 continuation: trained classifier, conformal, multi-join
+    # classics, LPA communities, feature engineering
+    ("r6c", ["quality_logit", "conformal_interval",
+             "regional_supplier_volume", "top_supplier_share",
+             "community_labelprop", "pca2_axes", "group_kfold",
+             "target_encode_oof", "woe_iv", "feature_hashing",
+             "community_modularity", "degree_assortativity",
+             "int8_quant_audit", "pr_auc", "join_cardinality",
+             "semantic_decontaminate", "msprt_monitor",
+             "quantile_sgd", "shipping_priority",
+             "order_priority_counts", "returned_item_revenue",
+             "supplier_part_variety", "small_qty_revenue",
+             "bracketed_revenue", "idle_rich_customers"]),
+    # round 7: the capped pair-graph pagerank, the 12 shapes completing
+    # the 22-shape TPC-H suite, and the analytics trio (fixed-harmonic
+    # DFT, HITS, trained NB)
+    ("r7", ["pagerank_capped", "discounted_revenue",
+            "nation_trade_volume", "market_share",
+            "product_type_profit", "late_line_priority", "custdist",
+            "promo_revenue_share", "large_volume_customers",
+            "waiting_suppliers", "min_cost_supplier",
+            "important_stock", "excess_stock_suppliers",
+            "periodogram", "hits_authority", "nb_langid", "als_rank1",
+            "silhouette_audit", "ppr_trust",
+            "link_prediction", "nelson_aalen"]),
+    # round 8: rank-2 ALS, trained-centroid silhouette, PAV isotonic
+    # calibration and the nonparametric inference trio
+    ("r8", ["als_rank2", "silhouette_trained",
+            "isotonic_calibration", "logrank_test",
+            "mann_whitney", "mann_kendall",
+            "binseg_changepoint", "matryoshka_audit", "bh_fdr",
+            "ljung_box", "runs_test", "rbo_rankings",
+            "l_diversity", "ar2_forecast", "hurst_exponent",
+            "mcnemar", "cramers_v", "spectral_entropy",
+            "seasonal_strength", "cvm_drift"]),
+    # round 9: the rank-4 ALS backtest, the bounded-grain daily twins of
+    # the per-series rank family (SCALE §1n-b) and the
+    # econometric-diagnostics batch
+    ("r9", ["als_rankk_backtest", "kendall_tau", "levene_test",
+            "ljung_box_daily", "runs_test_daily",
+            "mann_whitney_daily", "cvm_drift_daily", "hurst_daily",
+            "jarque_bera", "welch_ttest", "kruskal_wallis",
+            "friedman_test", "page_hinkley", "adf_test",
+            "aic_order_select", "chow_test", "granger_causality",
+            "engle_granger", "dunn_posthoc", "variance_ratio",
+            "seasonal_mann_kendall", "cochran_q",
+            "grubbs_outlier", "garch_vol", "heaps_law",
+            "term_burstiness", "embedding_isotropy"]),
+    # round 10: the GARCH sweep, the scaled-C ANN pair, the wide-hash
+    # SimHash, the HP filter, the daily-grain TS batch and the
+    # behavior/corpus audits
+    ("r10", ["pq_distortion", "activity_powerlaw", "holt_damped",
+             "prop_ztest", "dau_wau_mau", "time_to_convert",
+             "lorenz_deciles", "seasonal_outliers", "funnel_depth",
+             "verified_clusters",
+             "croston_demand", "entropy_rate", "mde_power",
+             "acf_daily", "pacf_daily",
+             "garch_select", "ivf_store_scaled", "centroid_balance",
+             "simhash_wide_pairs", "hp_filter", "kpss_test",
+             "theil_sen_daily", "sample_entropy", "max_drawdown",
+             "ar1_halflife", "spearman_daily", "peak_detect",
+             "interarrival_burstiness",
+             "gini_concentration", "benford_values", "msttr",
+             "kl_source_unigram", "pmi_bigrams",
+             "brier_decomposition"]),
+    # round 11: the distributed-ordinal msttr, the HLL dashboard twin,
+    # the verify lenses and the stats/ordinal batch
+    ("r11", ["msttr_bucketed", "dau_wau_mau_hll", "ks_2sample",
+             "pettitt_test", "bartlett_test", "levenshtein_verify",
+             "skyline_docs", "permutation_entropy", "haar_energy",
+             "markov_stationary", "rsi_daily", "theil_decomposition",
+             "gumbel_maxima", "turning_points", "records_test",
+             "langid_confusion", "hubness_audit", "source_leakage",
+             "cusum_squares", "mmd_drift", "hubness_ivf"]),
+    # round 12: the survivor-form edit-distance verify (SCALE §1v) and
+    # the round's audit batch
+    ("r12", ["unseen_vocab",
+             "levenshtein_survivors", "ivf_recall", "lsh_recall",
+             "dup_ngram_mass", "dedup_token_savings",
+             "token_fertility", "anderson_darling", "cliffs_delta",
+             "ts_complexity", "mood_median", "control_chart",
+             "ewma_chart", "cohens_d", "langid_kappa",
+             "dup_transitivity", "lsh_s_curve",
+             "cluster_size_powerlaw", "intrinsic_dim"]),
+]
+
 
 def bench_kiln_pipeline(spark, trials: int = 1) -> list[float]:
     """The reference's headline workload at ITS scale: 1 simulated year,
@@ -128,9 +246,9 @@ def main() -> None:
         trial_log[name] = trials
         return min(trials)
 
-    timings: dict[str, float] = {}
-    for name in HEADLINE:
-        timings[name] = timed(name)
+    sections = {sec: {name: timed(name) for name in names}
+                for sec, names in SECTIONS}
+    timings = dict(sections["query"])
 
     # reference-parity workload (fixture generation excluded from timing).
     # min of 2 trials: this host shows 2-3x run-to-run variance under
@@ -141,158 +259,7 @@ def main() -> None:
     timings["kiln_pipeline_1yr"] = min(kiln_trials)
 
     total = round(sum(timings.values()), 3)
-
-    # round-3 corpus-governance pillar, reported SEPARATELY so the
-    # headline total stays comparable across rounds
-    corpus: dict[str, float] = {}
-    for name in ("hash_split", "stratified_sample", "decontaminate",
-                 "doc_repetition", "source_mix", "pack_documents",
-                 "pq_topk", "ivf_pq_topk", "seasonal_baseline",
-                 # round 4: best-doc near-dup collapse + vocab coverage,
-                 # embedding near-dup clusters, governance/tokenizer ops
-                 "collapse_near_dups", "oov_rate", "emb_neardup_clusters",
-                 "pii_scrub", "unigram_logppl", "bpe_pair_counts",
-                 "quality_weighted_sample", "chunk_documents",
-                 "dedup_method_agreement", "per_source_cap",
-                 "temperature_mix", "bigram_logppl"):
-        corpus[name] = timed(name)
-
-    # round-5 third batch (graph/CDC/sketch/elastic-similarity/
-    # forecast), reported SEPARATELY so headline and corpus totals stay
-    # comparable across rounds
-    analytics: dict[str, float] = {}
-    for name in ("pagerank_neardup", "trend_slopes", "acf_lags",
-                 "xcorr_leadlag", "snapshot_cdc", "scd2_history",
-                 "heavy_hitters", "dtw_profiles", "rrf_fusion",
-                 "pit_join", "holt_forecast"):
-        analytics[name] = timed(name)
-
-    # round-6 additions (sketches, robust stats, drift, graph census),
-    # their own section so analytics_total stays round-comparable
-    r6: dict[str, float] = {}
-    for name in ("ewma_exact", "kll_quantiles", "kll_rollup",
-                 "triangle_stats_prod", "robust_regression",
-                 "anomaly_ensemble", "theta_union_distinct",
-                 "ks_drift", "chi2_keywords", "holt_winters"):
-        r6[name] = timed(name)
-
-    # round-6 late batch (eval stats, state-space, IR, graph traversal),
-    # its own section so r6_total stays comparable to the gate-frozen run
-    r6b: dict[str, float] = {}
-    for name in ("roc_auc", "pacf_yw", "js_divergence", "hll_distinct",
-                 "degree_distribution", "bfs_hops", "bootstrap_ci",
-                 "kalman_level", "bm25_topk", "basket_lift"):
-        r6b[name] = timed(name)
-
-    # round-6 continuation batch (trained classifier, conformal,
-    # multi-join classics, LPA communities, feature engineering)
-    r6c: dict[str, float] = {}
-    for name in ("quality_logit", "conformal_interval",
-                 "regional_supplier_volume", "top_supplier_share",
-                 "community_labelprop", "pca2_axes", "group_kfold",
-                 "target_encode_oof", "woe_iv", "feature_hashing",
-                 "community_modularity", "degree_assortativity",
-                 "int8_quant_audit", "pr_auc", "join_cardinality",
-                 "semantic_decontaminate", "msprt_monitor",
-                 "quantile_sgd", "shipping_priority",
-                 "order_priority_counts", "returned_item_revenue",
-                 "supplier_part_variety", "small_qty_revenue",
-                 "bracketed_revenue", "idle_rich_customers"):
-        r6c[name] = timed(name)
-
-    # round-7 additions: the capped pair-graph pagerank (the oracle-
-    # checked max_bucket rescue form), the 12 shapes completing the
-    # 22-shape TPC-H suite (Q2/Q6/Q7/Q8/Q9/Q11/Q12/Q13/Q14/Q18/Q20/Q21),
-    # and the analytics trio (fixed-harmonic DFT, HITS, trained NB)
-    r7: dict[str, float] = {}
-    for name in ("pagerank_capped", "discounted_revenue",
-                 "nation_trade_volume", "market_share",
-                 "product_type_profit", "late_line_priority", "custdist",
-                 "promo_revenue_share", "large_volume_customers",
-                 "waiting_suppliers", "min_cost_supplier",
-                 "important_stock", "excess_stock_suppliers",
-                 "periodogram", "hits_authority", "nb_langid", "als_rank1",
-                 "silhouette_audit", "ppr_trust",
-                 "link_prediction", "nelson_aalen"):
-        r7[name] = timed(name)
-
-    # round-8 additions: rank-2 ALS (closed-form 2x2 half-steps),
-    # trained-centroid silhouette (2 unrolled Lloyd rounds), PAV
-    # isotonic calibration, and the nonparametric inference trio
-    # (log-rank, Mann-Whitney, Mann-Kendall + Theil-Sen)
-    r8: dict[str, float] = {}
-    for name in ("als_rank2", "silhouette_trained",
-                 "isotonic_calibration", "logrank_test",
-                 "mann_whitney", "mann_kendall",
-                 "binseg_changepoint", "matryoshka_audit", "bh_fdr",
-                 "ljung_box", "runs_test", "rbo_rankings",
-                 "l_diversity", "ar2_forecast", "hurst_exponent",
-                 "mcnemar", "cramers_v", "spectral_entropy",
-                 "seasonal_strength", "cvm_drift"):
-        r8[name] = timed(name)
-
-    # round-9 additions: the rank-4 ALS backtest (exact Cramer lane,
-    # 4 half-steps + holdout readout), the bounded-grain daily twins
-    # of the per-series rank family (SCALE §1n-b), and the
-    # econometric-diagnostics batch (all mann_kendall-class
-    # reduce-then-bounded-solve plans)
-    r9: dict[str, float] = {}
-    for name in ("als_rankk_backtest", "kendall_tau", "levene_test",
-                 "ljung_box_daily", "runs_test_daily",
-                 "mann_whitney_daily", "cvm_drift_daily", "hurst_daily",
-                 "jarque_bera", "welch_ttest", "kruskal_wallis",
-                 "friedman_test", "page_hinkley", "adf_test",
-                 "aic_order_select", "chow_test", "granger_causality",
-                 "engle_granger", "dunn_posthoc", "variance_ratio",
-                 "seasonal_mann_kendall", "cochran_q",
-                 "grubbs_outlier", "garch_vol", "heaps_law",
-                 "term_burstiness", "embedding_isotropy"):
-        r9[name] = timed(name)
-
-    # round-10 additions: the GARCH sweep, the scaled-C ANN pair
-    # (store + balance audit), the wide-hash SimHash, the HP filter
-    # (pentadiagonal Arrow solve), the daily-grain TS batch, and the
-    # behavior/corpus audits — all bounded-grain or broadcast shapes
-    r10: dict[str, float] = {}
-    for name in ("pq_distortion", "activity_powerlaw", "holt_damped", "prop_ztest", "dau_wau_mau", "time_to_convert",
-                 "lorenz_deciles", "seasonal_outliers", "funnel_depth",
-                 "verified_clusters",
-                 "croston_demand", "entropy_rate", "mde_power",
-                 "acf_daily", "pacf_daily",
-                 "garch_select", "ivf_store_scaled", "centroid_balance",
-                 "simhash_wide_pairs", "hp_filter", "kpss_test",
-                 "theil_sen_daily", "sample_entropy", "max_drawdown",
-                 "ar1_halflife", "spearman_daily", "peak_detect",
-                 "interarrival_burstiness",
-                 "gini_concentration", "benford_values", "msttr",
-                 "kl_source_unigram", "pmi_bigrams",
-                 "brier_decomposition"):
-        r10[name] = timed(name)
-
-    # round-11 pillar: the distributed-ordinal msttr, the HLL dashboard
-    # twin, the verify lenses, and the stats/ordinal batch
-    r11: dict[str, float] = {}
-    for name in ("msttr_bucketed", "dau_wau_mau_hll", "ks_2sample",
-                 "pettitt_test", "bartlett_test", "levenshtein_verify",
-                 "skyline_docs", "permutation_entropy", "haar_energy",
-                 "markov_stationary", "rsi_daily", "theil_decomposition",
-                 "gumbel_maxima", "turning_points", "records_test",
-                 "langid_confusion", "hubness_audit", "source_leakage",
-                 "cusum_squares", "mmd_drift", "hubness_ivf"):
-        r11[name] = timed(name)
-
-    # round-12 pillar: the survivor-form edit-distance verify (SCALE
-    # §1v — the candidate-mass-wall fix) and the round's audit batch
-    r12: dict[str, float] = {}
-    for name in ("unseen_vocab",
-                 "levenshtein_survivors", "ivf_recall", "lsh_recall",
-                 "dup_ngram_mass", "dedup_token_savings",
-                 "token_fertility", "anderson_darling", "cliffs_delta",
-                 "ts_complexity", "mood_median", "control_chart",
-                 "ewma_chart", "cohens_d", "langid_kappa",
-                 "dup_transitivity", "lsh_s_curve",
-                 "cluster_size_powerlaw", "intrinsic_dim"):
-        r12[name] = timed(name)
+    tranches = SECTIONS[1:]
 
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     # KEY-ORDER CONTRACT: the driver archives only the TAIL of this one
@@ -301,62 +268,35 @@ def main() -> None:
     # per-query minima) therefore go FIRST, and the compact round-over-
     # round numbers — headline total, kiln trials, per-pillar totals,
     # sf, loadavg — go LAST so they always survive the truncation.
-    print(json.dumps({
+    out = {
         "metric": "headline_queries_total",
         "unit": "sec",
         "trials_per_query": 2,
-        # full per-query trial pairs: the load-contamination audit trail
-        # (a big max-min spread marks a draw taken under external load)
-        "query_trials": {k: trial_log[k] for k in timings if k in trial_log},
-        "corpus_trials": {k: trial_log[k] for k in corpus},
-        "analytics_trials": {k: trial_log[k] for k in analytics},
-        "r6_trials": {k: trial_log[k] for k in r6},
-        "r6b_trials": {k: trial_log[k] for k in r6b},
-        "r6c_trials": {k: trial_log[k] for k in r6c},
-        "r7_trials": {k: trial_log[k] for k in r7},
-        "r8_trials": {k: trial_log[k] for k in r8},
-        "r9_trials": {k: trial_log[k] for k in r9},
-        "r10_trials": {k: trial_log[k] for k in r10},
-        "r11_trials": {k: trial_log[k] for k in r11},
-        "r12_trials": {k: trial_log[k] for k in r12},
-        "queries": timings,
-        "corpus_queries": corpus,
-        "analytics_queries": analytics,
-        "r6_queries": r6,
-        "r6b_queries": r6b,
-        "r6c_queries": r6c,
-        "r7_queries": r7,
-        "r8_queries": r8,
-        "r9_queries": r9,
-        "r10_queries": r10,
-        "r11_queries": r11,
-        "r12_queries": r12,
-        # --- compact tail: everything a round-over-round comparison
-        # needs, guaranteed inside the driver's preserved suffix ---
-        "summary": {
-            "headline_total": total,
-            "kiln_trials": kiln_trials,
-            "kiln_min": min(kiln_trials),
-            "corpus_total": round(sum(corpus.values()), 3),
-            "analytics_total": round(sum(analytics.values()), 3),
-            "r6_total": round(sum(r6.values()), 3),
-            "r6b_total": round(sum(r6b.values()), 3),
-            "r6c_total": round(sum(r6c.values()), 3),
-            "r7_total": round(sum(r7.values()), 3),
-            "r8_total": round(sum(r8.values()), 3),
-            "r9_total": round(sum(r9.values()), 3),
-            "r10_total": round(sum(r10.values()), 3),
-            "r11_total": round(sum(r11.values()), 3),
-            "r12_total": round(sum(r12.values()), 3),
-            "headline_queries": {k: timings[k] for k in timings},
-        },
+    }
+    # full per-query trial pairs: the load-contamination audit trail
+    # (a big max-min spread marks a draw taken under external load)
+    for sec, names in SECTIONS:
+        out[f"{sec}_trials"] = {k: trial_log[k] for k in names}
+    out["queries"] = timings
+    for sec, _ in tranches:
+        out[f"{sec}_queries"] = sections[sec]
+    # --- compact tail: everything a round-over-round comparison needs,
+    # guaranteed inside the driver's preserved suffix ---
+    summary = {"headline_total": total, "kiln_trials": kiln_trials,
+               "kiln_min": min(kiln_trials)}
+    for sec, _ in tranches:
+        summary[f"{sec}_total"] = round(sum(sections[sec].values()), 3)
+    summary["headline_queries"] = dict(timings)
+    out.update({
+        "summary": summary,
         "metric_echo": "headline_queries_total",
         "value": total,
         "sf": float(sf) if sf else None,
         # host contention snapshot — driver-vs-local timing deltas are
         # attributable only when the load at measurement time is known
         "loadavg_1m": round(os.getloadavg()[0], 2),
-    }))
+    })
+    print(json.dumps(out))
 
 
 if __name__ == "__main__":

@@ -18,7 +18,7 @@ operator's ``max_bucket=1000`` skew cap are reported (the cap drops
 pathological buckets but cannot fix an under-provisioned band width).
 
 Widths follow the ``chunk_bits ≈ log2(N / occupancy)`` rule probe
-(`scale_probe_r5.py`): the rule-chosen width's volume should grow
+(SCALE §1e): the rule-chosen width's volume should grow
 ~linearly with N; a width held fixed while N grows 10× shows the
 quadratic bucket-occupancy blowup.
 """
