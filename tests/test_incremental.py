@@ -76,6 +76,31 @@ def test_refresh_merges_overlapping_day(spark, events, tmp_path):
     assert got == _as_dict(INC.rollup_partials(events, ["key"]))
 
 
+def test_day_write_is_dynamic_under_a_static_session(spark, events,
+                                                     tmp_path):
+    """`write_day_partitions` asks for dynamic overwrite on its own
+    write: with the session set to `static`, a one-day write replaces
+    that day and keeps every other day partition, and the session value
+    is the same afterwards."""
+    conf = "spark.sql.sources.partitionOverwriteMode"
+    path = str(tmp_path / "days")
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "static")
+    try:
+        parts = INC.rollup_partials(events, ["key"])
+        INC.write_day_partitions(parts, path)
+        day2 = (parts.filter(F.col("day") == "2024-06-02")
+                .withColumn("n", F.col("n") + 100))
+        INC.write_day_partitions(day2, path)
+        assert spark.conf.get(conf) == "static"
+        want = {k: ((v[0] + 100,) + v[1:] if k[0] == "2024-06-02" else v)
+                for k, v in _as_dict(parts).items()}
+        assert _as_dict(spark.read.parquet(path)) == want
+        assert len({k[0] for k in want}) == 4
+    finally:
+        spark.conf.set(conf, prev)
+
+
 def test_kmv_partials_merge_equals_direct_sketch(spark):
     """Period distinct estimate derived from stored per-day KMV states
     must equal the sketch computed directly over the raw union — the

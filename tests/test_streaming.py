@@ -184,6 +184,94 @@ def test_streaming_anomaly_matches_batch(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
+def test_streaming_anomaly_sorts_across_arrow_chunks(spark):
+    """A micro-batch reaches the monitor as several Arrow chunks once a
+    key has more than ``maxRecordsPerBatch`` rows. One reverse-ordered
+    120-row file with 16-row chunks must still flag exactly like the
+    batch detector: the rows are sorted after the chunks are joined,
+    not chunk by chunk."""
+    import numpy as np
+
+    from timeseries_data_analysis_spark.operators import windows as WIN
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf)
+    d = tempfile.mkdtemp(prefix="stream_anom_chunks_")
+    try:
+        spark.conf.set(conf, "16")
+        base = pd.Timestamp("2024-06-01")
+        vals = 100.0 + np.random.default_rng(7).normal(0, 2, 120)
+        vals[60], vals[90] = 40.0, 170.0
+        vals[30:34] = np.nan
+        pdf = pd.DataFrame({
+            "ts": [base + pd.Timedelta(hours=h) for h in range(120)],
+            "event_type": "a",
+            "value": [None if np.isnan(v) else float(v) for v in vals]})
+        spark.createDataFrame(pdf.iloc[::-1], schema=SCHEMA).coalesce(1) \
+            .write.mode("overwrite").parquet(f"{d}/f0")
+
+        src = SJ.stream_source(spark, f"{d}/*", SCHEMA)
+        q = (SJ.streaming_anomaly(src, window=24).writeStream
+             .format("memory").queryName("anom_chunks_sink")
+             .outputMode("update").trigger(availableNow=True).start())
+        q.awaitTermination(120)
+        streamed = spark.sql("SELECT * FROM anom_chunks_sink").toPandas() \
+            .sort_values("ts").reset_index(drop=True)
+
+        feats = WIN.anomaly_features(
+            "value", WIN.series_window("event_type", ["ts"]), window=24)
+        batch = spark.read.schema(SCHEMA).parquet(f"{d}/*").select(
+            "ts", feats["value_anomaly_flag"].alias("anomaly_flag")) \
+            .toPandas().sort_values("ts").reset_index(drop=True)
+
+        assert len(streamed) == len(batch) == 120
+        assert streamed["anomaly_flag"].tolist() == \
+            batch["anomaly_flag"].tolist()
+    finally:
+        spark.conf.set(conf, prev)
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_value_monitors_keep_a_bigint_key(spark):
+    """`streaming_anomaly`, `cusum_stream` and `page_hinkley_stream`
+    take the key's output type from the input: a bigint key comes back
+    bigint, and its rows convert."""
+    schema = T.StructType([
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("sensor", T.LongType()),
+        T.StructField("value", T.DoubleType()),
+    ])
+    d = tempfile.mkdtemp(prefix="stream_bigint_key_")
+    try:
+        base = pd.Timestamp("2024-06-01")
+        pdf = pd.DataFrame({
+            "ts": [base + pd.Timedelta(hours=h) for h in range(30)] * 2,
+            "sensor": [7] * 30 + [9] * 30,
+            "value": [1.0 + (h % 5) * 0.1 for h in range(60)]})
+        spark.createDataFrame(pdf, schema=schema).coalesce(1) \
+            .write.mode("overwrite").parquet(f"{d}/f0")
+        monitors = {
+            "anomaly": lambda s: SJ.streaming_anomaly(s, key_col="sensor"),
+            "cusum": lambda s: SJ.cusum_stream(s, {7: (1.2, 0.1)},
+                                               key_col="sensor"),
+            "ph": lambda s: SJ.page_hinkley_stream(s, {7: (0.01, 0.5)},
+                                                   key_col="sensor"),
+        }
+        for name, monitor in monitors.items():
+            out = monitor(SJ.stream_source(spark, f"{d}/*", schema))
+            assert out.schema["sensor"].dataType.simpleString() == "bigint"
+            q = (out.writeStream.format("memory")
+                 .queryName(f"bigint_key_{name}").outputMode("update")
+                 .trigger(availableNow=True).start())
+            q.awaitTermination(120)
+            got = spark.sql(f"SELECT sensor, count(*) AS n FROM "
+                            f"bigint_key_{name} GROUP BY sensor").collect()
+            assert {(r["sensor"], r["n"]) for r in got} == \
+                {(7, 30), (9, 30)}, name
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
 USER_SCHEMA = T.StructType([
     T.StructField("ts", T.TimestampType()),
     T.StructField("user_id", T.LongType()),

@@ -1,8 +1,7 @@
 """Scalar expression builders (SURVEY.md §2.2 P9/P10, §2.7 math family).
 
 Reference: ``np.where(den==0, 0, num/den)`` + ``errstate``/``nan_to_num``
-(``simple_pre_processing.py:951-958``), threshold flags
-(``pre_processing.py:1199-1439``), clip/step-round action space
+(``simple_pre_processing.py:951-958``) and the clipped action space
 (``models_backup.py:538-542`` decoded). All pure Column expressions —
 codegen'd, null-safe without ANSI exceptions.
 """
@@ -26,30 +25,10 @@ def safe_div(num: ColumnOrName, den: ColumnOrName,
     return F.when(d != 0, n / d).otherwise(F.lit(default))
 
 
-def threshold_flag(col: ColumnOrName, thr: float,
-                   direction: str = "gt") -> Column:
-    """``(x > thr).astype(int)`` — P9. Null input → 0 (matches numpy False)."""
-    x = _c(col)
-    cond = {"gt": x > thr, "ge": x >= thr, "lt": x < thr, "le": x <= thr}[direction]
-    return F.when(cond, 1).otherwise(0)
-
-
 def clip(col: ColumnOrName, lo: float, hi: float) -> Column:
     """``np.clip`` → greatest/least."""
     return F.least(F.greatest(_c(col), F.lit(lo)), F.lit(hi))
 
 
-def step_round(col: ColumnOrName, step: float) -> Column:
-    """``round(x/step)*step`` — prescriptor action-space quantization."""
-    return F.round(_c(col) / step) * step
-
-
 def sigmoid(col: ColumnOrName) -> Column:
     return F.lit(1.0) / (F.lit(1.0) + F.exp(-_c(col)))
-
-
-def zero_guard_share(part: ColumnOrName, total: ColumnOrName,
-                     scale: float = 100.0) -> Column:
-    """Percent share with zero-denominator guard (dashboard grade-% pattern,
-    reference ``dashboard.py:1560-1580``)."""
-    return safe_div(_c(part) * scale, total)

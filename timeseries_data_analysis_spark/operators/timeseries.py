@@ -405,6 +405,78 @@ def align_to_spine(spine: DataFrame, src: DataFrame, on: list[str],
     return joined.select(*on, *exprs)
 
 
+# -- sequential recursions: one step each, folded by batch and stream ------
+#
+# Each step maps a 4-tuple state and one observation to the next state.
+# The batch operator folds it over a whole sorted series and reads the
+# final state; its ``streaming.jobs`` twin folds it per arriving row and
+# emits every prefix. The float operations and their order are pinned so
+# the recursive-CTE oracles replay the state bit-identically.
+
+_FOLD0 = (0, 0.0, 0.0, 0.0)   # (n, ...) before the first observation
+
+
+def _holt_step(st: tuple, y: float, alpha: float, beta: float,
+               phi: float) -> tuple:
+    """One period of the (damped-trend) Holt recursion over
+    ``(n, level, trend, |error| sum)``: the first period sets the level,
+    the second sets the trend to y₁ − y₀ before its update, so the fold
+    from ``_FOLD0`` starts at l = y₀, b = y₁ − y₀."""
+    n, l, b, esum = st
+    if n == 0:
+        return 1, y, 0.0, 0.0
+    if n == 1:
+        b = y - l
+    pred = l + phi * b
+    lnew = alpha * y + (1 - alpha) * pred
+    bnew = beta * (lnew - l) + (1 - beta) * (phi * b)
+    return n + 1, lnew, bnew, esum + abs(y - pred)
+
+
+def _holt_forecast(l: float, b: float, phi: float, h: int) -> float:
+    """The h-step Holt forecast: l + h·b, or the damped geometric sum
+    l + (φ + … + φʰ)·b when φ < 1."""
+    if phi == 1.0:
+        return l + h * b
+    return l + phi * (1.0 - phi ** h) / (1.0 - phi) * b
+
+
+def _croston_step(st: tuple, t: int, z: float, alpha: float) -> tuple:
+    """One demand of Croston's two smoothers over ``(n, last t, ẑ, p̂)``:
+    the first demand sets ẑ, the second sets p̂ to the first gap, and
+    each later demand smooths both."""
+    n, last_t, zh, ph = st
+    if n == 0:
+        return 1, t, z, 0.0
+    q = float(t - last_t)
+    return (n + 1, t, zh + alpha * (z - zh),
+            q if n == 1 else ph + alpha * (q - ph))
+
+
+def _wilder_step(st: tuple, x: float, period: int) -> tuple:
+    """One observation of Wilder's fold over ``(n, previous x, AG, AL)``:
+    the first ``period`` gains/losses accumulate and divide once at the
+    ``period``-th; later ones smooth as AG := (AG·(period−1) + g)/period."""
+    n, prev, ag, al = st
+    if n > 0:
+        d = x - prev
+        g = d if d > 0 else 0.0
+        lo = -d if d < 0 else 0.0
+        if n <= period:
+            ag, al = ag + g, al + lo
+            if n == period:
+                ag, al = ag / period, al / period
+        else:
+            ag = (ag * (period - 1) + g) / period
+            al = (al * (period - 1) + lo) / period
+    return n + 1, x, ag, al
+
+
+def _rsi(ag: float, al: float) -> float:
+    """RSI from Wilder's averages; AL == 0.0 gives 100.0 exactly."""
+    return 100.0 if al == 0.0 else 100.0 - 100.0 / (1.0 + ag / al)
+
+
 def holt_linear(df: DataFrame, key: str, ts_col: str, value_col: str,
                 alpha: float = 0.3, beta: float = 0.1,
                 horizon: int = 7, phi: float = 1.0) -> DataFrame:
@@ -453,23 +525,15 @@ def holt_linear(df: DataFrame, key: str, ts_col: str, value_col: str,
             raise ValueError(
                 f"holt_linear needs >= 2 periods per key, got {len(ys)} "
                 f"for {pdf[key].iloc[0]!r} — densify the grid upstream")
-        l, b = ys[0], ys[1] - ys[0]
-        esum = 0.0
-        for y in ys[1:]:
-            pred = l + ph * b
-            lnew = a * y + (1 - a) * pred
-            bnew = b_ * (lnew - l) + (1 - b_) * (ph * b)
-            esum = esum + abs(y - pred)
-            l, b = lnew, bnew
-        if ph == 1.0:
-            fh = l + horizon * b
-        else:
-            fh = l + ph * (1.0 - ph ** horizon) / (1.0 - ph) * b
+        st = _FOLD0
+        for y in ys:
+            st = _holt_step(st, y, a, b_, ph)
+        n, l, b, esum = st
         return pd.DataFrame({
-            key: [pdf[key].iloc[0]], "n_periods": [len(ys)],
+            key: [pdf[key].iloc[0]], "n_periods": [n],
             "level": [l], "trend": [b],
-            "forecast_h": [fh],
-            "mae": [esum / (len(ys) - 1)]})
+            "forecast_h": [_holt_forecast(l, b, ph, horizon)],
+            "mae": [esum / (n - 1)]})
 
     out_schema = (f"{_key_ddl(df, key)}, n_periods long, level double, "
                   "trend double, forecast_h double, mae double")
@@ -644,8 +708,8 @@ def kalman_local_level(df: DataFrame, key: str, ts_col: str,
 
 def _garch_core(rs: list, a: float, b: float,
                 v0: float) -> tuple:
-    """The GARCH(1,1) recursion shared by :func:`garch_filter` and
-    :func:`garch_sweep`: h_{t+1} = ω + α·r_t² + β·h_t with
+    """The GARCH(1,1) recursion of :func:`garch_sweep` (and so of
+    :func:`garch_filter`): h_{t+1} = ω + α·r_t² + β·h_t with
     variance-targeted ω = (1−α−β)·v0 and h₁ = v0, accumulating the
     Gaussian log-likelihood and max standardized shock. Operand order is
     pinned (ω precomputed ONCE, then ``w + a*e2 + b*h``) so a recursive-
@@ -680,54 +744,16 @@ def garch_filter(df: DataFrame, key: str, ts_col: str, value_col: str,
     log-likelihood −½Σ(ln h_t + r_t²/h_t) and the maximum standardized
     shock r_t²/h_t. Fitting (α, β) needs MLE iteration; the FILTER with
     frozen parameters is the monitoring artifact (the
-    ``kalman_local_level`` q/r posture), and the likelihood readout is
-    what a sweep over candidate (α, β) would compare. Same execution
-    contract as the other recursions: inherently sequential per series
-    ⇒ one Arrow-batched ``applyInPandas`` stage; per-series length is a
-    bounded calendar grain while the series COUNT distributes freely;
-    σ̂₀² is HALF-UP-rounded at 6 dp (the repo's one rounding law) and
-    operand order is pinned so a recursive-CTE oracle replays h
-    bit-identically. Returns one row per key:
-    ``(key, n_diffs, v0, h_next, vol_next, max_shock, log_lik)`` where
-    h_next is the one-step-ahead variance forecast.
+    ``kalman_local_level`` q/r posture).
+
+    This is :func:`garch_sweep` run with the one candidate (α, β), so
+    its exclusion rules (≤ 6 differences, σ̂₀² ≤ 0), σ̂₀² HALF_UP
+    rounding and pinned operand order are the sweep's. Returns one row
+    per key: ``(key, n_diffs, v0, h_next, vol_next, max_shock,
+    log_lik)`` where h_next is the one-step-ahead variance forecast.
     """
-    import math
-
-    import pandas as pd
-
-    a, b = float(alpha), float(beta)
-    if not (a >= 0 and b >= 0 and a + b < 1):
-        raise ValueError("garch_filter needs alpha, beta >= 0 and "
-                         "alpha + beta < 1 (variance targeting)")
-
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
-        ys = pdf[value_col].tolist()
-        rs = [ys[i + 1] - ys[i] for i in range(len(ys) - 1)]
-        m = len(rs)
-        if m <= 6:
-            return pd.DataFrame(columns=[
-                key, "n_diffs", "v0", "h_next", "vol_next",
-                "max_shock", "log_lik"])
-        from ..functions.stats import half_up
-
-        mean = sum(rs) / m
-        var = sum((r - mean) * (r - mean) for r in rs) / m
-        v0 = half_up(var)
-        if v0 <= 0:
-            return pd.DataFrame(columns=[
-                key, "n_diffs", "v0", "h_next", "vol_next",
-                "max_shock", "log_lik"])
-        h, ll, mx = _garch_core(rs, a, b, v0)
-        return pd.DataFrame({
-            key: [pdf[key].iloc[0]], "n_diffs": [m], "v0": [v0],
-            "h_next": [h], "vol_next": [math.sqrt(h)],
-            "max_shock": [mx], "log_lik": [ll]})
-
-    out_schema = (f"{_key_ddl(df, key)}, n_diffs long, v0 double, "
-                  "h_next double, vol_next double, max_shock double, "
-                  "log_lik double")
-    return df.groupBy(key).applyInPandas(fit, out_schema)
+    return (garch_sweep(df, key, ts_col, value_col, [(alpha, beta)])
+            .drop("alpha", "beta"))
 
 
 def croston_forecast(df: DataFrame, key: str, t_col: str,
@@ -767,22 +793,16 @@ def croston_forecast(df: DataFrame, key: str, t_col: str,
 
     def fit(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(t_col)
-        ts = [int(t) for t in pdf[t_col]]
-        zs = [float(v) for v in pdf[demand_col]]
-        m = len(zs)
-        if m < 2:
+        if len(pdf) < 2:
             return pd.DataFrame(columns=cols)
-        z = zs[0]
-        p = float(ts[1] - ts[0])
-        for k in range(1, m):
-            z = z + a * (zs[k] - z)
-            if k >= 2:
-                q = float(ts[k] - ts[k - 1])
-                p = p + a * (q - p)
+        st = (0, 0, 0.0, 0.0)
+        for t, z in zip(pdf[t_col], pdf[demand_col]):
+            st = _croston_step(st, int(t), float(z), a)
+        m, t_last, z, p = st
         return pd.DataFrame({
             key: [pdf[key].iloc[0]], "n_demands": [m],
-            "span_periods": [ts[-1] - ts[0]], "z_hat": [z],
-            "p_hat": [p], "forecast": [z / p]})
+            "span_periods": [t_last - int(pdf[t_col].iloc[0])],
+            "z_hat": [z], "p_hat": [p], "forecast": [z / p]})
 
     out_schema = (f"{_key_ddl(df, key)}, n_demands long, "
                   "span_periods long, z_hat double, p_hat double, "
@@ -822,29 +842,15 @@ def wilder_rsi(df: DataFrame, key: str, t_col: str, value_col: str,
 
     def fit(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(t_col)
-        xs = [float(v) for v in pdf[value_col]]
-        m = len(xs)
-        if m < per + 1:
+        if len(pdf) < per + 1:
             return pd.DataFrame(columns=cols)
-        ag = 0.0
-        al = 0.0
-        for k in range(1, m):
-            d = xs[k] - xs[k - 1]
-            g = d if d > 0 else 0.0
-            lo = -d if d < 0 else 0.0
-            if k <= per:
-                ag = ag + g
-                al = al + lo
-                if k == per:
-                    ag = ag / per
-                    al = al / per
-            else:
-                ag = (ag * (per - 1) + g) / per
-                al = (al * (per - 1) + lo) / per
-        rsi = 100.0 if al == 0.0 else 100.0 - 100.0 / (1.0 + ag / al)
+        st = _FOLD0
+        for x in pdf[value_col]:
+            st = _wilder_step(st, float(x), per)
+        m, _, ag, al = st
         return pd.DataFrame({
             key: [pdf[key].iloc[0]], "n_obs": [m],
-            "avg_gain": [ag], "avg_loss": [al], "rsi": [rsi]})
+            "avg_gain": [ag], "avg_loss": [al], "rsi": [_rsi(ag, al)]})
 
     out_schema = (f"{_key_ddl(df, key)}, n_obs long, avg_gain double, "
                   "avg_loss double, rsi double")
@@ -938,8 +944,7 @@ def hp_filter(df: DataFrame, key: str, ts_col: str, value_col: str,
 def garch_sweep(df: DataFrame, key: str, ts_col: str, value_col: str,
                 candidates: list[tuple[float, float]]) -> DataFrame:
     """GARCH(1,1) candidate-parameter sweep — the model SELECTION step
-    :func:`garch_filter`'s docstring promises ("the likelihood readout
-    is what a sweep over candidate (α, β) would compare"): run the
+    over :func:`garch_filter`'s likelihood readout: run the
     frozen-parameter filter for every candidate pair over the SAME
     per-series differences and emit one row per (series, candidate) so
     the caller ranks by log-likelihood (the `aic_order_select`
@@ -950,10 +955,11 @@ def garch_sweep(df: DataFrame, key: str, ts_col: str, value_col: str,
     ``applyInPandas`` batch, so the fact collapse upstream is scanned
     once, not |candidates| times. Per-series work is
     O(|candidates| × calendar days); series count distributes.
-    Exclusion rules, σ̂₀² HALF_UP rounding, and operand order are
-    exactly :func:`garch_filter`'s (shared ``_garch_core``), so each
-    candidate row is bit-identical to a standalone filter run and a
-    recursive-CTE oracle replays the whole sweep.
+    Series with ≤ 6 differences or σ̂₀² ≤ 0 are excluded; σ̂₀² is
+    HALF_UP-rounded at 6 dp (the repo's one rounding law) and operand
+    order is pinned (``_garch_core``), so a recursive-CTE oracle replays
+    the whole sweep bit-identically. :func:`garch_filter` is this sweep
+    with one candidate.
 
     Returns ``(key, alpha, beta, n_diffs, v0, h_next, vol_next,
     max_shock, log_lik)``.

@@ -4,7 +4,7 @@ Reference: argsort + head (``train_models_simple.py:448-465``),
 ``nlargest`` (``simple_pre_processing.py:609-611``), stride sampling
 ``iloc[::k]`` (``dashboard.py:1468``).
 
-Scale notes: global top-k uses ``orderBy().limit(k)`` — Spark plans a
+Scale notes: global top-k is plain ``orderBy().limit(k)`` — Spark plans a
 TakeOrderedAndProject (per-partition heap + driver merge of k·parts
 rows), NOT a global sort. Per-group top-k is a window rank bounded by a
 per-group filter — single shuffle on the group key.
@@ -14,11 +14,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def top_k(df: DataFrame, order_by: list[Column], k: int) -> DataFrame:
-    """Global top-k (O2/O3). Include a unique tiebreak column for determinism."""
-    return df.orderBy(*order_by).limit(k)
 
 
 def top_k_per_group(df: DataFrame, group_by: list[str],

@@ -59,16 +59,14 @@ def finalize(partials: DataFrame) -> DataFrame:
 def write_day_partitions(df: DataFrame, path: str) -> None:
     """Day-partitioned write with DYNAMIC partition overwrite: only the
     day partitions present in ``df`` are replaced; untouched history
-    stays as-is. (Static overwrite — the default — would DROP every
-    other partition: the classic incremental-load foot-gun.)
+    stays as-is. (Static overwrite — the session default — would DROP
+    every other partition: the classic incremental-load foot-gun.) The
+    mode is this write's own option, so the session setting is neither
+    read nor changed, and a concurrent writer on the same session keeps
+    whatever mode it asked for.
     """
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy("day").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    (df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+     .partitionBy("day").parquet(path))
 
 
 def incremental_refresh(spark, rollup_path: str, new_events: DataFrame,

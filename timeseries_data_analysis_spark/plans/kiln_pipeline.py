@@ -65,11 +65,6 @@ MIS_KEEP = RATIO_COLS + [
 ]
 
 
-def _hourly(df: DataFrame, ts_col: str) -> DataFrame:
-    return df.withColumn("ts", F.date_trunc("hour", F.col(ts_col))).drop(ts_col) \
-        if ts_col != "ts" else df
-
-
 def build_long_sensor_table(tables: dict[str, DataFrame]) -> DataFrame:
     """Stages 1-2 for the sensor feeds → one long (ts, series, value) table.
 

@@ -2,7 +2,8 @@
 
 Reference: ``df.to_csv(...)`` everywhere (``data_generator.py:838-1029``,
 ``pre_processing.py:1996``) plus a JSON metrics dump
-(``pre_processing.py:2004-2017``). Here the native sink is Parquet;
+(``pre_processing.py:2004-2017``, a driver-side ``json.dump`` of a small
+dict with no engine counterpart). Here the native sink is Parquet;
 CSV stays for interoperability exports only.
 
 Scale posture:
@@ -19,8 +20,6 @@ Scale posture:
 """
 
 from __future__ import annotations
-
-import json
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -71,10 +70,3 @@ def export_csv(df: DataFrame, path: str, header: bool = True,
     """
     w = df.coalesce(1) if path.endswith(".csv") else df
     w.write.mode(mode).option("header", str(header).lower()).csv(path)
-
-
-def write_json_metrics(metrics: dict, path: str) -> None:
-    """S5: the reference's performance_metrics.json sink
-    (``pre_processing.py:2004-2017``) — driver-side, one small file."""
-    with open(path, "w") as f:
-        json.dump(metrics, f, indent=2, sort_keys=True, default=float)

@@ -14,14 +14,18 @@ Here the same semantics are real Structured Streaming jobs:
   +   continuous-corpus dedup    → foreachBatch digest-index anti-join
   +   stream-static enrichment   → broadcast dim join, no stream state
   +   stream-stream interval join → watermarked two-sided join state
-  +   stateful anomaly/sessions  → applyInPandasWithState
+  +   stateful anomaly/sessions  → one applyInPandasWithState runner
+                                   (_fold_stream) for the sequential
+                                   monitors; session_window for sessions
   +   sketch maintenance sinks   → MG heavy hitters, MP quantiles, PSI
 
 Scale design: the streaming plans are the SAME DataFrame expressions as
 the batch layer (one definition, two execution modes) — batch/stream
-equivalence is a test invariant, not an aspiration. Watermarks bound the
-state of the windowed, deduplicating and joining operators; alerting
-state is per-key and tiny.
+equivalence is a test invariant, not an aspiration. The sequential
+monitors run on :func:`_fold_stream`; the Holt, Croston and Wilder-RSI
+ones fold the very step their ``operators.timeseries`` batch operator
+folds. Watermarks bound the state of the windowed, deduplicating and
+joining operators; alerting state is per-key and tiny.
 
 Replay-safe sinks. Each ``foreachBatch`` sink is one module-level
 ``<name>_commit_batch(batch_df, batch_id, ...)`` function, started with
@@ -136,12 +140,57 @@ def threshold_alerts(events: DataFrame, threshold: float,
                     (F.col("n_low_series") >= min_series).cast("int").alias("alert")))
 
 
+def _fold_stream(stream: DataFrame, key_col: str, order_cols: list[str],
+                 in_cols: list[str], state_ddl: str, out_cols: list[str],
+                 init: tuple, step: Callable) -> DataFrame:
+    """The one runner of the sequential stream monitors below: per key,
+    a left fold ``state, row = step(key, state, *values)`` over every
+    micro-batch, via ``applyInPandasWithState``.
+
+    Per key and micro-batch it restores the state (``init`` on the key's
+    first batch), concatenates the Arrow chunks Spark hands over
+    (``spark.sql.execution.arrow.maxRecordsPerBatch`` splits a large
+    group) and stable-sorts them together on ``order_cols``: a per-chunk
+    sort breaks the order across chunk boundaries, and mergesort keeps
+    rows that tie on ``order_cols`` in arrival order. ``step`` sees the ``in_cols`` values of
+    each row in that order; each row it returns (``None`` emits nothing)
+    is output, and the last state is stored. ``out_cols`` are the output
+    ``"name type"`` fields, where the bare ``key_col`` takes the input
+    key's type (``_key_ddl``). Order ACROSS micro-batches is stream
+    arrival: late rows are the caller's watermarking problem."""
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from ..operators.timeseries import _key_ddl
+
+    fields = [_key_ddl(stream, c) if c == key_col else c for c in out_cols]
+    names = [f.split()[0] for f in fields]
+
+    def fn(key, pdfs, state):
+        st = state.get if state.exists else init
+        rows = []
+        chunks = list(pdfs)
+        if chunks:
+            pdf = pd.concat(chunks, ignore_index=True).sort_values(
+                order_cols, kind="mergesort")
+            for vals in zip(*(pdf[c] for c in in_cols)):
+                st, row = step(key[0], st, *vals)
+                if row is not None:
+                    rows.append(row)
+        state.update(tuple(st))
+        yield pd.DataFrame(rows, columns=names)
+
+    return (stream.groupBy(key_col)
+            .applyInPandasWithState(fn, ", ".join(fields), state_ddl,
+                                    "update", GroupStateTimeout.NoTimeout))
+
+
 def streaming_anomaly(events: DataFrame, key_col: str = "event_type",
                       ts_col: str = "ts", value_col: str = "value",
                       window: int = 24, n_sigma: float = 2.0,
                       min_valid_frac: float = 0.5) -> DataFrame:
     """The reference's trailing-window anomaly detector (W11) as a CUSTOM
-    STATEFUL streaming operator via ``applyInPandasWithState``.
+    STATEFUL streaming operator on :func:`_fold_stream`.
 
     Batch twin: ``operators.windows.anomaly_features`` — same semantics
     (μ, σ_pop over the preceding ``window`` ROWS excluding the current;
@@ -150,59 +199,42 @@ def streaming_anomaly(events: DataFrame, key_col: str = "event_type",
     ring of the last ``window`` values (nulls stored as NaN so the
     rows-vs-valid distinction survives), so state size is O(keys·window)
     regardless of stream length. Batch/stream equivalence is a test
-    invariant (tests/test_streaming.py) given in-order arrival per key;
-    out-of-order rows within a micro-batch are sorted, across batches
-    they follow the stream's file order.
+    invariant (tests/test_streaming.py) given in-order arrival per key
+    across micro-batches; within one they are sorted by ``ts``.
     """
     import math
 
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    def step(k, st, ts, v):
+        wnd = st[0][-window:]
+        valid_vals = [x for x in wnd if not math.isnan(x)]
+        valid = (len(wnd) >= window
+                 and len(valid_vals) > window * min_valid_frac)
+        flag = 0
+        is_null = v is None or (isinstance(v, float) and math.isnan(v))
+        if valid and valid_vals and not is_null:
+            mu = sum(valid_vals) / len(valid_vals)
+            var = sum((x - mu) ** 2 for x in valid_vals) / len(valid_vals)
+            sd = math.sqrt(var)
+            if v < mu - n_sigma * sd:
+                flag = -1
+            elif v > mu + n_sigma * sd:
+                flag = 1
+        x = float("nan") if is_null else float(v)
+        return (([*wnd, x][-window:],),
+                (ts, k, None if is_null else x, flag))
 
-    out_schema = (f"{ts_col} timestamp, {key_col} string, "
-                  f"{value_col} double, anomaly_flag int")
-    state_schema = "vals array<double>"
-
-    def fn(key, pdfs, state):
-        buf: list[float] = list(state.get[0]) if state.exists else []
-        rows = []
-        for pdf in pdfs:
-            pdf = pdf.sort_values(ts_col)
-            for ts, v in zip(pdf[ts_col], pdf[value_col]):
-                wnd = buf[-window:]
-                valid_vals = [x for x in wnd if not math.isnan(x)]
-                valid = (len(wnd) >= window
-                         and len(valid_vals) > window * min_valid_frac)
-                flag = 0
-                is_null = v is None or (isinstance(v, float) and math.isnan(v))
-                if valid and valid_vals and not is_null:
-                    mu = sum(valid_vals) / len(valid_vals)
-                    var = sum((x - mu) ** 2 for x in valid_vals) / len(valid_vals)
-                    sd = math.sqrt(var)
-                    if v < mu - n_sigma * sd:
-                        flag = -1
-                    elif v > mu + n_sigma * sd:
-                        flag = 1
-                rows.append((ts, key[0], None if is_null else float(v), flag))
-                buf.append(float("nan") if is_null else float(v))
-                if len(buf) > window:
-                    buf = buf[-window:]
-        state.update((buf,))
-        yield pd.DataFrame(rows, columns=[ts_col, key_col, value_col,
-                                          "anomaly_flag"])
-
-    return (events.groupBy(key_col)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "update", GroupStateTimeout.NoTimeout))
+    return _fold_stream(
+        events, key_col, [ts_col], [ts_col, value_col], "vals array<double>",
+        [f"{ts_col} timestamp", key_col, f"{value_col} double",
+         "anomaly_flag int"], ([],), step)
 
 
 def cusum_stream(events: DataFrame, baseline: dict,
                  key_col: str = "event_type", ts_col: str = "ts",
                  value_col: str = "value",
                  k_sigma: float = 0.5) -> DataFrame:
-    """Streaming two-sided CUSUM drift monitor via
-    ``applyInPandasWithState`` — the online twin of
-    ``operators.windows.cusum_features``.
+    """Streaming two-sided CUSUM drift monitor on :func:`_fold_stream` —
+    the online twin of ``operators.windows.cusum_features``.
 
     ``baseline`` maps key → (μ, σ): control charts monitor drift AGAINST
     A FROZEN BASELINE, which is exactly why the streaming variant takes
@@ -217,66 +249,42 @@ def cusum_stream(events: DataFrame, baseline: dict,
     oracle — NOT Python's banker's ``round()``, which rounds half-to-even
     and would diverge for z·10⁶ values landing exactly on .5.
 
-    Rows within a micro-batch are sorted by ``ts``; cross-batch order
-    follows stream arrival (the file source's order in tests). Keys
-    absent from ``baseline`` or with σ ≤ 0 emit z = 0 (flat statistic) —
-    the same degenerate-series contract as the batch op.
+    Rows within a micro-batch are sorted by ``ts``. Keys absent from
+    ``baseline`` or with σ ≤ 0 emit z = 0 (flat statistic) — the same
+    degenerate-series contract as the batch op.
     """
     import math
-
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
 
     def _round_half_up(x: float) -> int:
         # sign-symmetric half-away-from-zero, matching F.round / DuckDB
         return int(math.floor(x + 0.5)) if x >= 0 else int(math.ceil(x - 0.5))
 
     k_micro = _round_half_up(k_sigma * 1_000_000)
-    out_schema = (f"{ts_col} timestamp, {key_col} string, "
-                  f"z_micro bigint, cusum_pos_micro bigint, "
-                  f"cusum_neg_micro bigint")
-    state_schema = "s_pos bigint, s_neg bigint"
 
-    def fn(key, pdfs, state):
-        s_pos, s_neg = state.get if state.exists else (0, 0)
-        mu, sigma = baseline.get(key[0], (0.0, 0.0))
-        rows = []
-        # concat BEFORE sorting: applyInPandasWithState hands the
-        # micro-batch as multiple Arrow chunks (maxRecordsPerBatch),
-        # and per-chunk sorts would break ts order across chunk
-        # boundaries; mergesort = stable (duplicate-ts rows keep
-        # arrival order deterministically)
-        chunks = list(pdfs)
-        pdf = (pd.concat(chunks, ignore_index=True) if len(chunks) > 1
-               else chunks[0]) if chunks else None
-        if pdf is not None:
-            pdf = pdf.sort_values(ts_col, kind="mergesort")
-            for ts, v in zip(pdf[ts_col], pdf[value_col]):
-                if sigma > 0 and v is not None and v == v:
-                    zm = _round_half_up((float(v) - mu) / sigma * 1_000_000)
-                else:
-                    zm = 0
-                s_pos = max(0, s_pos + zm - k_micro)
-                s_neg = max(0, s_neg - zm - k_micro)
-                rows.append((ts, key[0], zm, s_pos, s_neg))
-        state.update((s_pos, s_neg))
-        yield pd.DataFrame(rows, columns=[ts_col, key_col, "z_micro",
-                                          "cusum_pos_micro",
-                                          "cusum_neg_micro"])
+    def step(k, st, ts, v):
+        mu, sigma = baseline.get(k, (0.0, 0.0))
+        if sigma > 0 and v is not None and v == v:
+            zm = _round_half_up((float(v) - mu) / sigma * 1_000_000)
+        else:
+            zm = 0
+        s_pos = max(0, st[0] + zm - k_micro)
+        s_neg = max(0, st[1] - zm - k_micro)
+        return (s_pos, s_neg), (ts, k, zm, s_pos, s_neg)
 
-    return (events.groupBy(key_col)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "update", GroupStateTimeout.NoTimeout))
+    return _fold_stream(
+        events, key_col, [ts_col], [ts_col, value_col],
+        "s_pos bigint, s_neg bigint",
+        [f"{ts_col} timestamp", key_col, "z_micro bigint",
+         "cusum_pos_micro bigint", "cusum_neg_micro bigint"], (0, 0), step)
 
 
 def page_hinkley_stream(events: DataFrame, params: dict,
                         key_col: str = "event_type", ts_col: str = "ts",
                         value_col: str = "value") -> DataFrame:
-    """Streaming Page-Hinkley mean-drift monitor via
-    ``applyInPandasWithState`` — the online twin of the
-    ``page_hinkley`` registry query (which is the point of PH: it is
-    a SEQUENTIAL detector; the batch form replays it, this runs it
-    live).
+    """Streaming Page-Hinkley mean-drift monitor on :func:`_fold_stream`
+    — the online twin of the ``page_hinkley`` registry query (which is
+    the point of PH: it is a SEQUENTIAL detector; the batch form replays
+    it, this runs it live).
 
     ``params`` maps key → (δ, λ): the batch query derives δ = 0.05σ,
     λ = 3σ at fit time from the series' own spread; the monitor takes
@@ -293,304 +301,156 @@ def page_hinkley_stream(events: DataFrame, params: dict,
     (test-pinned). Keys absent from ``params`` or with λ ≤ 0 emit a
     flat statistic (ph = 0, no alarm) without touching state — the
     ``cusum_stream`` unknown-key contract. Rows within a micro-batch
-    are sorted by ``ts``; cross-batch order follows stream arrival.
+    are sorted by ``ts``.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from ..functions.stats import half_up as _r6  # THE rounding law
 
-    out_schema = (f"{ts_col} timestamp, {key_col} string, "
-                  f"mbar double, ph double, alarm int")
-    state_schema = "n bigint, s double, m double, minm double"
+    def step(k, st, ts, v):
+        delta, lam = params.get(k, (0.0, 0.0))
+        if lam <= 0 or v is None or v != v:
+            return st, (ts, k, 0.0, 0.0, 0)
+        n, s, m, minm = st
+        n += 1
+        s += float(v)
+        mbar = _r6(s / n)
+        term = _r6(float(v) - mbar - delta)
+        m += term
+        m_t = _r6(m)
+        minm = m_t if n == 1 else min(minm, m_t)
+        ph = _r6(m_t - minm)
+        return (n, s, m, minm), (ts, k, mbar, ph, 1 if ph > lam else 0)
 
-    def fn(key, pdfs, state):
-        n, s, m, minm = state.get if state.exists else (0, 0.0, 0.0, 0.0)
-        delta, lam = params.get(key[0], (0.0, 0.0))
-        rows = []
-        # concat-then-stable-sort across Arrow chunks: the exactness
-        # contract is per-micro-batch ts order, not per-chunk (the
-        # cusum_stream fix, same reason)
-        chunks = list(pdfs)
-        pdf = (pd.concat(chunks, ignore_index=True) if len(chunks) > 1
-               else chunks[0]) if chunks else None
-        if pdf is not None:
-            pdf = pdf.sort_values(ts_col, kind="mergesort")
-            for ts, v in zip(pdf[ts_col], pdf[value_col]):
-                if lam <= 0 or v is None or v != v:
-                    rows.append((ts, key[0], 0.0, 0.0, 0))
-                    continue
-                n += 1
-                s += float(v)
-                mbar = _r6(s / n)
-                term = _r6(float(v) - mbar - delta)
-                m += term
-                m_t = _r6(m)
-                minm = m_t if n == 1 else min(minm, m_t)
-                ph = _r6(m_t - minm)
-                rows.append((ts, key[0], mbar, ph,
-                             1 if ph > lam else 0))
-        state.update((n, s, m, minm))
-        yield pd.DataFrame(rows, columns=[ts_col, key_col, "mbar",
-                                          "ph", "alarm"])
-
-    return (events.groupBy(key_col)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "update", GroupStateTimeout.NoTimeout))
+    return _fold_stream(
+        events, key_col, [ts_col], [ts_col, value_col],
+        "n bigint, s double, m double, minm double",
+        [f"{ts_col} timestamp", key_col, "mbar double", "ph double",
+         "alarm int"], (0, 0.0, 0.0, 0.0), step)
 
 
 def markov_stream(events: DataFrame, key_col: str = "user_id",
                   ts_col: str = "ts", type_col: str = "event_type",
                   id_col: str = "event_id") -> DataFrame:
-    """Streaming first-order transition extractor via
-    ``applyInPandasWithState`` — the online twin of the
-    ``transition_matrix`` registry query: per-user state is the LAST
-    seen event type (ONE string per user — O(users) state regardless of
-    stream length), and each arriving event emits its (from, to)
-    transition row. Aggregating the emitted transitions over any
-    micro-batch replay equals the batch query's ``lead()``-derived
-    counts EXACTLY: rows are (ts, event_id)-stable-sorted per
-    micro-batch (the ``cusum_stream`` concat-then-mergesort contract)
-    and the carried state stitches batch boundaries, which together
-    reproduce the batch window order. Null event types pass through
-    without touching state (the batch query filters them before the
-    window)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    """Streaming first-order transition extractor on
+    :func:`_fold_stream` — the online twin of the ``transition_matrix``
+    registry query: per-user state is the LAST seen event type (ONE
+    string per user — O(users) state regardless of stream length), and
+    each arriving event emits its (from, to) transition row. Aggregating
+    the emitted transitions over any micro-batch replay equals the batch
+    query's ``lead()``-derived counts EXACTLY: rows are (ts, event_id)
+    stable-sorted per micro-batch and the carried state stitches batch
+    boundaries, which together reproduce the batch window order. Null
+    event types pass through without touching state (the batch query
+    filters them before the window)."""
+    def step(k, st, ts, et):
+        if et is None:
+            return st, None
+        return (et,), None if st[0] is None else (k, st[0], et, ts)
 
-    key_t = events.schema[key_col].dataType.simpleString()
-    out_schema = (f"{key_col} {key_t}, from_type string, "
-                  f"to_type string, {ts_col} timestamp")
-    state_schema = "last string"
-
-    def fn(key, pdfs, state):
-        last = state.get[0] if state.exists else None
-        chunks = list(pdfs)
-        pdf = (pd.concat(chunks, ignore_index=True) if len(chunks) > 1
-               else chunks[0]) if chunks else None
-        rows = []
-        if pdf is not None:
-            pdf = pdf.sort_values([ts_col, id_col], kind="mergesort")
-            for ts, et in zip(pdf[ts_col], pdf[type_col]):
-                if et is None:
-                    continue
-                if last is not None:
-                    rows.append((key[0], last, et, ts))
-                last = et
-        state.update((last,))
-        yield pd.DataFrame(rows, columns=[key_col, "from_type",
-                                          "to_type", ts_col])
-
-    return (events.groupBy(key_col)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "update", GroupStateTimeout.NoTimeout))
+    return _fold_stream(
+        events, key_col, [ts_col, id_col], [ts_col, type_col],
+        "last string",
+        [key_col, "from_type string", "to_type string",
+         f"{ts_col} timestamp"], (None,), step)
 
 
 def croston_stream(demand_stream: DataFrame, key_col: str = "event_type",
                    t_col: str = "t", demand_col: str = "z",
                    alpha: float = 0.1) -> DataFrame:
-    """Streaming Croston intermittent-demand monitor via
-    ``applyInPandasWithState`` — the online twin of
-    ``operators.timeseries.croston_forecast``: per-key state is
-    (n_demands, last_t, ẑ, p̂) — four scalars per key, O(keys) total —
-    updated by the SAME pinned smoother conventions (z init = first
-    size; p init = first gap; z updates from the 2nd demand, p from
-    the 3rd), so a replayed demand stream reproduces the batch
-    operator's (ẑ, p̂, forecast) BIT-FOR-BIT at every prefix
+    """Streaming Croston intermittent-demand monitor on
+    :func:`_fold_stream` — the online twin of
+    ``operators.timeseries.croston_forecast``, folding the same
+    ``_croston_step`` over (n_demands, last_t, ẑ, p̂) — four scalars per
+    key, O(keys) total — so a replayed demand stream reproduces the
+    batch operator's (ẑ, p̂, forecast) BIT-FOR-BIT at every prefix
     (test-pinned across micro-batch splits). Emits one row per demand
-    with the post-update state. Rows within a micro-batch are
-    (t)-stable-sorted (the ``cusum_stream`` concat-then-mergesort
-    contract); out-of-order arrivals ACROSS batches are the caller's
-    watermarking problem, as with every sequential monitor here."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    with the post-update state; forecast is 0.0 before the second
+    demand. Rows within a micro-batch are t-sorted."""
+    from ..operators.timeseries import _croston_step
 
     a = float(alpha)
     if not 0 < a < 1:
         raise ValueError("croston_stream needs 0 < alpha < 1")
 
-    key_t = demand_stream.schema[key_col].dataType.simpleString()
-    out_schema = (f"{key_col} {key_t}, {t_col} long, n_demands long, "
-                  "z_hat double, p_hat double, forecast double")
-    state_schema = "n bigint, last_t bigint, zh double, ph double"
+    def step(k, st, t, z):
+        st = _croston_step(st, int(t), float(z), a)
+        n, t, zh, ph = st
+        # ph > 0 guard: a replayed/duplicate period index t (gap 0 at
+        # n == 2) would otherwise emit inf/NaN; the batch twin can
+        # never produce it (its input is groupBy'd on t), so the guard
+        # changes nothing on any stream the batch query could also see.
+        return st, (k, t, n, zh, ph, zh / ph if n >= 2 and ph > 0 else 0.0)
 
-    def fn(key, pdfs, state):
-        n, last_t, zh, ph = (state.get if state.exists
-                             else (0, 0, 0.0, 0.0))
-        chunks = list(pdfs)
-        pdf = (pd.concat(chunks, ignore_index=True) if len(chunks) > 1
-               else chunks[0]) if chunks else None
-        rows = []
-        if pdf is not None:
-            pdf = pdf.sort_values(t_col, kind="mergesort")
-            for t, z in zip(pdf[t_col], pdf[demand_col]):
-                t, z = int(t), float(z)
-                n += 1
-                if n == 1:
-                    zh = z
-                else:
-                    zh = zh + a * (z - zh)
-                    if n == 2:
-                        ph = float(t - last_t)
-                    else:
-                        ph = ph + a * (float(t - last_t) - ph)
-                last_t = t
-                # ph > 0 guard: a replayed/duplicate period index t
-                # (gap 0 at n == 2) would otherwise emit inf/NaN; the
-                # batch twin can never produce it (its input is
-                # groupBy'd on t), so the guard changes nothing on any
-                # stream the batch query could also see.
-                fc = zh / ph if (n >= 2 and ph > 0) else 0.0
-                rows.append((key[0], t, n, zh, ph, fc))
-        state.update((n, last_t, zh, ph))
-        yield pd.DataFrame(rows, columns=[key_col, t_col, "n_demands",
-                                          "z_hat", "p_hat", "forecast"])
-
-    return (demand_stream.groupBy(key_col)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "update", GroupStateTimeout.NoTimeout))
+    return _fold_stream(
+        demand_stream, key_col, [t_col], [t_col, demand_col],
+        "n bigint, last_t bigint, zh double, ph double",
+        [key_col, f"{t_col} long", "n_demands long", "z_hat double",
+         "p_hat double", "forecast double"], (0, 0, 0.0, 0.0), step)
 
 
 def holt_stream(series_stream: DataFrame, key_col: str = "event_type",
                 t_col: str = "t", value_col: str = "y",
                 alpha: float = 0.3, beta: float = 0.1,
                 horizon: int = 7, phi: float = 1.0) -> DataFrame:
-    """Streaming (damped-trend) Holt monitor via
-    ``applyInPandasWithState`` — the online twin of
-    ``operators.timeseries.holt_linear``: per-key state is
-    (n, level, trend, |error| sum) — four scalars per key, O(keys)
-    total — updated by the SAME pinned recursion (l = y₀; b
-    initializes to y₁ − l when the SECOND point arrives, exactly the
-    batch init b = y₁ − y₀; then pred = l + φ·b, l' = αy + (1−α)pred,
-    b' = β(l'−l) + (1−β)·φ·b, esum += |y − pred|), so a replayed
-    series reproduces the batch operator's (level, trend, forecast_h,
-    mae) BIT-FOR-BIT at every prefix across micro-batch splits
-    (test-pinned — the ``croston_stream`` contract). Emits one row per
-    period with the post-update state; n = 1 rows emit
+    """Streaming (damped-trend) Holt monitor on :func:`_fold_stream` —
+    the online twin of ``operators.timeseries.holt_linear``, folding the
+    same ``_holt_step`` over (n, level, trend, |error| sum) — four
+    scalars per key, O(keys) total — so a replayed series reproduces the
+    batch operator's (level, trend, forecast_h, mae) BIT-FOR-BIT at
+    every prefix across micro-batch splits (test-pinned). Emits one row
+    per period with the post-update state; n = 1 rows emit
     trend/forecast/mae = 0.0 sentinels (the batch operator refuses
-    < 2 periods). Rows within a micro-batch are t-stable-sorted;
-    out-of-order arrivals ACROSS batches and grid regularity are the
-    caller's watermark/downsample problem, as with every sequential
-    monitor here."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    < 2 periods). Rows within a micro-batch are t-sorted; grid
+    regularity is the caller's downsample problem."""
+    from ..operators.timeseries import _FOLD0, _holt_forecast, _holt_step
 
     a, b_, ph = float(alpha), float(beta), float(phi)
     if not 0 < ph <= 1:
         raise ValueError("holt_stream needs 0 < phi <= 1")
     h = int(horizon)
 
-    key_t = series_stream.schema[key_col].dataType.simpleString()
-    out_schema = (f"{key_col} {key_t}, {t_col} long, n_periods long, "
-                  "level double, trend double, forecast_h double, "
-                  "mae double")
-    state_schema = "n bigint, l double, b double, esum double"
+    def step(k, st, t, y):
+        st = _holt_step(st, float(y), a, b_, ph)
+        n, l, b, esum = st
+        if n < 2:
+            return st, (k, int(t), n, l, 0.0, 0.0, 0.0)
+        return st, (k, int(t), n, l, b, _holt_forecast(l, b, ph, h),
+                    esum / (n - 1))
 
-    def fn(key, pdfs, state):
-        n, l, b, esum = (state.get if state.exists
-                         else (0, 0.0, 0.0, 0.0))
-        chunks = list(pdfs)
-        pdf = (pd.concat(chunks, ignore_index=True) if len(chunks) > 1
-               else chunks[0]) if chunks else None
-        rows = []
-        if pdf is not None:
-            pdf = pdf.sort_values(t_col, kind="mergesort")
-            for t, y in zip(pdf[t_col], pdf[value_col]):
-                t, y = int(t), float(y)
-                n += 1
-                if n == 1:
-                    l = y
-                else:
-                    if n == 2:
-                        b = y - l
-                    pred = l + ph * b
-                    lnew = a * y + (1 - a) * pred
-                    bnew = b_ * (lnew - l) + (1 - b_) * (ph * b)
-                    esum = esum + abs(y - pred)
-                    l, b = lnew, bnew
-                if n >= 2:
-                    if ph == 1.0:
-                        fh = l + h * b
-                    else:
-                        fh = l + ph * (1.0 - ph ** h) / (1.0 - ph) * b
-                    rows.append((key[0], t, n, l, b, fh, esum / (n - 1)))
-                else:
-                    rows.append((key[0], t, n, l, 0.0, 0.0, 0.0))
-        state.update((n, l, b, esum))
-        yield pd.DataFrame(rows, columns=[key_col, t_col, "n_periods",
-                                          "level", "trend", "forecast_h",
-                                          "mae"])
-
-    return (series_stream.groupBy(key_col)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "update", GroupStateTimeout.NoTimeout))
+    return _fold_stream(
+        series_stream, key_col, [t_col], [t_col, value_col],
+        "n bigint, l double, b double, esum double",
+        [key_col, f"{t_col} long", "n_periods long", "level double",
+         "trend double", "forecast_h double", "mae double"], _FOLD0, step)
 
 
 def rsi_stream(series_stream: DataFrame, key_col: str = "event_type",
                t_col: str = "t", value_col: str = "y",
                period: int = 14) -> DataFrame:
-    """Streaming Wilder RSI monitor via ``applyInPandasWithState`` —
-    the online twin of ``operators.timeseries.wilder_rsi``: per-key
-    state is (n, prev, AG, AL) — four scalars per key — updated by the
-    SAME pinned left fold (seed accumulates the first ``period``
-    gains/losses in arrival order and divides ONCE at k = period;
-    thereafter AG := (AG·(period−1)+g)/period), so a replayed series
-    reproduces the batch (avg_gain, avg_loss, rsi) BIT-FOR-BIT at
-    every prefix with ≥ period+1 observations (test-pinned across
-    micro-batch splits — the ``croston_stream``/``holt_stream``
-    contract). Rows before the seed completes emit rsi = 0.0
-    sentinels with the raw accumulating state. Same ordering caveats
-    as every sequential monitor here."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    """Streaming Wilder RSI monitor on :func:`_fold_stream` — the online
+    twin of ``operators.timeseries.wilder_rsi``, folding the same
+    ``_wilder_step`` over (n, prev, AG, AL) — four scalars per key — so
+    a replayed series reproduces the batch (avg_gain, avg_loss, rsi)
+    BIT-FOR-BIT at every prefix with ≥ period+1 observations
+    (test-pinned across micro-batch splits). Rows before the seed
+    completes emit rsi = 0.0 sentinels with the raw accumulating state.
+    Rows within a micro-batch are t-sorted."""
+    from ..operators.timeseries import _FOLD0, _rsi, _wilder_step
 
     per = int(period)
     if per < 1:
         raise ValueError("rsi_stream needs period >= 1")
 
-    key_t = series_stream.schema[key_col].dataType.simpleString()
-    out_schema = (f"{key_col} {key_t}, {t_col} long, n_obs long, "
-                  "avg_gain double, avg_loss double, rsi double")
-    state_schema = "n bigint, prev double, ag double, al double"
+    def step(k, st, t, y):
+        st = _wilder_step(st, float(y), per)
+        n, _, ag, al = st
+        return st, (k, int(t), n, ag, al,
+                    _rsi(ag, al) if n >= per + 1 else 0.0)
 
-    def fn(key, pdfs, state):
-        n, prev, ag, al = (state.get if state.exists
-                           else (0, 0.0, 0.0, 0.0))
-        chunks = list(pdfs)
-        pdf = (pd.concat(chunks, ignore_index=True) if len(chunks) > 1
-               else chunks[0]) if chunks else None
-        rows = []
-        if pdf is not None:
-            pdf = pdf.sort_values(t_col, kind="mergesort")
-            for t, y in zip(pdf[t_col], pdf[value_col]):
-                t, y = int(t), float(y)
-                n += 1
-                if n > 1:
-                    k = n - 1
-                    d = y - prev
-                    g = d if d > 0 else 0.0
-                    lo = -d if d < 0 else 0.0
-                    if k <= per:
-                        ag, al = ag + g, al + lo
-                        if k == per:
-                            ag, al = ag / per, al / per
-                    else:
-                        ag = (ag * (per - 1) + g) / per
-                        al = (al * (per - 1) + lo) / per
-                prev = y
-                if n >= per + 1:
-                    rsi = (100.0 if al == 0.0
-                           else 100.0 - 100.0 / (1.0 + ag / al))
-                    rows.append((key[0], t, n, ag, al, rsi))
-                else:
-                    rows.append((key[0], t, n, ag, al, 0.0))
-        state.update((n, prev, ag, al))
-        yield pd.DataFrame(rows, columns=[key_col, t_col, "n_obs",
-                                          "avg_gain", "avg_loss", "rsi"])
-
-    return (series_stream.groupBy(key_col)
-            .applyInPandasWithState(fn, out_schema, state_schema,
-                                    "update", GroupStateTimeout.NoTimeout))
+    return _fold_stream(
+        series_stream, key_col, [t_col], [t_col, value_col],
+        "n bigint, prev double, ag double, al double",
+        [key_col, f"{t_col} long", "n_obs long", "avg_gain double",
+         "avg_loss double", "rsi double"], _FOLD0, step)
 
 
 def session_window_rollup(events: DataFrame, gap: str = "30 minutes",
