@@ -82,8 +82,7 @@ EDGES = [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (6, 7), (7, 8),
          (10, 11), (20, 21), (21, 22), (20, 22), (30, 30)]
 
 
-@pytest.mark.parametrize("cc", [GR.connected_components,
-                                GR.connected_components_star])
+@pytest.mark.parametrize("cc", [GR.connected_components])
 def test_cc_rerun_compiles_no_per_round_class(spark, cc):
     """Re-running on the same graph compiles no class per round (a
     limit-then-count convergence probe compiled 4 every round, since

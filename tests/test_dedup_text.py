@@ -744,18 +744,25 @@ def _py_bpe(word_counts: dict[str, int], n_merges: int):
 
 
 def test_bpe_learn_merges_matches_reference(spark):
-    words = (["lower"] * 5 + ["low"] * 7 + ["newest"] * 6 + ["widest"] * 3
-             + ["new"] * 2)
-    docs = spark.createDataFrame([(i, w) for i, w in enumerate(words)],
-                                 "doc_id: long, text: string")
-    got = [(r["lhs"], r["rhs"], r["n"])
-           for r in TOKZ.bpe_learn_merges(docs, n_merges=6)
-           .orderBy("rank").collect()]
-    wc: dict[str, int] = {}
-    for w in words:
-        wc[w] = wc.get(w, 0) + 1
-    want, _ = _py_bpe(wc, 6)
-    assert got == want
+    """Merge-for-merge equal to the pure-python reference, tiebreaks
+    included; on the larger word list through depth 40, past the total
+    number of possible merges (exhaustion)."""
+    base = (["lower"] * 5 + ["low"] * 7 + ["newest"] * 6 + ["widest"] * 3
+            + ["new"] * 2)
+    cases = [(base, (6,)),
+             (base + ["banana"] * 4 + ["bandana"] * 2, (1, 6, 40))]
+    for words, depths in cases:
+        docs = spark.createDataFrame([(i, w) for i, w in enumerate(words)],
+                                     "doc_id: long, text: string")
+        wc: dict[str, int] = {}
+        for w in words:
+            wc[w] = wc.get(w, 0) + 1
+        for depth in depths:
+            got = [(r["lhs"], r["rhs"], r["n"])
+                   for r in TOKZ.bpe_learn_merges(docs, n_merges=depth)
+                   .orderBy("rank").collect()]
+            want, _ = _py_bpe(wc, depth)
+            assert got == want, (len(words), depth)
 
 
 def test_bpe_fold_nonoverlapping(spark):
@@ -1027,33 +1034,6 @@ def test_triangle_stats_known_graph(spark):
     assert got[4] == (4, 3, 0.5)      # 3 of C(4,2)=6 wedges closed
     assert got[10] == (2, 0, 0.0)
     assert got[11] == (1, 0, 0.0)     # degree < 2 -> coeff 0 by contract
-
-
-def test_bpe_local_matches_distributed_and_reference(spark):
-    """`bpe_learn_merges_local` (driver-local incremental loop) must be
-    merge-for-merge identical to the distributed 2-jobs-per-merge loop
-    AND the pure-python reference, including tiebreaks, through deep
-    depths (past alphabet exhaustion)."""
-    words = (["lower"] * 5 + ["low"] * 7 + ["newest"] * 6 + ["widest"] * 3
-             + ["new"] * 2 + ["banana"] * 4 + ["bandana"] * 2)
-    docs = spark.createDataFrame([(i, w) for i, w in enumerate(words)],
-                                 "doc_id: long, text: string")
-    wc: dict[str, int] = {}
-    for w in words:
-        wc[w] = wc.get(w, 0) + 1
-    for depth in (1, 6, 40):   # 40 > total possible merges -> exhaustion
-        want, _ = _py_bpe(wc, depth)
-        local = [(r["lhs"], r["rhs"], r["n"])
-                 for r in TOKZ.bpe_learn_merges_local(docs, n_merges=depth)
-                 .orderBy("rank").collect()]
-        assert local == want, depth
-    dist = [(r["lhs"], r["rhs"], r["n"])
-            for r in TOKZ.bpe_learn_merges(docs, n_merges=12)
-            .orderBy("rank").collect()]
-    local12 = [(r["lhs"], r["rhs"], r["n"])
-               for r in TOKZ.bpe_learn_merges_local(docs, n_merges=12)
-               .orderBy("rank").collect()]
-    assert dist == local12
 
 
 def test_cms_never_undercounts_and_merges(spark):

@@ -1,4 +1,4 @@
-"""``tools/profile.py`` run in-process on the shared test session.
+"""``tools/query_profile.py`` run in-process on the shared test session.
 
 By the time this runs, the session has finished far more SQL executions
 than the status store retains (``spark.sql.ui.retainedExecutions``,
@@ -10,13 +10,15 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-from tools import profile as profile_tool  # noqa: E402
+from tools import query_profile as profile_tool  # noqa: E402
 
 
 def test_profile_attributes_executions_to_spans(spark, sf_dir, tmp_path, monkeypatch):
@@ -57,3 +59,16 @@ def test_profile_rejects_unknown_query_before_spark(tmp_path, monkeypatch):
         profile_tool.main(["r0/t", "pricing_summary", "no_such_query"])
     assert exc.value.code != 0
     assert not (tmp_path / "profiles").exists()
+
+
+def test_tools_dir_shadows_no_stdlib_import():
+    """A script under tools/ runs with tools/ first on sys.path, so no
+    file there may shadow the standard library that pyspark imports:
+    a ``tools/profile.py`` broke ``import cProfile``, and with it
+    ``python tools/check_oracles.py``."""
+    tools = os.path.join(ROOT, "tools")
+    proc = subprocess.run(
+        [sys.executable, "-c",
+         f"import sys; sys.path.insert(0, {tools!r}); import cProfile"],
+        capture_output=True, text=True, timeout=120)
+    assert proc.returncode == 0, proc.stderr

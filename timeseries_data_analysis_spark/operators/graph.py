@@ -19,11 +19,10 @@ iteration pitfall.
 At 100 TB scale the same loop holds: labels are (vertex, label) pairs —
 8+8 bytes/vertex shuffled per round on the vertex hash; the edge table is
 re-joined per round but never mutated, so AQE/broadcast handles skewed
-hub vertices. For billion-edge graphs use
-:func:`connected_components_star` (alternating large-star/small-star,
-Kiveris et al., "Connected Components in MapReduce", SOCC'14): it
-rewrites the edge set each round instead of re-joining it, so shuffle
-volume decays as components contract.
+hub vertices. Label propagation is the one CC engine: a star-contraction
+twin (Kiveris et al., SOCC'14) won only on a 1000× corpus no workload
+runs (SCALE §1q) and lost on both sf0.1 gate graphs, so it was deleted
+(last in commit ``19a35ce``).
 """
 
 from __future__ import annotations
@@ -31,12 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-# Rounds the most recent connected-components call took to converge
-# (one propagate+jump label update per round for
-# ``connected_components``, one star-contraction round for
-# ``connected_components_star``) — a probe observable (SCALE §1q measures
-# round counts at the 1000× corpus), not an API: read immediately after
-# the call that set it.
+# Rounds the most recent ``connected_components`` call (its only writer)
+# took to converge, one propagate+jump label update per round — a probe
+# observable, not an API: read immediately after the call that set it.
 LAST_CC_ROUNDS: int = 0
 
 
@@ -61,18 +57,27 @@ def _symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
     return edges.select(s.alias("_s")).select("_s.a", "_s.b")
 
 
+def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """(a, b) with a < b: each undirected edge once, self-loops dropped.
+
+    Banded candidate generators (MinHash/SimHash) emit one row per
+    colliding band, so the same pair can arrive several times and in
+    either order; every operator that counts degrees, wedges or hops
+    starts from this set — the least/greatest + GROUP BY canonicalization
+    the SQL oracles perform."""
+    return (edges.select(F.least(F.col(src), F.col(dst)).alias("a"),
+                         F.greatest(F.col(src), F.col(dst)).alias("b"))
+            .filter(F.col("a") != F.col("b"))
+            .distinct())
+
+
 def connected_components(edges: DataFrame, src: str = "id_l",
-                         dst: str = "id_r", max_iter: int = 25,
-                         storage_level=None) -> DataFrame:
+                         dst: str = "id_r", max_iter: int = 25) -> DataFrame:
     """(vertex, component) — component = MIN vertex id reachable via edges.
 
     ``edges`` is undirected input (each pair listed once, either order).
     Isolated vertices don't appear (join-derived graphs have none).
-    ``storage_level`` overrides the per-round checkpoint storage (pass
-    ``StorageLevel.MEMORY_AND_DISK`` — serialized + spillable — when the
-    edge table is fact-sized; the §1n-b house rule).
-    Raises if ``max_iter`` rounds don't reach the fixpoint — raise the
-    cap or switch to star-contraction.
+    Raises if ``max_iter`` rounds don't reach the fixpoint — raise the cap.
 
     One Spark job per round: the round's changed-label count is an
     ``Observation`` on its ``localCheckpoint``, not a second action. Do
@@ -82,13 +87,12 @@ def connected_components(edges: DataFrame, src: str = "id_l",
     the generated-class cache.
     """
     global LAST_CC_ROUNDS
-    sym = _symmetrize(edges, src, dst).localCheckpoint(
-        storageLevel=storage_level)
+    sym = _symmetrize(edges, src, dst).localCheckpoint()
     # seed fused with round 1: label = min(self, neighbors) straight from
     # the edge list — one aggregation, no join
     labels = (sym.groupBy(F.col("a").alias("v"))
               .agg(F.least(F.min("b"), F.min("a")).alias("label"))
-              .localCheckpoint(storageLevel=storage_level))
+              .localCheckpoint())
     def _round(lbl: DataFrame) -> DataFrame:
         """One propagate+jump round: label <- min(label, neighbor
         labels), then the pointer-jumping shortcut label <-
@@ -118,116 +122,22 @@ def connected_components(edges: DataFrame, src: str = "id_l",
                   .observe(obs, F.count_if(F.col("label") != F.col("_old"))
                            .alias("changed"))
                   .select("v", "label")
-                  .localCheckpoint(storageLevel=storage_level))
+                  .localCheckpoint())
         if obs.get["changed"] == 0:
             LAST_CC_ROUNDS = it + 1
             return labels.select(F.col("v").alias("vertex"),
                                  F.col("label").alias("component"))
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds; "
-        "graph diameter exceeds the cap — raise max_iter or use "
-        "star-contraction for long-chain graphs")
-
-
-def _large_star(e: DataFrame) -> DataFrame:
-    """One large-star round (Kiveris et al. SOCC'14, Alg. 2): every node
-    connects its STRICTLY LARGER neighbors to its minimum neighborhood
-    member (including itself)."""
-    sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    mins = (sym.groupBy("a").agg(F.min("b").alias("_mnb"))
-            .select("a", F.least(F.col("_mnb"), F.col("a")).alias("m")))
-    return (sym.join(mins, on="a")
-            .filter(F.col("b") > F.col("a"))
-            .select(F.col("b").alias("a"), F.col("m").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-            .distinct())
-
-
-def _small_star(e: DataFrame) -> DataFrame:
-    """One small-star round (Alg. 3): edges orient toward the smaller
-    endpoint; every node connects its smaller-or-equal neighbors AND
-    itself to the minimum of that set."""
-    oriented = e.select(F.greatest("a", "b").alias("a"),
-                        F.least("a", "b").alias("b"))
-    mins = oriented.groupBy("a").agg(F.min("b").alias("m"))
-    joined = oriented.join(mins, on="a")
-    children = joined.select(F.col("b").alias("a"), F.col("m").alias("b"))
-    selfs = mins.select(F.col("a"), F.col("m").alias("b"))
-    return (children.union(selfs)
-            .filter(F.col("a") != F.col("b"))
-            .distinct())
-
-
-def connected_components_star(edges: DataFrame, src: str = "id_l",
-                              dst: str = "id_r",
-                              max_iter: int = 50,
-                              storage_level=None) -> DataFrame:
-    """Alternating large-star / small-star connected components
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SOCC'14) — the billion-edge-scale alternative to
-    :func:`connected_components`.
-
-    Same contract: (vertex, component = MIN reachable id), isolated
-    vertices absent. The structural difference is WHAT iterates: label
-    propagation re-joins the full immutable edge table every round,
-    while star contraction REWRITES the edge set, which provably
-    shrinks toward one star per component in O(log² n) rounds — so
-    per-round shuffle volume decays with the graph instead of staying
-    at |E|. Prefer it when the edge table is too large to re-shuffle
-    per round or components have long chains; on small near-dup graphs
-    the fixed per-round latency of its two aggregations makes the
-    label-propagation loop faster.
-
-    Convergence = the small-star edge set reaches a fixpoint (compared
-    via exceptAll — order-insensitive multiset equality, second
-    direction only consulted when the first finds nothing).
-    """
-    global LAST_CC_ROUNDS
-    raw = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    e = (raw.filter(F.col("a") != F.col("b"))
-         .distinct()
-         .localCheckpoint(storageLevel=storage_level))
-    for it in range(max_iter):
-        e2 = _small_star(_large_star(e)).localCheckpoint(
-            storageLevel=storage_level)
-        # short-circuit: on non-final rounds the first direction already
-        # proves inequality — don't pay the second full co-group shuffle.
-        # isEmpty, not a limit-then-count: its plan hits the class cache
-        # (see connected_components).
-        same = e2.exceptAll(e).isEmpty() and e.exceptAll(e2).isEmpty()
-        e = e2
-        if same:
-            LAST_CC_ROUNDS = it + 1
-            # fixpoint: every edge is (child, root); roots label themselves
-            roots = e.select(F.col("b").alias("vertex"),
-                             F.col("b").alias("component")).distinct()
-            children = e.select(F.col("a").alias("vertex"),
-                                F.col("b").alias("component"))
-            labeled = children.union(roots)
-            # contract parity with connected_components: a vertex whose
-            # only edges are self-loops never enters the a!=b edge set —
-            # emit it as its own singleton component.
-            loop_only = (raw.filter(F.col("a") == F.col("b"))
-                         .select(F.col("a").alias("vertex"))
-                         .join(labeled.select("vertex"), on="vertex",
-                               how="left_anti")
-                         .select("vertex", F.col("vertex").alias("component")))
-            return labeled.union(loop_only).distinct()
-    raise RuntimeError(
-        f"connected_components_star did not converge in {max_iter} rounds")
+        "graph diameter exceeds the cap — raise max_iter")
 
 
 def dedup_clusters(pairs: DataFrame, src: str = "id_l",
-                   dst: str = "id_r", max_iter: int = 25,
-                   cc_fn=None) -> DataFrame:
+                   dst: str = "id_r", max_iter: int = 25) -> DataFrame:
     """Near-duplicate clusters from a candidate-pair table:
     (cluster_id = min doc id, doc_id, cluster_size). The keep-policy
-    "retain cluster_id, drop the rest" is then a single filter.
-
-    ``cc_fn`` selects the connected-components engine (default label
-    propagation; pass :func:`connected_components_star` for the
-    edge-rewriting variant) — one cluster contract, two CC algorithms."""
-    cc = (cc_fn or connected_components)(pairs, src, dst, max_iter)
+    "retain cluster_id, drop the rest" is then a single filter."""
+    cc = connected_components(pairs, src, dst, max_iter)
     w_size = cc.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (cc.join(w_size, on="component")
             .select(F.col("component").alias("cluster_id"),
@@ -396,15 +306,12 @@ def adamic_adar(edges: DataFrame, src: str = "id_l",
     corpus in 38 s (24.3k predictions), build-dominated like every
     pair-graph op. Returns ``(id_l, id_r, n_common, aa_score)``.
 
-    Input hygiene: the symmetrized edge list is self-loop-filtered
-    and DEDUPLICATED here (one ids-only distinct, cheap next to the
+    Input hygiene: the edge list is canonicalized first
+    (:func:`_canonical_edges`, one ids-only distinct, cheap next to the
     wedge join) so duplicate or both-orientation input edges cannot
-    inflate ``deg`` / wedge counts — the operator matches the
-    least/greatest+GROUP BY canonicalization a SQL oracle performs
-    regardless of how raw the caller's edge list is."""
-    sym = (_symmetrize(edges, src, dst)
-           .filter(F.col("a") != F.col("b"))
-           .distinct())
+    inflate ``deg`` / wedge counts, however raw the caller's edge list
+    is."""
+    sym = _symmetrize(_canonical_edges(edges, src, dst), "a", "b")
     sym = sym.localCheckpoint()
     deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
     # wedges u - z - v with u < v; z carries its degree
@@ -430,8 +337,7 @@ def adamic_adar(edges: DataFrame, src: str = "id_l",
 
 
 def triangle_stats(edges: DataFrame, src: str = "id_l",
-                   dst: str = "id_r",
-                   orientation: str = "id") -> DataFrame:
+                   dst: str = "id_r") -> DataFrame:
     """Per-vertex triangle count and local clustering coefficient over
     an undirected pair graph — the cluster-cohesion diagnostic for
     near-dup neighborhoods (a high-coefficient vertex sits in a
@@ -442,74 +348,29 @@ def triangle_stats(edges: DataFrame, src: str = "id_l",
     wedge apex (a→b, a→c with b < c), close the wedge against the
     oriented edge (b, c). Each triangle is counted exactly once (its
     lowest vertex is the apex). This is the classic MapReduce triangle
-    enumeration (Suri & Vassilvitskii, WWW'11). ``orientation="degree"``
-    selects their degree-based variant: every edge points toward the
-    (degree, id)-LARGER endpoint, so each triangle's apex is its
-    minimum-degree vertex and a vertex's wedge fan-out is bounded by
-    its OUT-degree ≤ O(√m) amortized — the guard against power-law
-    hubs whose C(deg, 2) wedges dominate the id-oriented join. Both
-    orientations enumerate the identical triangle set (property-tested)
-    and the output contract is orientation-independent; id-order stays
-    the default because it is the form the SQL oracles replay and the
-    gate graphs are hub-free. The 10× minhash candidate graph is the
-    measured switch point (SCALE.md §1j): its near-dup clone CLIQUES
-    are irreducible (all degrees equal — orientation cannot shrink a
-    clique's wedge set), but the hub tail is where "degree" wins on
-    real power-law graphs.
+    enumeration (Suri & Vassilvitskii, WWW'11), in the id order the SQL
+    oracles replay. Their degree orientation bounds a power-law hub's
+    wedge fan-out; it won 2× only on the 10× minhash clique graph (SCALE
+    §1j), the gate graphs are hub-free, and it was deleted (last in
+    commit ``19a35ce``).
 
     Returns ``(vertex, degree, triangles, coeff)`` for every vertex,
     ``coeff = triangles / C(degree, 2)`` (0.0 where degree < 2),
     rounded to 6 dp.
     """
-    if orientation not in ("id", "degree"):
-        raise ValueError(f"orientation must be 'id' or 'degree', "
-                         f"got {orientation!r}")
-    e = (edges.select(F.least(F.col(src), F.col(dst)).alias("a"),
-                      F.greatest(F.col(src), F.col(dst)).alias("b"))
-         .filter(F.col("a") != F.col("b"))
-         .distinct()
-         .localCheckpoint())  # wedge join + closure reuse it 3x
+    # wedge join + closure reuse it 3x
+    e = _canonical_edges(edges, src, dst).localCheckpoint()
     deg = (e.select(F.col("a").alias("v"))
            .union(e.select(F.col("b").alias("v")))
            .groupBy("v").agg(F.count(F.lit(1)).alias("degree")))
-    if orientation == "degree":
-        # re-orient a→b by the (degree, id) total order; wedges then
-        # compare endpoint KEYS, not ids, so attach each endpoint's key
-        # struct references the SOURCE column v, not the sibling alias —
-        # no dependency on implicit lateral column alias resolution
-        # (Spark >=3.4 only, and off under
-        # spark.sql.lateralColumnAlias.enableImplicitResolution=false)
-        da = deg.select(F.col("v").alias("a"),
-                        F.struct(F.col("degree"), F.col("v"))
-                        .alias("ka"))
-        db = deg.select(F.col("v").alias("b"),
-                        F.struct(F.col("degree"), F.col("v"))
-                        .alias("kb"))
-        ek = e.join(da, on="a").join(db, on="b")
-        e = (ek.select(
-                F.when(F.col("ka") < F.col("kb"), F.col("a"))
-                 .otherwise(F.col("b")).alias("a"),
-                F.when(F.col("ka") < F.col("kb"), F.col("b"))
-                 .otherwise(F.col("a")).alias("b"),
-                F.greatest("ka", "kb").alias("kb"))
-             .localCheckpoint())
-        x, y = e.alias("x"), e.alias("y")
-        wedges = (x.join(y, (F.col("x.a") == F.col("y.a"))
-                         & (F.col("x.kb") < F.col("y.kb")))
-                  .select(F.col("x.a").alias("a"), F.col("x.b").alias("b"),
-                          F.col("y.b").alias("c")))
-        tris = wedges.join(
-            e.select(F.col("a").alias("b"), F.col("b").alias("c")),
-            on=["b", "c"])
-    else:
-        x, y = e.alias("x"), e.alias("y")
-        wedges = (x.join(y, (F.col("x.a") == F.col("y.a"))
-                         & (F.col("x.b") < F.col("y.b")))
-                  .select(F.col("x.a").alias("a"), F.col("x.b").alias("b"),
-                          F.col("y.b").alias("c")))
-        tris = wedges.join(
-            e.select(F.col("a").alias("b"), F.col("b").alias("c")),
-            on=["b", "c"])
+    x, y = e.alias("x"), e.alias("y")
+    wedges = (x.join(y, (F.col("x.a") == F.col("y.a"))
+                     & (F.col("x.b") < F.col("y.b")))
+              .select(F.col("x.a").alias("a"), F.col("x.b").alias("b"),
+                      F.col("y.b").alias("c")))
+    tris = wedges.join(
+        e.select(F.col("a").alias("b"), F.col("b").alias("c")),
+        on=["b", "c"])
     per_v = (tris.select(F.explode(F.array("a", "b", "c")).alias("v"))
              .groupBy("v").agg(F.count(F.lit(1)).alias("triangles")))
     possible = (F.col("degree") * (F.col("degree") - 1) / F.lit(2.0))
@@ -525,16 +386,10 @@ def triangle_stats(edges: DataFrame, src: str = "id_l",
 
 def degrees(edges: DataFrame, src: str = "id_l",
             dst: str = "id_r") -> DataFrame:
-    """(vertex, degree) over the DEDUPED undirected edge set.
-
-    Banded candidate generators (MinHash/SimHash) emit one row per
-    colliding band, so the same pair can appear several times; edges are
-    canonicalized to (min,max) and distinct-ed first, exactly like the
-    triangle census. One shuffle on the canonical pair, one on vertex.
-    """
-    e = (edges.select(F.least(src, dst).alias("a"),
-                      F.greatest(src, dst).alias("b"))
-         .filter(F.col("a") != F.col("b")).distinct())
+    """(vertex, degree) over the DEDUPED undirected edge set
+    (:func:`_canonical_edges`). One shuffle on the canonical pair, one
+    on vertex."""
+    e = _canonical_edges(edges, src, dst)
     # both endpoints from ONE scan of the deduped edge set (the
     # _symmetrize rationale: a unionAll branch pair re-runs the
     # post-shuffle dedup aggregation twice)
@@ -562,9 +417,7 @@ def multi_source_bfs(edges: DataFrame, seeds: DataFrame,
     ``seeds`` must have a ``vertex`` column; seeds not present in the
     graph still appear at hop 0.
     """
-    e = (edges.select(F.least(src, dst).alias("a"),
-                      F.greatest(src, dst).alias("b"))
-         .filter(F.col("a") != F.col("b")).distinct())
+    e = _canonical_edges(edges, src, dst)
     sym = _symmetrize(e, "a", "b").localCheckpoint()
     dist = (seeds.select(F.col("vertex"), F.lit(0).alias("hop"))
             .distinct().localCheckpoint())
@@ -597,9 +450,7 @@ def kcore(edges: DataFrame, k: int = 3, rounds: int = 5,
     ``localCheckpoint`` lineage cut (the :func:`connected_components`
     discipline); per-round traffic is ids only, never payloads.
     """
-    e = (edges.select(F.least(src, dst).alias("a"),
-                      F.greatest(src, dst).alias("b"))
-         .filter(F.col("a") != F.col("b")).distinct().localCheckpoint())
+    e = _canonical_edges(edges, src, dst).localCheckpoint()
     for _ in range(rounds):
         deg = (e.select(F.explode(F.array("a", "b")).alias("vertex"))
                .groupBy("vertex").agg(F.count(F.lit(1)).alias("degree")))

@@ -18,6 +18,12 @@ keeping every per-word rewrite distributed and engine-portable:
   unrolls the same loop), so the whole training run has a full value
   oracle.
 
+This is the one BPE trainer; it assumes nothing about vocabulary size on
+the driver. A driver-local twin with an incremental pair index paid off
+only at merge depths no query runs (SCALE.md §1j: 2,000 merges on a
+synthetic 50k-word vocabulary; both BPE queries learn 5) and was deleted
+(last in commit ``19a35ce``).
+
 Simplifications vs production BPE, documented: no end-of-word marker
 and character-level initial symbols (byte-level init and special-token
 handling change the alphabet, not the algorithm). Ties break on
@@ -158,98 +164,3 @@ def bpe_apply(syms: Column, merges: list[tuple[str, str]]) -> Column:
     for left, right in merges:
         out = merge_fold(out, left, right)
     return out
-
-
-def bpe_learn_merges_local(docs: DataFrame, n_merges: int = 500,
-                           text_col: str = "text",
-                           max_vocab: int = 1_000_000,
-                           min_count: int = 1) -> DataFrame:
-    """Deep-merge BPE training: distributed vocab collapse, DRIVER-LOCAL
-    merge loop — the architecture every production tokenizer trainer
-    uses (HuggingFace/SentencePiece collect the word-count table too),
-    and the answer to the 2-Spark-jobs-per-merge ceiling of
-    :func:`bpe_learn_merges` at realistic merge depths (32k-vocab
-    tokenizers run tens of thousands of merges; round-trip latency per
-    merge would dominate a cluster's actual work).
-
-    The corpus-sized work — the (word, count) collapse — stays a
-    distributed map-side-combined aggregation; what crosses the driver
-    boundary is the BOUNDED vocabulary artifact (``max_vocab`` rows by
-    (count DESC, word), ``min_count`` frequency floor — the standard
-    disclosed caps; even 100 TB of web text holds ~10⁸ distinct words,
-    and the frequency floor prunes the hapax tail that can never win a
-    merge against real pairs). The local loop keeps an inverted
-    pair → word-id index and updates pair counts incrementally, so the
-    per-merge cost is proportional to the AFFECTED words only — the
-    classic trainer datastructure, thousands of merges per second.
-
-    Semantics are IDENTICAL to :func:`bpe_learn_merges` (same
-    left-to-right non-overlapping fold, same (count DESC, lhs, rhs)
-    tiebreak — property-tested equal at shared depths); the unrolled
-    recursive-CTE oracle rides the distributed form, this one extends
-    its reach.
-    """
-    spark = docs.sparkSession
-    vocab_rows = (word_vocab(docs, text_col)
-                  .filter(F.col("wn") >= min_count)
-                  .orderBy(F.col("wn").desc(), "word")
-                  .limit(max_vocab)
-                  .select("word", "wn").collect())
-
-    words: list[list[str]] = [list(r["word"]) for r in vocab_rows]
-    wns: list[int] = [int(r["wn"]) for r in vocab_rows]
-
-    def word_pairs(syms: list[str]) -> dict:
-        d: dict = {}
-        for a, b in zip(syms, syms[1:]):
-            d[(a, b)] = d.get((a, b), 0) + 1
-        return d
-
-    counts: dict = {}
-    index: dict = {}
-    for wi, syms in enumerate(words):
-        for p, c in word_pairs(syms).items():
-            counts[p] = counts.get(p, 0) + c * wns[wi]
-            index.setdefault(p, set()).add(wi)
-
-    def fold(syms: list[str], left: str, right: str) -> list[str]:
-        # mirror merge_fold exactly: left-to-right, non-overlapping
-        acc: list[str] = []
-        for x in syms:
-            if acc and acc[-1] == left and x == right:
-                acc[-1] = left + right
-            else:
-                acc.append(x)
-        return acc
-
-    merges: list[tuple[int, str, str, str, int]] = []
-    for k in range(n_merges):
-        best = None
-        for p, c in counts.items():
-            if c <= 0:
-                continue
-            key = (-c, p[0], p[1])
-            if best is None or key < best[0]:
-                best = (key, p, c)
-        if best is None:
-            break
-        (_, (l, r), n) = best
-        merges.append((k + 1, l, r, l + r, int(n)))
-        for wi in sorted(index.get((l, r), ())):
-            syms = words[wi]
-            old = word_pairs(syms)
-            new_syms = fold(syms, l, r)
-            new = word_pairs(new_syms)
-            for p in old.keys() | new.keys():
-                delta = new.get(p, 0) - old.get(p, 0)
-                if delta:
-                    counts[p] = counts.get(p, 0) + delta * wns[wi]
-                if new.get(p, 0) > 0:
-                    index.setdefault(p, set()).add(wi)
-                elif p in index:
-                    index[p].discard(wi)
-            words[wi] = new_syms
-        index.pop((l, r), None)
-        counts.pop((l, r), None)
-    return spark.createDataFrame(
-        merges, "rank int, lhs string, rhs string, merged string, n bigint")

@@ -1,6 +1,6 @@
 """Profile registry queries layer by layer: one JSON file per query.
 
-Usage: python tools/profile.py <round>/<tag> [-n TRIALS] [sf_dir] q1 q2 ...
+Usage: python tools/query_profile.py <round>/<tag> [-n TRIALS] [sf_dir] q1 q2 ...
        (e.g. r14/base; sf_dir defaults to the sf0.1 test corpus; 3 trials)
 
 Run from the repository root; it writes ``profiles/<round>/<q>_<tag>.json``.
@@ -28,11 +28,7 @@ import re
 import sys
 import time
 
-# Run as a script, sys.path[0] is tools/, where this file would shadow the
-# standard library's ``profile`` that cProfile, and so pyspark, imports.
-HERE = os.path.dirname(os.path.abspath(__file__))
-sys.path[:] = [p for p in sys.path if os.path.abspath(p or ".") != HERE]
-sys.path.insert(0, os.path.dirname(HERE))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry_mod  # noqa: E402
 from perfbench.probes import HostSample, SparkCounters, Tracer, aggregate  # noqa: E402
@@ -179,7 +175,7 @@ def profile_query(spark, counters, tracer, name: str, builder, sf_dir: str,
 
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(
-        usage="profile.py <round>/<tag> [-n TRIALS] [sf_dir] q1 q2 ...",
+        usage="query_profile.py <round>/<tag> [-n TRIALS] [sf_dir] q1 q2 ...",
         description=__doc__.split("\n")[0])
     p.add_argument("out", metavar="<round>/<tag>")
     p.add_argument("-n", dest="trials", type=int, default=3)
