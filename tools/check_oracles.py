@@ -86,15 +86,18 @@ def main() -> int:
             print(f"FAIL {name}: spark error: {str(e)[:300]}")
             n_fail += 1
             continue
+        t_spark = time.time() - t0
         if name not in oracles:
-            print(f"ROWS-ONLY {name}: {len(sdf)} rows ({time.time()-t0:.1f}s)")
+            print(f"ROWS-ONLY {name}: {len(sdf)} rows (spark {t_spark:.1f}s)")
             continue
+        t0 = time.time()
         try:
             odf = norm(con.execute(oracles[name]).fetchdf())
         except Exception as e:  # noqa: BLE001
             print(f"FAIL {name}: duckdb error: {str(e)[:300]}")
             n_fail += 1
             continue
+        times = f"spark {t_spark:.1f}s, duckdb {time.time() - t0:.1f}s"
         problems = []
         if len(sdf) != len(odf):
             problems.append(f"rows {len(sdf)} vs {len(odf)}")
@@ -104,7 +107,7 @@ def main() -> int:
             problems.append("value-hash mismatch")
         if problems:
             n_fail += 1
-            print(f"FAIL {name}: {'; '.join(problems)} ({time.time()-t0:.1f}s)")
+            print(f"FAIL {name}: {'; '.join(problems)} ({times})")
             if "value-hash mismatch" in problems and not sdf.empty:
                 cols = sorted(sdf.columns)
                 kinds = {c: (str(sdf[c].dtype), str(odf[c].dtype))
@@ -122,7 +125,7 @@ def main() -> int:
                             break
         else:
             n_pass += 1
-            print(f"PASS {name}: {len(sdf)} rows ({time.time()-t0:.1f}s)")
+            print(f"PASS {name}: {len(sdf)} rows ({times})")
     print(f"\n{n_pass} passed, {n_fail} failed")
     return 1 if n_fail else 0
 
